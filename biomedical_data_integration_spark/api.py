@@ -33,6 +33,7 @@ from biomedical_data_integration_spark.plans.spec import (  # noqa: F401 (re-exp
     materialize_mapping,
     merge_mappings,
 )
+from biomedical_data_integration_spark.session import local_frame
 from biomedical_data_integration_spark.sources.standards import Standard, get_standard
 
 
@@ -65,7 +66,7 @@ def match_schema(
     matcher = get_schema_matcher(method, **(method_args or {}))
     scores = matcher.scores(source, target_df)
     assignment = one_to_one_assignment(scores, source.columns)
-    return spark.createDataFrame(assignment, "source string, target string")
+    return local_frame(spark, assignment, "source string, target string")
 
 
 def top_matches(
@@ -298,11 +299,7 @@ def preview_domain(
         rows = list(zip(m["value_names"], m["value_descriptions"]))
         if limit is not None:
             rows = rows[:limit]  # api.py:536-538
-        df = spark.createDataFrame(
-            rows or [], "value_name string, value_description string"
-        ) if rows else spark.createDataFrame(
-            [], "value_name string, value_description string"
-        )
+        df = local_frame(spark, rows, "value_name string, value_description string")
         return df.withColumn("column_description", F.lit(m["description"]))
     # DataFrame branch: distinct values (api.py:528)
     out = (

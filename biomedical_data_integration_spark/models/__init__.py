@@ -31,6 +31,7 @@ from biomedical_data_integration_spark.functions.strings import (
     char_ngrams,
     clean_string,
 )
+from biomedical_data_integration_spark.session import local_frame
 
 _HEX = "0123456789abcdef"
 
@@ -447,7 +448,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
         ranked = ranked or [("", 0)]
         spark = df.sparkSession
         order_df = F.broadcast(
-            spark.createDataFrame(ranked, ["__rh", "__rank"])
+            local_frame(spark, ranked, ["__rh", "__rank"])
         )
         picked = long_rows.join(order_df, "__rh")
         first = picked.groupBy("column_name", "value").agg(
@@ -513,7 +514,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
         )
         # columns that are entirely null never appear in long_df; re-add
         spark = df.sparkSession
-        all_cols = spark.createDataFrame([(c,) for c in cols], ["column_name"])
+        all_cols = local_frame(spark, [(c,) for c in cols], ["column_name"])
         return all_cols.join(serialized, "column_name", "left").select(
             "column_name",
             F.coalesce("serialized", F.col("column_name")).alias("serialized"),
@@ -558,7 +559,8 @@ class HashingColumnEmbedder(ColumnEmbedder):
         )
         # all-null columns never appear in the long form; re-add per side
         spark = source.sparkSession
-        all_cols = spark.createDataFrame(
+        all_cols = local_frame(
+            spark,
             [("s", c) for c in source.columns] + [("t", c) for c in target.columns],
             ["side", "column_name"],
         )

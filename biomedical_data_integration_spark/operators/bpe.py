@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import char_ngrams
+from ..session import local_frame
 from .text import tokens_expr
 
 # The driver-side merge loop holds (word, count, symbol list) for the
@@ -418,8 +419,8 @@ def encode_unigram_join(
         )
     if not isinstance(pieces, DataFrame):
         vals = [p if isinstance(p, str) else p[0] for p in pieces]
-        pieces = df.sparkSession.createDataFrame(
-            [(p,) for p in vals], "piece string"
+        pieces = local_frame(
+            df.sparkSession, [(p,) for p in vals], "piece string"
         )
     words = df.select(
         F.explode(tokens_expr(F.col(text_col))).alias("word")
@@ -559,8 +560,8 @@ def train_unigram(
         # kernel (segment_words_join), bit-equal by construction
         kern = kernel or _seg_kernel(len(pieces))
         if kern == "join":
-            pieces_df = wc.sparkSession.createDataFrame(
-                [(p,) for p in pieces], "piece string"
+            pieces_df = local_frame(
+                wc.sparkSession, [(p,) for p in pieces], "piece string"
             )
             seg_rows = (
                 segment_words_join(
@@ -610,13 +611,12 @@ def save_merges(
     from without retraining. Rank IS the model (greedy encode applies
     merges lowest-rank-first); :func:`load_merges` restores the exact
     ordered list."""
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [(int(i), str(a), str(b)) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     )
-    # repartition(1), not coalesce(1) — the sequential-worker-startup
-    # stall on python-list local relations (see sources/writers.py)
-    mdf.repartition(1).write.mode(mode).parquet(path)
+    mdf.coalesce(1).write.mode(mode).parquet(path)
     spark.catalog.refreshByPath(path)
 
 
@@ -659,13 +659,12 @@ def save_vocab(
     rounds. Integer counts round-trip exactly; :func:`load_vocab`
     restores the exact (n_uses desc, piece asc) order the trainer
     emitted."""
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [(str(p), int(n)) for p, n in usage],
         "piece string, n_uses bigint",
     )
-    # repartition(1), not coalesce(1) — the sequential-worker-startup
-    # stall on python-list local relations (see sources/writers.py)
-    mdf.repartition(1).write.mode(mode).parquet(path)
+    mdf.coalesce(1).write.mode(mode).parquet(path)
     spark.catalog.refreshByPath(path)
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.vectors import dot, norm
+from biomedical_data_integration_spark.session import local_frame
 
 
 def _sq_dist(vec: Column, centroid: Sequence[float]) -> Column:
@@ -123,7 +124,8 @@ def _with_assignment(
         kernel = planning.centroid_assign_kernel(len(centroids))
     if kernel == "literal":
         return df.withColumn(out, _assign_expr(F.col(vec_col), centroids, scale))
-    cents = df.sparkSession.createDataFrame(
+    cents = local_frame(
+        df.sparkSession,
         [([(i, [float(x) for x in c]) for i, c in enumerate(centroids)],)],
         "__cents array<struct<cluster:int,cvec:array<double>>>",
     )
@@ -1366,7 +1368,8 @@ def pca_top_component(
     l2 = math.sqrt(float(den))
     q6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, q6(v[i] / l2), q6(eig)) for i in range(dim)],
         "idx int, loading double, eigenvalue double",
     )

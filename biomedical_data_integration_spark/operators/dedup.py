@@ -30,6 +30,7 @@ from biomedical_data_integration_spark import config, planning
 from biomedical_data_integration_spark.functions.hashing import hex_nibble
 from biomedical_data_integration_spark.functions.strings import word_ngrams
 from biomedical_data_integration_spark.functions.vectors import cosine
+from biomedical_data_integration_spark.session import local_frame
 
 
 def _tokens(text: Column) -> Column:
@@ -839,7 +840,7 @@ def duplicate_clusters(
                 T.StructField("cluster_id", id_type),
             ]
         )
-        return spark.createDataFrame(labels, schema)
+        return local_frame(spark, labels, schema)
 
     converged = False
     for _ in range(max_iterations):
@@ -1035,8 +1036,8 @@ def bloom_decontaminate(
     # array per row — measured ~14 s on a 4.5k-doc filter; as a broadcast
     # column the array is materialized once (1.5 s, and flat to 8x docs)
     spark = train.sparkSession
-    aux = spark.createDataFrame(
-        [(bitset, masks)], "__bloom array<bigint>, __masks array<bigint>"
+    aux = local_frame(
+        spark, [(bitset, masks)], "__bloom array<bigint>, __masks array<bigint>"
     )
 
     def is_set(p: Column) -> Column:

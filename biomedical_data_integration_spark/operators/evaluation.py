@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import local_frame
+
 
 def binary_auc(
     df: DataFrame,
@@ -412,8 +414,8 @@ def threshold_sweep(
     # empty bins table must still produce one zero-count row per
     # threshold (grid and counts are both threshold-sized; the join is
     # driver-trivial and broadcast either way)
-    grid_df = df.sparkSession.createDataFrame(
-        [(ti,) for ti in sorted(t_ints)], "__t bigint"
+    grid_df = local_frame(
+        df.sparkSession, [(ti,) for ti in sorted(t_ints)], "__t bigint"
     )
     agg = grid_df.join(F.broadcast(counts), "__t", "left").select(
         "__t",
@@ -1232,7 +1234,8 @@ def srm_readout(counts: DataFrame, expected: dict) -> DataFrame:
     # traffic is the worst sample-ratio mismatch and must contribute its
     # full (0 - n·share)²/(n·share) term — without the seed it would
     # contribute nothing while df still assumed len(expected) variants.
-    seed = counts.sparkSession.createDataFrame(
+    seed = local_frame(
+        counts.sparkSession,
         [(str(k), 0) for k in sorted(expected, key=str)],
         "variant string, n_obs bigint",
     )

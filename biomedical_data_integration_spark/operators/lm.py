@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .graph import token_adjacency_edges
 
 DEFAULT_DISCOUNT = 0.75
@@ -79,11 +80,9 @@ def train_bigram_lm(
     if t_types == 0:
         spark = df.sparkSession
         return {
-            "bigram": spark.createDataFrame(
-                [], "w1 string, w2 string, logp double"
-            ),
-            "backoff": spark.createDataFrame([], "w1 string, loglam double"),
-            "cont": spark.createDataFrame([], "w2 string, logcont double"),
+            "bigram": local_frame(spark, [], "w1 string, w2 string, logp double"),
+            "backoff": local_frame(spark, [], "w1 string, loglam double"),
+            "cont": local_frame(spark, [], "w2 string, logcont double"),
         }
     D = float(discount)
     lam = F.lit(D) * F.col("n1fwd") / F.col("ctot")
@@ -216,7 +215,8 @@ def collocations(
     )
     n_total = bg.agg(F.sum("weight")).collect()[0][0]
     if not n_total:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [], "w1 string, w2 string, n12 bigint, pmi double, npmi double"
         )
     c1 = bg.groupBy(F.col("src").alias("w1")).agg(

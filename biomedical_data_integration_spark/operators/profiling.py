@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import config
+from biomedical_data_integration_spark.session import local_frame
 
 
 def profile_table(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
@@ -105,7 +106,8 @@ def detect_schema_drift(
             typed.append(c)
 
     shared_str = [c for c in typed if old_types[c] == "string"]
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         structural + [(c, None, old_types[c], new_types[c]) for c in typed],
         "column string, status string, old_type string, new_type string",
     )
@@ -1374,7 +1376,8 @@ def benford_audit(df: DataFrame, col: str) -> DataFrame:
     import math
 
     spark = df.sparkSession
-    expected = spark.createDataFrame(
+    expected = local_frame(
+        spark,
         [(d, math.log10(1.0 + 1.0 / d)) for d in range(1, 10)],
         "digit int, expected double",
     )

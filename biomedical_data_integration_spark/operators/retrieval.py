@@ -36,6 +36,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import local_frame
+
 BM25_K1 = 1.2
 BM25_B = 0.75
 RRF_K0 = 60
@@ -108,7 +110,7 @@ def bm25_search(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    qterms = spark.createDataFrame([(t,) for t in terms], "term string")
+    qterms = local_frame(spark, [(t,) for t in terms], "term string")
     hits = postings.join(F.broadcast(qterms), "term").crossJoin(
         F.broadcast(stats)
     )
@@ -382,16 +384,15 @@ def bm25_append_index(
     )
     n = int(srow["n_docs"]) + int(new["n"] or 0)
     s = int(srow["sum_dl"]) + int(new["s"] or 0)
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [(n, s, float(s) / n if n else 0.0, nb)],
         "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
     )
-    # repartition(1), not coalesce(1) — the sequential-worker-startup
-    # stall on python-list local relations (see sources/writers.py).
     # Written ASIDE then atomically renamed over stats/ — never an
     # in-place overwrite of a served sidecar; marker removed LAST, the
     # append's completion marker.
-    stats.repartition(1).write.mode("overwrite").parquet(f"{path}/stats.new")
+    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats.new")
     replace_dir_atomically(spark, f"{path}/stats.new", f"{path}/stats")
     remove_marker(spark, pending)
 
@@ -485,7 +486,7 @@ def bm25_delete_ids(spark, path: str, ids) -> dict:
             "— rebuild once with bm25_save_index"
         )
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], ["__del_id"])
+        ids = local_frame(spark, [(i,) for i in ids], ["__del_id"])
     else:
         ids = ids.select(F.col(ids.columns[0]).alias("__del_id"))
     ids = ids.distinct()
@@ -525,13 +526,12 @@ def bm25_delete_ids(spark, path: str, ids) -> dict:
     )
     n = int(srow["n_docs"]) - n_removed
     s = int(srow["sum_dl"]) - int(agg["s"])
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [(n, s, float(s) / n if n else 0.0, int(srow["n_buckets"]))],
         "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
     )
-    stats.repartition(1).write.mode("overwrite").parquet(
-        f"{path}/stats.new"
-    )
+    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats.new")
     replace_dir_atomically(spark, f"{path}/stats.new", f"{path}/stats")
     remove_marker(spark, pending)
     return {"n_docs_removed": n_removed, "buckets_rewritten": affected}
@@ -585,7 +585,7 @@ def bm25_search_persisted(
     n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"])
     nb = int(srow["n_buckets"])
     buckets = sorted({_bm25_term_bucket(t, nb) for t in terms})
-    qterms = spark.createDataFrame([(t,) for t in terms], "term string")
+    qterms = local_frame(spark, [(t,) for t in terms], "term string")
     hits = (
         spark.read.parquet(f"{path}/postings")
         .where(F.col("bucket").isin(buckets))

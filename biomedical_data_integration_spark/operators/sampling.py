@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark.functions.hashing import md5_hex
+from biomedical_data_integration_spark.session import local_frame
 
 _DIGITS = 12  # 16^12 granularity: fraction resolution ~6e-16..2e-13
 
@@ -730,7 +731,8 @@ def max_coverage_select(
         selected.append(best[0]["id"])
         out_rows.append((rank, best[0]["id"], int(best[0]["gain"]), covered_total))
     id_t = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         schema=f"rank int, {id_col} {id_t}, gain bigint, covered_total bigint",
     )

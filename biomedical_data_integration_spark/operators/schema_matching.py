@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Tuple, Union
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,6 +48,7 @@ from biomedical_data_integration_spark.operators.value_matching import (
     TfIdfValueMatcher,
     match_values_pipeline,
 )
+from biomedical_data_integration_spark.session import local_frame
 
 SCORES_SCHEMA = "source string, target string, similarity double"
 
@@ -64,10 +65,6 @@ def _numeric_columns(df: DataFrame) -> List[str]:
     return [
         f.name for f in df.schema.fields if isinstance(f.dataType, NUMERIC_TYPES)
     ]
-
-
-def _empty_scores(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], SCORES_SCHEMA)
 
 
 def _apply_allowed(scores: DataFrame, allowed_pairs: Optional[DataFrame]) -> DataFrame:
@@ -105,8 +102,8 @@ def _unpivot_strings(df: DataFrame, colname: str, valname: str) -> DataFrame:
         )
     cols = _string_columns(df)
     if not cols:
-        return df.sparkSession.createDataFrame(
-            [], f"{colname} string, {valname} string"
+        return local_frame(
+            df.sparkSession, [], f"{colname} string, {valname} string"
         )
     return (
         df.select([F.col(c).cast("string").alias(c) for c in cols])
@@ -201,7 +198,7 @@ class NameSimilaritySchemaMatcher(BaseSchemaMatcher):
             for (sc, tc), sim in sims.items()
             if sim > 0.0  # pairs sharing no terms produce no row
         ]
-        scores = spark.createDataFrame(rows, SCORES_SCHEMA)
+        scores = local_frame(spark, rows, SCORES_SCHEMA)
         return _apply_allowed(scores, allowed_pairs)
 
 
@@ -419,7 +416,7 @@ class CupidSchemaMatcher(BaseSchemaMatcher):
             for w in (leaf_wsim(sp, tp),)
             if w > 0.0
         ]
-        scores = spark.createDataFrame(rows, SCORES_SCHEMA)
+        scores = local_frame(spark, rows, SCORES_SCHEMA)
         return _apply_allowed(scores, allowed_pairs)
 
 
@@ -529,8 +526,8 @@ class DistributionBasedSchemaMatcher(BaseSchemaMatcher):
         cols = _numeric_columns(df)
         spark = df.sparkSession
         if not cols:
-            return spark.createDataFrame(
-                [], f"{colname} string, qs array<double>"
+            return local_frame(
+                spark, [], f"{colname} string, qs array<double>"
             )
 
         # one scan for every numeric column (unpivot), not one scan per column
@@ -931,7 +928,7 @@ class SimilarityFloodingSchemaMatcher(BaseSchemaMatcher):
             if x.startswith("col:") and y.startswith("col:")
         ]
         return _apply_allowed(
-            spark.createDataFrame(rows, SCORES_SCHEMA), allowed_pairs
+            local_frame(spark, rows, SCORES_SCHEMA), allowed_pairs
         )
 
 
@@ -1014,7 +1011,7 @@ class EmbeddingSchemaMatcher(BaseSchemaMatcher):
                 for sc, vs in s_rows
                 for tc, vt in t_rows
             ]
-            scores = spark.createDataFrame(pairs, SCORES_SCHEMA)
+            scores = local_frame(spark, pairs, SCORES_SCHEMA)
             return _apply_allowed(scores, allowed_pairs)
 
         s = self.embedder.column_embeddings(source).withColumnsRenamed(
@@ -1239,8 +1236,8 @@ class GptSchemaMatcher(BaseSchemaMatcher):
                     (self.top_m - rank) / self.top_m, config.SIMILARITY_SCALE
                 )
                 rows.append((column, cand, sim))
-        scores = spark.createDataFrame(
-            rows, "source string, target string, similarity double"
+        scores = local_frame(
+            spark, rows, "source string, target string, similarity double"
         )
         return _apply_allowed(scores, allowed_pairs)
 

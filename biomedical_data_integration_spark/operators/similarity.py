@@ -36,6 +36,7 @@ from typing import Optional
 from biomedical_data_integration_spark import config, planning
 from biomedical_data_integration_spark.functions.hashing import hex_nibble
 from biomedical_data_integration_spark.functions.vectors import cosine, dot, norm
+from biomedical_data_integration_spark.session import local_frame
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> Optional[int]:
@@ -175,7 +176,8 @@ def ivf_topk(
     """
     if centroids is not None:
         spark = corpus.sparkSession
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cent_id bigint, cent_v array<double>",
         ).select("cent_id", "cent_v", norm(F.col("cent_v")).alias("cent_n"))
@@ -682,21 +684,6 @@ def pq_train(
     return codebooks
 
 
-def _pq_sub_struct(vec_col: str, m: int, dsub: int) -> Column:
-    return F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.struct(
-                s.cast("int").alias("s"),
-                F.transform(
-                    F.slice(F.col(vec_col), s * F.lit(dsub) + 1, dsub),
-                    lambda x: x.cast("double"),
-                ).alias("sv"),
-            ),
-        )
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list,
@@ -1070,15 +1057,13 @@ def ivfpq_save(
     index_df.repartition(F.col("cell")).write.mode(mode).partitionBy(
         "cell"
     ).parquet(f"{path}/index")
-    model = spark.createDataFrame(
+    model = local_frame(
+        spark,
         [(centroids, codebooks)],
         "centroids array<array<double>>, "
         "codebooks array<array<array<double>>>",
     )
-    # repartition(1), not coalesce(1) — the sequential-worker-startup
-    # stall on python-list local relations (see sources/writers.py);
-    # measured 4.4 s -> 0.9 s on the one-row model write
-    model.repartition(1).write.mode(mode).parquet(f"{path}/model")
+    model.coalesce(1).write.mode(mode).parquet(f"{path}/model")
     # an overwrite re-names every part file; readers that listed these
     # paths earlier in the session hold stale FileStatusCache entries
     # and would FileScanRDD-fail — invalidate at the only writer
@@ -1237,7 +1222,7 @@ def ivfpq_delete_ids(spark, path: str, ids) -> dict:
 
     _ivfpq_check_no_pending(spark, path, "ivfpq_delete_ids")
     if not isinstance(ids, _DF):
-        ids = spark.createDataFrame([(i,) for i in ids], ["__del_id"])
+        ids = local_frame(spark, [(i,) for i in ids], ["__del_id"])
     else:
         ids = ids.select(F.col(ids.columns[0]).alias("__del_id"))
     ids = ids.distinct()
@@ -1365,8 +1350,8 @@ def ivfpq_probe_many(
             tables[(qid, cell)] = tabs[cell]
     spark = index_df.sparkSession
     qid_type = queries.schema[query_id_col].dataType.simpleString()
-    pairs_df = spark.createDataFrame(
-        pairs, f"{query_id_col} {qid_type}, cell int"
+    pairs_df = local_frame(
+        spark, pairs, f"{query_id_col} {qid_type}, cell int"
     )
     cells = sorted({c for _, c in pairs})
     m, n_codes = len(codebooks), len(codebooks[0])
@@ -1401,8 +1386,8 @@ def ivfpq_probe_many(
         mapping = {
             f"{qid}|{cell}": tab for (qid, cell), tab in tables.items()
         }
-        adc_df = spark.createDataFrame(
-            [(mapping,)], "__adc map<string,array<array<bigint>>>"
+        adc_df = local_frame(
+            spark, [(mapping,)], "__adc map<string,array<array<bigint>>>"
         )
         pruned = pruned.crossJoin(F.broadcast(adc_df))
         table_sel = F.element_at(
@@ -1753,7 +1738,8 @@ def facility_location_select(
         selected.append(best[0]["c"])
         out_rows.append((rank, best[0]["c"], int(best[0]["gain"]), objective))
     id_t = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         schema=(
             f"rank int, {id_col} {id_t}, gain_micro bigint, "

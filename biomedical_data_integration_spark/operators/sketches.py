@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark.functions.hashing import md5_bigint
+from biomedical_data_integration_spark.session import local_frame
 
 HASH_SCALE = 16 ** 15  # md5_bigint range: first 15 hex chars
 
@@ -296,7 +297,7 @@ def histogram_quantiles(
         F.sum("n").over(wtot).alias("total"),
     )
     spark = sketch.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     # rank = ceil(q * total); the answering bucket is the first with
     # cum >= rank; min() over a conditional picks it without a sort
     joined = qdf.crossJoin(cum).where(

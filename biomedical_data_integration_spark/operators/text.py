@@ -19,6 +19,7 @@ from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.strings import (
     word_ngrams_strict,
 )
+from biomedical_data_integration_spark.session import local_frame
 
 # Tiny high-frequency stopword lists per language. Order matters: argmax
 # ties resolve in this (alphabetical) order for determinism.
@@ -1191,17 +1192,13 @@ def save_classifier(spark, model: dict, path: str, mode: str = "overwrite") -> N
             int(model["n"]),
         )
     ]
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         data,
         "weights_map map<string,bigint>, weights_arr array<bigint>, "
         "bias bigint, means map<string,bigint>, n bigint",
     )
-    # repartition(1), not coalesce(1): a python-list local relation
-    # scans via one Python worker per parallelize slice, and coalesce
-    # makes ONE task pay every slice's worker startup sequentially
-    # (~4.5 s of pure stall on local[32] — the writers.py lesson); the
-    # one-row shuffle keeps map tasks parallel and still lands one file
-    mdf.repartition(1).write.mode(mode).parquet(path)
+    mdf.coalesce(1).write.mode(mode).parquet(path)
     # an overwrite re-names the part file; invalidate any stale
     # FileStatusCache entry at the only writer
     spark.catalog.refreshByPath(path)

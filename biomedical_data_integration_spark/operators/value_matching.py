@@ -46,6 +46,7 @@ from biomedical_data_integration_spark.functions.strings import (
     normalize_value,
 )
 from biomedical_data_integration_spark.functions.vectors import cosine
+from biomedical_data_integration_spark.session import local_frame
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -114,7 +115,7 @@ def _skip_numeric_pairs(source: DataFrame, pairs: PairList) -> PairList:
 
 
 def _pairs_df(spark: SparkSession, pairs: PairList) -> DataFrame:
-    return spark.createDataFrame(pairs, ["source_column", "target_column"])
+    return local_frame(spark, pairs, "source_column string, target_column string")
 
 
 def source_value_domain(source: DataFrame, pairs: PairList) -> DataFrame:
@@ -156,7 +157,9 @@ def target_value_domain(
     """Distinct target-domain values per mapped pair.
 
     DataFrame target -> per-column distinct (``api.py:444-448``);
-    standard target -> vocabulary domain (``api.py:440-443``).
+    standard target -> vocabulary domain (``api.py:440-443``), already
+    driver data, so it is deduplicated here and returned as a local frame
+    that costs no job to read.
     Output: (source_column, target_column, target_value, tkey)
     """
     from biomedical_data_integration_spark.sources.standards import (
@@ -168,28 +171,37 @@ def target_value_domain(
     if isinstance(target, str):
         target = get_standard(target)
     if isinstance(target, Standard):
+        # the distributed form below, on the driver: tkey = trim(orig)
+        # (spaces only, like Spark's trim), min(orig) per key (code-point
+        # order is UTF-8 byte order), one row per pair naming the column
         values = target.get_column_values(tgt_cols)
+        best: Dict[Tuple[str, str], str] = {}
+        for tc in tgt_cols:
+            for v in values.get(tc, []):
+                key = (tc, v.strip(" "))
+                if key not in best or v < best[key]:
+                    best[key] = v
         rows = [
-            (tc, v)
-            for tc in tgt_cols
-            for v in values.get(tc, [])
+            (tc, tkey, v, sc)
+            for (tc, tkey), v in best.items()
+            for sc, t in pairs
+            if t == tc
         ]
-        dom = spark.createDataFrame(
-            rows, T.StructType([
-                T.StructField("target_column", T.StringType()),
-                T.StructField("orig", T.StringType()),
-            ])
+        return local_frame(
+            spark,
+            rows,
+            "target_column string, tkey string, target_value string,"
+            " source_column string",
         )
-    else:
-        missing = [c for c in tgt_cols if c not in target.columns]
-        if missing:
-            raise ValueError(f"Target column(s) {missing} not found in target table")
-        # native unpivot (one Expand, one scan) — see source_value_domain
-        dom = (
-            target.select([F.col(c).cast("string").alias(c) for c in tgt_cols])
-            .unpivot([], tgt_cols, "target_column", "orig")
-            .where(F.col("orig").isNotNull())
-        )
+    missing = [c for c in tgt_cols if c not in target.columns]
+    if missing:
+        raise ValueError(f"Target column(s) {missing} not found in target table")
+    # native unpivot (one Expand, one scan) — see source_value_domain
+    dom = (
+        target.select([F.col(c).cast("string").alias(c) for c in tgt_cols])
+        .unpivot([], tgt_cols, "target_column", "orig")
+        .where(F.col("orig").isNotNull())
+    )
     # same distinct-before-min as source_value_domain (hash-distinct the
     # raw rows; sort-aggregate only the distinct set)
     dom = (
@@ -206,6 +218,10 @@ def target_value_domain(
 # ---------------------------------------------------------------------------
 
 PAIR = ["source_column", "target_column"]
+SIMILARITIES_SCHEMA = (
+    "source_column string, target_column string, skey string,"
+    " target_value string, similarity double"
+)
 
 
 def _domain_sizes(src: DataFrame, tgt: DataFrame) -> Tuple[int, int]:
@@ -223,16 +239,46 @@ def _domain_sizes(src: DataFrame, tgt: DataFrame) -> Tuple[int, int]:
     return counts.get("s", 0), counts.get("t", 0)
 
 
+def _driver_domains(
+    src: DataFrame, tgt: DataFrame, limit: int
+) -> Optional[Tuple[list, list]]:
+    """Both domains' rows when together they hold at most ``limit``
+    values (``planning.value_match_kernel``), else None.
+
+    One bounded read per side, and the target is read only if the source
+    fits. On a persisted domain the read fills part of the cache, which
+    the distributed kernel then reuses; on a local frame it runs no job.
+    """
+    s_rows = src.limit(limit + 1).collect()
+    if len(s_rows) > limit:
+        return None
+    t_rows = tgt.limit(limit + 1 - len(s_rows)).collect()
+    if planning.value_match_kernel(len(s_rows), len(t_rows), limit) != "local":
+        return None
+    return s_rows, t_rows
+
+
 class BaseValueMatcher:
     """Kernel contract: score candidate (source value, target value) pairs.
 
     Input frames both carry the pair key; output must have
     (source_column, target_column, skey, target_value, similarity in [0,1]).
+
+    A matcher with a driver-side kernel sets ``local_domain_limit`` and
+    implements :meth:`local_similarities`; the pipeline then scores
+    domains of at most that many values (combined) on the driver.
     """
 
     name: str = "base"
+    local_domain_limit: Optional[int] = None
 
     def similarities(self, src: DataFrame, tgt: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def local_similarities(
+        self, spark: SparkSession, s_rows: list, t_rows: list
+    ) -> DataFrame:
+        """:meth:`similarities` over the domains' collected rows."""
         raise NotImplementedError
 
 
@@ -349,7 +395,9 @@ class TfIdfValueMatcher(BaseValueMatcher):
         self.max_df_fraction = max_df_fraction
         self.local_domain_limit = local_domain_limit
 
-    def _local_similarities(self, src: DataFrame, tgt: DataFrame) -> DataFrame:
+    def local_similarities(
+        self, spark: SparkSession, s_rows: list, t_rows: list
+    ) -> DataFrame:
         """Driver-side evaluation of the exact kernel formula for
         driver-sized domains (inverted index — cost is shared-term pairs,
         the same sparsity the distributed term join exploits)."""
@@ -361,15 +409,15 @@ class TfIdfValueMatcher(BaseValueMatcher):
             py_clean_string,
         )
 
-        s_rows = src.select(*PAIR, "skey").collect()
-        t_rows = tgt.select(*PAIR, "tkey", "target_value").collect()
         by_pair: Dict[Tuple[str, str], Tuple[list, list]] = defaultdict(
             lambda: ([], [])
         )
         for r in s_rows:
-            by_pair[(r[0], r[1])][0].append(r[2])
+            by_pair[(r["source_column"], r["target_column"])][0].append(r["skey"])
         for r in t_rows:
-            by_pair[(r[0], r[1])][1].append((r[2], r[3]))
+            by_pair[(r["source_column"], r["target_column"])][1].append(
+                (r["tkey"], r["target_value"])
+            )
 
         tf_cache: Dict[str, dict] = {}
 
@@ -411,11 +459,7 @@ class TfIdfValueMatcher(BaseValueMatcher):
                         acc[(tkey, tval)] += w * wt
                 for (tkey, tval), sim in acc.items():
                     out.append((sc, tc, skey, tval, sim))
-        return src.sparkSession.createDataFrame(
-            out,
-            "source_column string, target_column string, skey string,"
-            " target_value string, similarity double",
-        )
+        return local_frame(spark, out, SIMILARITIES_SCHEMA)
 
     def _tf_maps(self, dom: DataFrame, key: str) -> DataFrame:
         """(pair, value_key, tf: map<term,count>) — term frequencies built
@@ -450,14 +494,9 @@ class TfIdfValueMatcher(BaseValueMatcher):
 
     def similarities(self, src: DataFrame, tgt: DataFrame) -> DataFrame:
         if self.local_domain_limit is not None:
-            # cardinality is one cheap job over the (persisted) distinct
-            # domains — known before kernel launch by construction
-            n_s, n_t = _domain_sizes(src, tgt)
-            kernel = planning.value_match_kernel(
-                n_s, n_t, self.local_domain_limit
-            )
-            if kernel == "local":
-                return self._local_similarities(src, tgt)
+            domains = _driver_domains(src, tgt, self.local_domain_limit)
+            if domains is not None:
+                return self.local_similarities(src.sparkSession, *domains)
         # document frequency over the union corpus (a value present on both
         # sides counts once per side, like fitting on from+to lists)
         s_tf = self._tf_maps(src, "skey").withColumn("side", F.lit("s"))
@@ -759,11 +798,7 @@ class GptValueMatcher(BaseValueMatcher):
                 out.append(
                     (r["source_column"], r["target_column"], r["skey"], term, score)
                 )
-        return spark.createDataFrame(
-            out,
-            "source_column string, target_column string, skey string,"
-            " target_value string, similarity double",
-        )
+        return local_frame(spark, out, SIMILARITIES_SCHEMA)
 
 
 VALUE_MATCHERS = {
@@ -817,7 +852,8 @@ def match_values_pipeline(
     spark = source.sparkSession
     pairs = _skip_numeric_pairs(source, normalize_column_mapping(column_mapping))
     if not pairs:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "source_column string, target_column string, source_value string,"
             " target_value string, similarity double, coverage double",
@@ -830,11 +866,25 @@ def match_values_pipeline(
     # broadcast collects inside the kernel). Spark re-evaluates a plan
     # subtree per reference, so without a persist the full source scan +
     # distinct would run 2-4x per query. The domains are distinct-value
-    # sized — exactly the intermediate you cache at 100 TB.
+    # sized — exactly the intermediate you cache at 100 TB. A Standard's
+    # domain is already a local frame and needs no cache.
     src = source_value_domain(source, pairs).persist()
-    tgt = target_value_domain(spark, target, pairs).persist()
+    tgt = target_value_domain(spark, target, pairs)
+    if not tgt.isLocal():
+        tgt = tgt.persist()
 
-    sims = matcher.similarities(src, tgt)
+    limit = matcher.local_domain_limit
+    domains = None if limit is None else _driver_domains(src, tgt, limit)
+    if domains is None:
+        sims = matcher.similarities(src, tgt)
+    else:
+        # driver-sized: score on the driver and carry the source domain
+        # on as a local frame, so the result references no cached block
+        s_rows, t_rows = domains
+        src.unpersist()
+        tgt.unpersist()
+        sims = matcher.local_similarities(spark, s_rows, t_rows)
+        src = local_frame(spark, s_rows, src.schema)
     sims = sims.where(F.col("similarity") >= threshold)
     sims = sims.withColumn(
         "similarity", F.round(F.col("similarity"), config.SIMILARITY_SCALE)

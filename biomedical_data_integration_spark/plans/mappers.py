@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import planning
+from biomedical_data_integration_spark.session import local_frame
 
 # Above planning.LITERAL_DICT_LIMIT entries a dictionary compiles to a
 # broadcast-join plan rather than a literal CASE/map expression (Catalyst
@@ -157,7 +158,7 @@ class DictionaryMapper(ValueMapper):
         """Broadcast-LEFT-join rewrite for large dictionaries."""
         spark = df.sparkSession
         items = [(str(k) if k is not None else None, v) for k, v in self.dictionary.items()]
-        mapping = spark.createDataFrame(items, ["__dm_key", target_column])
+        mapping = local_frame(spark, items, ["__dm_key", target_column])
         joined = df.join(
             F.broadcast(mapping),
             F.col(source_column).cast("string") == F.col("__dm_key"),

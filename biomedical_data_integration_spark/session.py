@@ -9,7 +9,10 @@ stable against any oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Any, Iterable, List, Union
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -48,3 +51,48 @@ def get_spark(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Union[Iterable[Any], "pandas.DataFrame"],  # noqa: F821
+    schema: Union[StructType, str, List[str]],
+) -> DataFrame:
+    """A DataFrame over driver-held rows, planned as a ``LocalRelation``.
+
+    Every relation the engine builds from driver data (domains, score
+    tables, model rows, sidecars) goes through here. ``createDataFrame``
+    over a Python list plans a pickled ``LogicalRDD``: each action or
+    broadcast over it is a Spark job that ships the pickles through a
+    Python worker. The rows are instead converted to one Arrow table,
+    which Spark keeps as a ``LocalRelation`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says: collecting or
+    broadcasting it runs no job, and the optimizer knows its exact size.
+
+    ``rows`` is a sequence of positional rows (tuples, lists or ``Row``),
+    or a pandas DataFrame for wide column-oriented tables. ``schema`` is a
+    ``StructType``, a DDL string, or column names only; names are typed by
+    PySpark's own row inference, as ``createDataFrame(list, names)`` would.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    elif not isinstance(schema, StructType):
+        rows = list(rows)
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    arrow_schema = pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+    )
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False)
+    else:
+        rows = list(rows)
+        columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema)

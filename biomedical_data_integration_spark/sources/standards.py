@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from biomedical_data_integration_spark.session import local_frame
+
 LONG_FORM_SCHEMA = StructType(
     [
         StructField("column_name", StringType()),
@@ -51,8 +53,27 @@ class Standard:
         meta = self.get_column_metadata(column_names)
         return {name: m.get("value_names", []) for name, m in meta.items()}
 
+    def _per_session(self, attr: str, spark: SparkSession, build) -> DataFrame:
+        """``build()``'s frame, memoized on this standard per session.
+
+        Keyed on a weakref to the session, not id(): after a stopped
+        session is garbage-collected CPython can reuse the same id for a
+        new session, which would return a DataFrame bound to the dead one."""
+        cache = getattr(self, attr, None)
+        if cache is not None and cache[0]() is spark:
+            return cache[1]
+        df = build()
+        setattr(self, attr, (weakref.ref(spark), df))
+        return df
+
     def to_long_df(self, spark: SparkSession) -> DataFrame:
-        """Long-form vocabulary table; broadcast-sized by construction."""
+        """Long-form vocabulary table; broadcast-sized by construction.
+        Memoized per (standard, session): GDC is 17k rows built in Python."""
+        return self._per_session("_long_cache", spark, lambda: local_frame(
+            spark, self._long_rows(), LONG_FORM_SCHEMA
+        ))
+
+    def _long_rows(self) -> List[tuple]:
         rows = []
         meta = self.get_column_metadata(self.get_columns())
         for col in self.get_columns():
@@ -65,7 +86,7 @@ class Standard:
             else:
                 for v, vd in zip(values, value_descs):
                     rows.append((col, desc, v, vd))
-        return spark.createDataFrame(rows, LONG_FORM_SCHEMA)
+        return rows
 
     def to_wide_df(self, spark: SparkSession) -> DataFrame:
         """Wide table: one column per vocabulary attribute, rows = values
@@ -80,14 +101,10 @@ class Standard:
         overruns a default-sized executor heap (measured OOM); matchers
         that need repeated scans persist their own NARROW long form
         instead."""
-        import pandas as pd
+        return self._per_session("_wide_cache", spark, lambda: self._wide(spark))
 
-        # Keyed on a weakref to the session, not id(): after a stopped
-        # session is garbage-collected CPython can reuse the same id for a
-        # new session, which would return a DataFrame bound to the dead one.
-        cache = getattr(self, "_wide_cache", None)
-        if cache is not None and cache[0]() is spark:
-            return cache[1]
+    def _wide(self, spark: SparkSession) -> DataFrame:
+        import pandas as pd
 
         values = self.get_column_values(self.get_columns())
         max_len = max((len(v) for v in values.values()), default=0) or 1
@@ -100,7 +117,7 @@ class Standard:
             }
         )
         schema = StructType([StructField(c, StringType()) for c in values])
-        wide = spark.createDataFrame(pdf, schema)
+        wide = local_frame(spark, pdf, schema)
         # Tag the frame with its backing standard: matchers that only need
         # the (column, value) long form can then read it straight from the
         # vocabulary (a narrow driver-built table) instead of unpivoting a
@@ -108,7 +125,6 @@ class Standard:
         # rides only this exact object (projections drop it), which is safe:
         # consumers fall back to the generic unpivot.
         wide._bdi_standard = self
-        self._wide_cache = (weakref.ref(spark), wide)
         return wide
 
 

@@ -24,6 +24,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import local_frame
+
 
 def _hadoop_fs(spark, path: str):
     """(FileSystem, Path) for ``path`` via the JVM Hadoop API — the
@@ -281,16 +283,9 @@ def write_training_shards(
         .orderBy("shard")
     )
     rows = manifest_df.collect()
-    # repartition(1), not coalesce(1): python-list frames scan via a Python
-    # worker per parallelize slice, and coalesce makes one task pay every
-    # slice's worker startup sequentially; the shuffle keeps map tasks
-    # parallel and still lands one JSON file
-    (
-        spark.createDataFrame(rows, manifest_df.schema)
-        .repartition(1)
-        .write.mode("overwrite")
-        .json(f"{path}/_manifest")
-    )
+    local_frame(spark, rows, manifest_df.schema).coalesce(1).write.mode(
+        "overwrite"
+    ).json(f"{path}/_manifest")
     return [r.asDict() for r in rows]
 
 

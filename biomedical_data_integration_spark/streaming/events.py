@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import local_frame
+
 
 def tumbling_window_agg(
     events: DataFrame,
@@ -3674,8 +3676,8 @@ def markov_stationary(
     rows = [
         (states[i], int(tot[i]), float(v[i]) / float(S)) for i in range(k)
     ]
-    return spark.createDataFrame(
-        rows, "state string, n_out bigint, pi double"
+    return local_frame(
+        spark, rows, "state string, n_out bigint, pi double"
     )
 
 
@@ -3816,7 +3818,8 @@ def markov_attribution(
             )
         )
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel string, n_touches bigint, p_conv_full double,"
         " p_conv_removed double, removal_effect double,"
@@ -3945,7 +3948,8 @@ def shapley_attribution(
             )
         )
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel string, n_journeys_with bigint, shapley_value double,"
         " share double",

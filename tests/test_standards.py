@@ -50,6 +50,17 @@ def test_long_and_wide_forms(spark):
     assert vals == {"z", None}
 
 
+def test_long_and_wide_forms_memoized_per_session(spark):
+    """Both forms are built once per (standard, session); a new session
+    object gets its own frames, never one bound to another session."""
+    std = DictStandard({"a": {"description": "da", "values": {"x": ""}}})
+    assert std.to_long_df(spark) is std.to_long_df(spark)
+    assert std.to_wide_df(spark) is std.to_wide_df(spark)
+    other = spark.newSession()
+    assert std.to_long_df(other) is not std.to_long_df(spark)
+    assert std.to_long_df(other).sparkSession is other
+
+
 def test_json_standard_roundtrip(spark, tmp_path):
     payload = {
         "stage": {

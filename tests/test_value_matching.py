@@ -309,3 +309,95 @@ def test_embedding_matcher_with_transformer_text_embedder(spark):
     ).collect()
     by_src = {r["source_value"]: r["target_value"] for r in out}
     assert by_src == {"apple": "apricot", "banana": "berry"}
+
+
+def test_standard_target_domain_matches_dataframe_target_domain(spark):
+    """A Standard's domain is deduplicated on the driver; it must equal
+    the distributed trim/min(orig) domain of the same values."""
+    from biomedical_data_integration_spark import DictStandard
+    from biomedical_data_integration_spark.operators.value_matching import (
+        target_value_domain,
+    )
+
+    values = ["a", " a", "a ", "B", "b", "é", "é", "  "]
+    std = DictStandard({"t": {"values": {v: "" for v in values}}})
+    tgt_df = spark.createDataFrame([(v,) for v in values], ["t"])
+    pairs = [("s1", "t"), ("s2", "t")]
+    cols = ["source_column", "target_column", "tkey", "target_value"]
+    local = target_value_domain(spark, std, pairs)
+    assert local.isLocal()
+    got = sorted(tuple(r) for r in local.select(cols).collect())
+    want = sorted(
+        tuple(r) for r in target_value_domain(spark, tgt_df, pairs).select(cols).collect()
+    )
+    assert got == want
+
+
+def _clinical(spark):
+    return spark.createDataFrame(
+        [
+            ("hispanic or latino", "Stage IA"),
+            ("not hispanic", "stage ia"),
+            ("unknown", None),
+            ("Hispanic", "Stage IV"),
+        ],
+        ["Ethnicity", "FIGO_stage"],
+    )
+
+
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_harmonization_job_counts(spark):
+    """Regression bound on Spark jobs along match_schema -> match_values
+    (tfidf) against GDC. Driver-built relations are LocalRelations, so
+    collecting match_schema's result runs no job, and the driver-sized
+    tfidf path reads each domain once (the GDC side with no job)."""
+    from biomedical_data_integration_spark import match_schema
+
+    clinical = _clinical(spark)
+    sm = match_schema(clinical, "gdc", method="coma")
+    rows, n_sm = _jobs_in(spark, "bdi_jobs_sm_collect", sm.collect)
+    mapping = sorted((r["source"], r["target"]) for r in rows if r["target"])
+    assert mapping == [("Ethnicity", "ethnicity"), ("FIGO_stage", "figo_stage")]
+    vm, n_vm = _jobs_in(
+        spark,
+        "bdi_jobs_mv",
+        lambda: match_values(clinical, "gdc", mapping, method="tfidf"),
+    )
+    vrows, n_vm_collect = _jobs_in(spark, "bdi_jobs_mv_collect", vm.collect)
+    assert len(vrows) == 7
+    assert n_sm == 0
+    assert n_vm <= 4
+    assert n_vm_collect <= 7
+
+
+@pytest.mark.parametrize("target", ["gdc", "dataframe"])
+def test_match_values_leaves_no_cached_domains(spark, target):
+    """The driver-sized path releases both persisted domains: repeated
+    calls in one session must not grow the persistent-RDD set. (Compared
+    by RDD id, not by count: the context cleaner may drop earlier tests'
+    RDDs meanwhile.)"""
+    clinical = _clinical(spark)
+    if target == "dataframe":
+        target = spark.createDataFrame(
+            [("Hispanic or Latino", "Stage I"), ("Unknown", "Stage IV")],
+            ["ethnicity", "figo_stage"],
+        )
+    mapping = [("Ethnicity", "ethnicity"), ("FIGO_stage", "figo_stage")]
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for _ in range(3):
+        match_values(clinical, target, mapping, method="tfidf").collect()
+        assert persisted() - before == set()
