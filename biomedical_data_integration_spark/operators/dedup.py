@@ -162,25 +162,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    shingle_words: int = 3,
-) -> DataFrame:
-    """MinHash signature per document: (id, sig array<string> length
-    num_perm), sig[i] = min over shingles of md5("mh{i}|" + shingle).
-
-    md5-hex lexicographic min is a uniform permutation min — portable to
-    any SQL oracle (no engine-specific 64-bit hash needed). Shuffle per doc
-    is the shingle explode; the signature itself is constant-width.
-    """
-    return _signatures_from_shingles(
-        shingle_sets(df, text_col, id_col, shingle_words), num_perm
-    )
-
-
 def _signatures_from_shingles(sh: DataFrame, num_perm: int) -> DataFrame:
     """Signatures from a prebuilt (id, shingle) set — lets callers that
     also need the shingle set for verification share one persisted scan."""

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from biomedical_data_integration_spark import config
+from biomedical_data_integration_spark import config, planning
 from biomedical_data_integration_spark.functions.strings import levenshtein_ratio
 from biomedical_data_integration_spark.functions.vectors import cosine
 from biomedical_data_integration_spark.operators.value_matching import (
@@ -171,6 +171,22 @@ def _py_name_sims(
     }
 
 
+def _name_score_rows(
+    source_names: List[str], target_names: List[str]
+) -> List[Tuple[str, str, float]]:
+    """The name-similarity score table's rows: rounded HALF_UP like
+    ``F.round``; pairs sharing no terms produce no row."""
+    from biomedical_data_integration_spark.functions.strings import (
+        py_round_half_up,
+    )
+
+    return [
+        (sc, tc, py_round_half_up(sim, config.SIMILARITY_SCALE))
+        for (sc, tc), sim in _py_name_sims(source_names, target_names).items()
+        if sim > 0.0
+    ]
+
+
 class NameSimilaritySchemaMatcher(BaseSchemaMatcher):
     """Char-n-gram TF-IDF cosine over column *names*.
 
@@ -187,18 +203,8 @@ class NameSimilaritySchemaMatcher(BaseSchemaMatcher):
     name = "name_similarity"
 
     def scores(self, source, target, allowed_pairs=None):
-        from biomedical_data_integration_spark.functions.strings import (
-            py_round_half_up,
-        )
-
-        spark = source.sparkSession
-        sims = _py_name_sims(source.columns, target.columns)
-        rows = [
-            (sc, tc, py_round_half_up(sim, config.SIMILARITY_SCALE))
-            for (sc, tc), sim in sims.items()
-            if sim > 0.0  # pairs sharing no terms produce no row
-        ]
-        scores = local_frame(spark, rows, SCORES_SCHEMA)
+        rows = _name_score_rows(source.columns, target.columns)
+        scores = local_frame(source.sparkSession, rows, SCORES_SCHEMA)
         return _apply_allowed(scores, allowed_pairs)
 
 
@@ -760,7 +766,69 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
     def __init__(self, name_weight: float = 0.5):
         self.name_weight = name_weight
 
+    def _driver_rows(self, source, target) -> Optional[list]:
+        """The score table's rows computed on the driver, or None when the
+        distributed kernels must run.
+
+        Applies when the target is Standard-backed (its vocabulary is
+        already Python data), no pair has distribution evidence, and the
+        source's string domain fits in ``planning.LOCAL_DOMAIN_LIMIT``
+        (one bounded read, the only job). The arithmetic replays the
+        distributed expressions below operation for operation: exact
+        Jaccard over spaces-trimmed values, each evidence rounded HALF_UP,
+        then the same weighted sum rounded again."""
+        from collections import Counter, defaultdict
+
+        from biomedical_data_integration_spark.functions.strings import (
+            py_round_half_up,
+        )
+        from biomedical_data_integration_spark.sources.standards import (
+            standard_of,
+        )
+
+        std = standard_of(target)
+        if std is None or (_numeric_columns(source) and _numeric_columns(target)):
+            return None
+        limit = planning.LOCAL_DOMAIN_LIMIT
+        s_rows = (
+            _unpivot_strings(source, "source", "sval").limit(limit + 1).collect()
+        )
+        if len(s_rows) > limit:
+            return None
+
+        # inverted index: trimmed value -> target columns holding it
+        holders: Dict[str, list] = defaultdict(list)
+        nt: Dict[str, int] = {}
+        for tc, values in std.get_column_values(std.get_columns()).items():
+            domain = {v.strip(" ") for v in values if v is not None}
+            nt[tc] = len(domain)
+            for v in domain:
+                holders[v].append(tc)
+        ns = Counter(r["source"] for r in s_rows)
+        inter = Counter(
+            (r["source"], tc) for r in s_rows for tc in holders.get(r["sval"], ())
+        )
+        scale = config.SIMILARITY_SCALE
+        value = {
+            (sc, tc): py_round_half_up(n / (ns[sc] + nt[tc] - n), scale)
+            for (sc, tc), n in inter.items()
+        }
+        names = {
+            (sc, tc): sim
+            for sc, tc, sim in _name_score_rows(source.columns, target.columns)
+        }
+        nw, vw = self.name_weight, 1.0 - self.name_weight
+        rows = []
+        for pair in sorted(names.keys() | value.keys()):
+            sim = nw * names.get(pair, 0.0) + vw * value.get(pair, 0.0)
+            rows.append((*pair, py_round_half_up(sim, scale)))
+        return rows
+
     def scores(self, source, target, allowed_pairs=None):
+        rows = self._driver_rows(source, target)
+        if rows is not None:
+            scores = local_frame(source.sparkSession, rows, SCORES_SCHEMA)
+            return _apply_allowed(scores, allowed_pairs)
         nw, vw = self.name_weight, 1.0 - self.name_weight
         names = NameSimilaritySchemaMatcher().scores(source, target)
         jac = JaccardSchemaMatcher(threshold_levenshtein=1.0).scores(source, target)

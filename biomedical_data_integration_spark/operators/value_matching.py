@@ -265,7 +265,7 @@ class BaseValueMatcher:
     (source_column, target_column, skey, target_value, similarity in [0,1]).
 
     A matcher with a driver-side kernel sets ``local_domain_limit`` and
-    implements :meth:`local_similarities`; the pipeline then scores
+    implements :meth:`local_similarities`; the pipeline then finishes
     domains of at most that many values (combined) on the driver.
     """
 
@@ -275,10 +275,8 @@ class BaseValueMatcher:
     def similarities(self, src: DataFrame, tgt: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def local_similarities(
-        self, spark: SparkSession, s_rows: list, t_rows: list
-    ) -> DataFrame:
-        """:meth:`similarities` over the domains' collected rows."""
+    def local_similarities(self, s_rows: list, t_rows: list) -> list:
+        """:meth:`similarities`' rows, over the domains' collected rows."""
         raise NotImplementedError
 
 
@@ -395,9 +393,7 @@ class TfIdfValueMatcher(BaseValueMatcher):
         self.max_df_fraction = max_df_fraction
         self.local_domain_limit = local_domain_limit
 
-    def local_similarities(
-        self, spark: SparkSession, s_rows: list, t_rows: list
-    ) -> DataFrame:
+    def local_similarities(self, s_rows: list, t_rows: list) -> list:
         """Driver-side evaluation of the exact kernel formula for
         driver-sized domains (inverted index — cost is shared-term pairs,
         the same sparsity the distributed term join exploits)."""
@@ -459,7 +455,7 @@ class TfIdfValueMatcher(BaseValueMatcher):
                         acc[(tkey, tval)] += w * wt
                 for (tkey, tval), sim in acc.items():
                     out.append((sc, tc, skey, tval, sim))
-        return local_frame(spark, out, SIMILARITIES_SCHEMA)
+        return out
 
     def _tf_maps(self, dom: DataFrame, key: str) -> DataFrame:
         """(pair, value_key, tf: map<term,count>) — term frequencies built
@@ -496,7 +492,11 @@ class TfIdfValueMatcher(BaseValueMatcher):
         if self.local_domain_limit is not None:
             domains = _driver_domains(src, tgt, self.local_domain_limit)
             if domains is not None:
-                return self.local_similarities(src.sparkSession, *domains)
+                return local_frame(
+                    src.sparkSession,
+                    self.local_similarities(*domains),
+                    SIMILARITIES_SCHEMA,
+                )
         # document frequency over the union corpus (a value present on both
         # sides counts once per side, like fitting on from+to lists)
         s_tf = self._tf_maps(src, "skey").withColumn("side", F.lit("s"))
@@ -831,6 +831,58 @@ def get_value_matcher(method: Union[str, BaseValueMatcher], **kwargs) -> BaseVal
 # the V-pipeline
 # ---------------------------------------------------------------------------
 
+MATCHES_SCHEMA = (
+    "source_column string, target_column string, source_value string,"
+    " target_value string, similarity double, coverage double"
+)
+
+
+def _driver_matches(
+    s_rows: list,
+    sims: list,
+    top_k: int,
+    threshold: float,
+    include_unmatched: bool,
+) -> list:
+    """The pipeline's tail (threshold, round, top-k, left attach,
+    coverage) over driver rows, replaying the distributed expressions in
+    :func:`match_values_pipeline`: the threshold sees the raw similarity,
+    rounding is HALF_UP like ``F.round``, and each (pair, skey) keeps its
+    first ``top_k`` matches by (similarity desc, target_value asc)."""
+    from collections import defaultdict
+
+    from biomedical_data_integration_spark.functions.strings import (
+        py_round_half_up,
+    )
+
+    scale = config.SIMILARITY_SCALE
+    found: Dict[tuple, list] = defaultdict(list)
+    for sc, tc, skey, tval, sim in sims:
+        if sim >= threshold:
+            found[(sc, tc, skey)].append((py_round_half_up(sim, scale), tval))
+    joined = []
+    for r in s_rows:
+        sc, tc, skey = r["source_column"], r["target_column"], r["skey"]
+        best = sorted(found.get((sc, tc, skey), ()), key=lambda m: (-m[0], m[1]))
+        for sim, tval in best[:top_k] or [(None, None)]:
+            joined.append((sc, tc, skey, r["source_value"], tval, sim))
+    keys: Dict[tuple, set] = defaultdict(set)
+    matched: Dict[tuple, set] = defaultdict(set)
+    for sc, tc, skey, _, tval, _ in joined:
+        keys[(sc, tc)].add(skey)
+        if tval is not None:
+            matched[(sc, tc)].add(skey)
+    coverage = {
+        p: py_round_half_up(len(matched[p]) / len(ks), scale)
+        for p, ks in keys.items()
+    }
+    return [
+        (sc, tc, sval, tval, sim, coverage[(sc, tc)])
+        for sc, tc, _, sval, tval, sim in joined
+        if include_unmatched or tval is not None
+    ]
+
+
 def match_values_pipeline(
     source: DataFrame,
     target: Union[DataFrame, str, "Standard"],  # noqa: F821
@@ -852,12 +904,7 @@ def match_values_pipeline(
     spark = source.sparkSession
     pairs = _skip_numeric_pairs(source, normalize_column_mapping(column_mapping))
     if not pairs:
-        return local_frame(
-            spark,
-            [],
-            "source_column string, target_column string, source_value string,"
-            " target_value string, similarity double, coverage double",
-        )
+        return local_frame(spark, [], MATCHES_SCHEMA)
 
     matcher = get_value_matcher(method, **(method_args or {}))
 
@@ -875,16 +922,23 @@ def match_values_pipeline(
 
     limit = matcher.local_domain_limit
     domains = None if limit is None else _driver_domains(src, tgt, limit)
-    if domains is None:
-        sims = matcher.similarities(src, tgt)
-    else:
-        # driver-sized: score on the driver and carry the source domain
-        # on as a local frame, so the result references no cached block
+    if domains is not None:
+        # driver-sized: finish the whole step on the driver; the result is
+        # a local frame, so it references no cached block and collecting
+        # it runs no job
         s_rows, t_rows = domains
         src.unpersist()
         tgt.unpersist()
-        sims = matcher.local_similarities(spark, s_rows, t_rows)
-        src = local_frame(spark, s_rows, src.schema)
+        rows = _driver_matches(
+            s_rows,
+            matcher.local_similarities(s_rows, t_rows),
+            top_k,
+            threshold,
+            include_unmatched,
+        )
+        return local_frame(spark, rows, MATCHES_SCHEMA)
+
+    sims = matcher.similarities(src, tgt)
     sims = sims.where(F.col("similarity") >= threshold)
     sims = sims.withColumn(
         "similarity", F.round(F.col("similarity"), config.SIMILARITY_SCALE)

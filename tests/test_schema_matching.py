@@ -435,3 +435,97 @@ def test_cupid_w_struct_drives_inner_reinforcement(spark):
         }[probe]
 
     assert score(0.2) > score(1.0)
+
+
+def _gdc_clinical(spark):
+    """Three clinical columns whose values hit several GDC domains (so the
+    value evidence is not empty), with padded values and a null."""
+    return spark.createDataFrame(
+        [
+            ("hispanic or latino", "Stage IA", "female"),
+            ("not hispanic or latino", " Stage IV ", "male"),
+            ("Unknown", None, "unknown"),
+            ("unknown", "Stage IA", "not reported"),
+        ],
+        ["Ethnicity", "FIGO_stage", "gender"],
+    )
+
+
+def _coma_scores(source, target):
+    return get_schema_matcher("coma").scores(source, target)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_coma_driver_form_matches_distributed(spark, monkeypatch):
+    """Against a Standard, coma scores on the driver; forcing the
+    distributed kernels (a zero domain limit) gives identical rows."""
+    from biomedical_data_integration_spark import planning
+    from biomedical_data_integration_spark.sources.standards import get_standard
+
+    source = _gdc_clinical(spark)
+    gdc = get_standard("gdc").to_wide_df(spark)
+    driver = _coma_scores(source, gdc)
+    assert driver.isLocal()
+    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", 0)
+    distributed = _coma_scores(source, gdc)
+    assert not distributed.isLocal()
+    got = _rows(driver)
+    assert got == _rows(distributed)
+    # the value evidence contributed: some pair scores above its name half
+    names = dict(
+        ((s, t), sim)
+        for s, t, sim in _rows(get_schema_matcher("name_similarity").scores(source, gdc))
+    )
+    assert any(sim > 0.5 * names.get((s, t), 0.0) + 0.01 for s, t, sim in got)
+
+
+def test_coma_falls_back_above_source_domain_limit(spark, monkeypatch):
+    """The driver form needs the source's string domain (distinct
+    (column, trimmed value) rows) to fit the limit: one value over it
+    runs the distributed kernels, with the same rows."""
+    from biomedical_data_integration_spark import planning
+    from biomedical_data_integration_spark.sources.standards import get_standard
+
+    source = _gdc_clinical(spark)
+    gdc = get_standard("gdc").to_wide_df(spark)
+    domain = 10  # Ethnicity 4, FIGO_stage 2 after trim, gender 4
+    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", domain)
+    at_limit = _coma_scores(source, gdc)
+    assert at_limit.isLocal()
+    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", domain - 1)
+    above = _coma_scores(source, gdc)
+    assert not above.isLocal()
+    assert _rows(at_limit) == _rows(above)
+
+
+def test_coma_numeric_pairs_take_distributed_path(spark):
+    """Numeric source and target columns carry distribution evidence,
+    which only the distributed kernels compute: a DataFrame target with
+    numeric columns keeps its scores and matches."""
+    source = spark.createDataFrame(
+        [("a1", 1.0, 10), ("a2", 2.0, 20), ("a3", 3.0, 30), ("a4", 4.0, 40)],
+        ["code", "dose", "age"],
+    )
+    target = spark.createDataFrame(
+        [("a1", 12, 1.5), ("a2", 19, 2.5), ("b3", 31, 3.5), ("a4", 45, 4.5)],
+        ["code_id", "age_years", "dose_mg"],
+    )
+    scores = _coma_scores(source, target)
+    assert not scores.isLocal()
+    assert _rows(scores) == [
+        ("age", "age_years", 0.722589),
+        ("age", "code_id", 0.014923),
+        ("age", "dose_mg", 0.552814),
+        ("code", "age_years", 0.019632),
+        ("code", "code_id", 0.630687),
+        ("code", "dose_mg", 0.058101),
+        ("dose", "age_years", 0.511487),
+        ("dose", "code_id", 0.079939),
+        ("dose", "dose_mg", 0.811989),
+    ]
+    assert _rows(match_schema(source, target, method="coma")) == [
+        ("age", "age_years"), ("code", "code_id"), ("dose", "dose_mg"),
+    ]

@@ -359,11 +359,17 @@ def test_harmonization_job_counts(spark):
     """Regression bound on Spark jobs along match_schema -> match_values
     (tfidf) against GDC. Driver-built relations are LocalRelations, so
     collecting match_schema's result runs no job, and the driver-sized
-    tfidf path reads each domain once (the GDC side with no job)."""
+    tfidf path reads each domain once (the GDC side with no job). Both
+    steps finish on the driver: coma's only job is the bounded read of
+    the source's string domain, and match_values returns a local frame."""
     from biomedical_data_integration_spark import match_schema
 
     clinical = _clinical(spark)
-    sm = match_schema(clinical, "gdc", method="coma")
+    sm, n_sm_call = _jobs_in(
+        spark,
+        "bdi_jobs_sm",
+        lambda: match_schema(clinical, "gdc", method="coma"),
+    )
     rows, n_sm = _jobs_in(spark, "bdi_jobs_sm_collect", sm.collect)
     mapping = sorted((r["source"], r["target"]) for r in rows if r["target"])
     assert mapping == [("Ethnicity", "ethnicity"), ("FIGO_stage", "figo_stage")]
@@ -374,9 +380,10 @@ def test_harmonization_job_counts(spark):
     )
     vrows, n_vm_collect = _jobs_in(spark, "bdi_jobs_mv_collect", vm.collect)
     assert len(vrows) == 7
+    assert n_sm_call <= 2
     assert n_sm == 0
     assert n_vm <= 4
-    assert n_vm_collect <= 7
+    assert n_vm_collect == 0
 
 
 @pytest.mark.parametrize("target", ["gdc", "dataframe"])
@@ -401,3 +408,105 @@ def test_match_values_leaves_no_cached_domains(spark, target):
     for _ in range(3):
         match_values(clinical, target, mapping, method="tfidf").collect()
         assert persisted() - before == set()
+
+
+def test_match_schema_coma_leaves_no_pins(spark):
+    """coma against a Standard scores on the driver and pins nothing:
+    repeated calls must not grow the persistent-RDD set (compared by id,
+    as above)."""
+    from biomedical_data_integration_spark import match_schema
+
+    clinical = _clinical(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for _ in range(3):
+        match_schema(clinical, "gdc", method="coma").collect()
+        assert persisted() - before == set()
+
+
+def _pipeline_data(spark):
+    """Two mapped pairs with ties at equal similarity ("Apple"/"apple"
+    and "banana"/"Banana " clean to the same string), padded source
+    values, a null, and values that match nothing."""
+    src = spark.createDataFrame(
+        [
+            ("apple", "carrot"),
+            ("aple", "onion"),
+            (" apple ", "onion"),
+            ("Banana", None),
+            ("kiwi fruit", "zzz"),
+            ("qqq", "carrot"),
+            (None, "Carrots"),
+        ],
+        ["fruit", "veg"],
+    )
+    tgt = spark.createDataFrame(
+        [
+            ("Apple", "Carrot"),
+            ("apple", "carrots"),
+            ("banana", "Onion"),
+            ("Banana ", "onions"),
+            ("kiwi", None),
+        ],
+        ["fruit_t", "veg_t"],
+    )
+    return src, tgt, [("fruit", "fruit_t"), ("veg", "veg_t")]
+
+
+@pytest.mark.parametrize(
+    "top_k,include_unmatched", [(1, True), (2, True), (2, False)]
+)
+def test_driver_finished_pipeline_matches_distributed(
+    spark, top_k, include_unmatched
+):
+    """The driver-sized pipeline (threshold, round, top-k, left attach,
+    coverage in Python) returns the distributed pipeline's rows, with the
+    threshold set exactly at one pair's raw similarity."""
+    from collections import Counter
+
+    from biomedical_data_integration_spark.operators.value_matching import (
+        TfIdfValueMatcher,
+        match_values_pipeline,
+        source_value_domain,
+        target_value_domain,
+    )
+
+    src, tgt, pairs = _pipeline_data(spark)
+    raw = {
+        (skey, tval): sim
+        for _, _, skey, tval, sim in TfIdfValueMatcher().local_similarities(
+            source_value_domain(src, pairs).collect(),
+            target_value_domain(spark, tgt, pairs).collect(),
+        )
+    }
+    threshold = raw[("aple", "apple")]
+    assert threshold == raw[("aple", "Apple")] < 1.0
+
+    def run(**method_args):
+        return match_values_pipeline(
+            src, tgt, pairs, method="tfidf", top_k=top_k,
+            threshold=threshold, include_unmatched=include_unmatched,
+            method_args=method_args,
+        )
+
+    driver = run()
+    distributed = run(local_domain_limit=None)
+    assert driver.isLocal() and not distributed.isLocal()
+    got = Counter(tuple(r) for r in driver.collect())
+    assert got == Counter(tuple(r) for r in distributed.collect())
+
+    by_value = {}
+    for sc, _, sval, tval, sim, cov in got:
+        by_value.setdefault((sc, sval), []).append(tval)
+    # the at-threshold pair is kept; ties order by target_value
+    assert sorted(by_value[("fruit", "aple")]) == ["Apple", "apple"][:top_k]
+    if include_unmatched:
+        assert by_value[("fruit", "qqq")] == [None]
+    else:
+        assert all(None not in v for v in by_value.values())
+    coverage = {(sc, tc): cov for sc, tc, _, _, _, cov in got}
+    assert 0.0 < coverage[("fruit", "fruit_t")] < 1.0
