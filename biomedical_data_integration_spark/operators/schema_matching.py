@@ -759,6 +759,10 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
           + 0.5 * value evidence (exact-equality Jaccard for string-string
             pairs, distribution similarity for numeric-numeric pairs, 0 for
             mixed-type pairs).
+
+    Against a Standard with a driver-sized source the same scores are
+    computed on the driver (:meth:`_driver_rows`) and returned as a local
+    frame; otherwise the distributed kernels run.
     """
 
     name = "coma"

@@ -23,6 +23,9 @@ Design points for scale:
 - Similarity scores are rounded (config.SIMILARITY_SCALE) and every window
   has a total-order tiebreaker, so results are deterministic under any
   partitioning.
+- With a driver-side kernel (tfidf), domains that fit on the driver
+  (``planning.LOCAL_DOMAIN_LIMIT`` values) skip the Spark plan above: the
+  same steps run in Python and the result is a local frame.
 
 Value matcher registry mirrors ``value_matching/matcher_factory.py:7-21``:
 ``tfidf`` (default), ``edit_distance``, ``indel``, ``exact``,
@@ -861,24 +864,24 @@ def _driver_matches(
         if sim >= threshold:
             found[(sc, tc, skey)].append((py_round_half_up(sim, scale), tval))
     joined = []
-    for r in s_rows:
-        sc, tc, skey = r["source_column"], r["target_column"], r["skey"]
-        best = sorted(found.get((sc, tc, skey), ()), key=lambda m: (-m[0], m[1]))
-        for sim, tval in best[:top_k] or [(None, None)]:
-            joined.append((sc, tc, skey, r["source_value"], tval, sim))
     keys: Dict[tuple, set] = defaultdict(set)
     matched: Dict[tuple, set] = defaultdict(set)
-    for sc, tc, skey, _, tval, _ in joined:
+    for r in s_rows:
+        sc, tc, skey = r["source_column"], r["target_column"], r["skey"]
+        ranked = sorted(found.get((sc, tc, skey), ()), key=lambda m: (-m[0], m[1]))
+        best = ranked[: max(top_k, 0)]  # row_number() <= top_k
         keys[(sc, tc)].add(skey)
-        if tval is not None:
+        if best:
             matched[(sc, tc)].add(skey)
+        for sim, tval in best or [(None, None)]:
+            joined.append((sc, tc, r["source_value"], tval, sim))
     coverage = {
         p: py_round_half_up(len(matched[p]) / len(ks), scale)
         for p, ks in keys.items()
     }
     return [
         (sc, tc, sval, tval, sim, coverage[(sc, tc)])
-        for sc, tc, _, sval, tval, sim in joined
+        for sc, tc, sval, tval, sim in joined
         if include_unmatched or tval is not None
     ]
 

@@ -458,7 +458,7 @@ def _pipeline_data(spark):
 
 
 @pytest.mark.parametrize(
-    "top_k,include_unmatched", [(1, True), (2, True), (2, False)]
+    "top_k,include_unmatched", [(0, True), (1, True), (2, True), (2, False)]
 )
 def test_driver_finished_pipeline_matches_distributed(
     spark, top_k, include_unmatched
@@ -503,10 +503,11 @@ def test_driver_finished_pipeline_matches_distributed(
     for sc, _, sval, tval, sim, cov in got:
         by_value.setdefault((sc, sval), []).append(tval)
     # the at-threshold pair is kept; ties order by target_value
-    assert sorted(by_value[("fruit", "aple")]) == ["Apple", "apple"][:top_k]
+    want = ["Apple", "apple"][:top_k] or [None]
+    assert sorted(by_value[("fruit", "aple")]) == want
     if include_unmatched:
         assert by_value[("fruit", "qqq")] == [None]
     else:
         assert all(None not in v for v in by_value.values())
     coverage = {(sc, tc): cov for sc, tc, _, _, _, cov in got}
-    assert 0.0 < coverage[("fruit", "fruit_t")] < 1.0
+    assert (0.0 < coverage[("fruit", "fruit_t")] < 1.0) == (top_k > 0)
