@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from biomedical_data_integration_spark import config, planning
+from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.strings import levenshtein_ratio
 from biomedical_data_integration_spark.functions.vectors import cosine
 from biomedical_data_integration_spark.operators.value_matching import (
@@ -760,9 +760,9 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
             pairs, distribution similarity for numeric-numeric pairs, 0 for
             mixed-type pairs).
 
-    Against a Standard with a driver-sized source the same scores are
-    computed on the driver (:meth:`_driver_rows`) and returned as a local
-    frame; otherwise the distributed kernels run.
+    Against a Standard the same scores are computed on the driver
+    (:meth:`_standard_rows`) and returned as a local frame; any other
+    target runs the distributed kernels.
     """
 
     name = "coma"
@@ -770,35 +770,25 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
     def __init__(self, name_weight: float = 0.5):
         self.name_weight = name_weight
 
-    def _driver_rows(self, source, target) -> Optional[list]:
-        """The score table's rows computed on the driver, or None when the
-        distributed kernels must run.
+    def _standard_rows(self, source, target, std) -> list:
+        """The score table's rows against a Standard-backed target,
+        finished on the driver.
 
-        Applies when the target is Standard-backed (its vocabulary is
-        already Python data), no pair has distribution evidence, and the
-        source's string domain fits in ``planning.LOCAL_DOMAIN_LIMIT``
-        (one bounded read, the only job). The arithmetic replays the
-        distributed expressions below operation for operation: exact
-        Jaccard over spaces-trimmed values, each evidence rounded HALF_UP,
-        then the same weighted sum rounded again."""
+        Every input the score needs is vocabulary-bounded whatever the
+        source's size: name scores come from column names, ``nt`` from
+        the vocabulary (Python data), and per source column only its
+        distinct-value count ``ns`` and the values that hit the
+        vocabulary. One Spark read computes those two; no pins. A
+        Standard's wide frame is all-string, so no pair carries
+        distribution evidence. The arithmetic replays the distributed
+        expressions below operation for operation: exact Jaccard over
+        spaces-trimmed values, each evidence rounded HALF_UP, then the
+        same weighted sum rounded again (:meth:`_distributed_scores`)."""
         from collections import Counter, defaultdict
 
         from biomedical_data_integration_spark.functions.strings import (
             py_round_half_up,
         )
-        from biomedical_data_integration_spark.sources.standards import (
-            standard_of,
-        )
-
-        std = standard_of(target)
-        if std is None or (_numeric_columns(source) and _numeric_columns(target)):
-            return None
-        limit = planning.LOCAL_DOMAIN_LIMIT
-        s_rows = (
-            _unpivot_strings(source, "source", "sval").limit(limit + 1).collect()
-        )
-        if len(s_rows) > limit:
-            return None
 
         # inverted index: trimmed value -> target columns holding it
         holders: Dict[str, list] = defaultdict(list)
@@ -808,15 +798,24 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
             nt[tc] = len(domain)
             for v in domain:
                 holders[v].append(tc)
-        ns = Counter(r["source"] for r in s_rows)
-        inter = Counter(
-            (r["source"], tc) for r in s_rows for tc in holders.get(r["sval"], ())
+        vocab = local_frame(
+            source.sparkSession, [(v,) for v in holders], "vocab string"
+        )
+        per_column = (
+            _unpivot_strings(source, "source", "sval")
+            .join(F.broadcast(vocab), F.col("sval") == F.col("vocab"), "left")
+            .groupBy("source")
+            .agg(F.count("*").alias("ns"), F.collect_list("vocab").alias("hits"))
+            .collect()
         )
         scale = config.SIMILARITY_SCALE
-        value = {
-            (sc, tc): py_round_half_up(n / (ns[sc] + nt[tc] - n), scale)
-            for (sc, tc), n in inter.items()
-        }
+        value = {}
+        for r in per_column:
+            inter = Counter(tc for v in r["hits"] for tc in holders[v])
+            for tc, n in inter.items():
+                value[(r["source"], tc)] = py_round_half_up(
+                    n / (r["ns"] + nt[tc] - n), scale
+                )
         names = {
             (sc, tc): sim
             for sc, tc, sim in _name_score_rows(source.columns, target.columns)
@@ -828,17 +827,14 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
             rows.append((*pair, py_round_half_up(sim, scale)))
         return rows
 
-    def scores(self, source, target, allowed_pairs=None):
-        rows = self._driver_rows(source, target)
-        if rows is not None:
-            scores = local_frame(source.sparkSession, rows, SCORES_SCHEMA)
-            return _apply_allowed(scores, allowed_pairs)
+    def _distributed_scores(self, source, target) -> DataFrame:
+        """The score table from the distributed kernels."""
         nw, vw = self.name_weight, 1.0 - self.name_weight
         names = NameSimilaritySchemaMatcher().scores(source, target)
         jac = JaccardSchemaMatcher(threshold_levenshtein=1.0).scores(source, target)
         dist = DistributionBasedSchemaMatcher().scores(source, target)
         value = jac.unionByName(dist)
-        combined = (
+        return (
             names.withColumnRenamed("similarity", "name_sim")
             .join(
                 value.withColumnRenamed("similarity", "value_sim"),
@@ -855,7 +851,19 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
                 ).alias("similarity"),
             )
         )
-        return _apply_allowed(combined, allowed_pairs)
+
+    def scores(self, source, target, allowed_pairs=None):
+        from biomedical_data_integration_spark.sources.standards import (
+            standard_of,
+        )
+
+        std = standard_of(target)
+        if std is None:
+            scores = self._distributed_scores(source, target)
+        else:
+            rows = self._standard_rows(source, target, std)
+            scores = local_frame(source.sparkSession, rows, SCORES_SCHEMA)
+        return _apply_allowed(scores, allowed_pairs)
 
 
 class SimilarityFloodingSchemaMatcher(BaseSchemaMatcher):

@@ -375,11 +375,12 @@ class TfIdfValueMatcher(BaseValueMatcher):
     on *distinct* domains whose cardinality is known before launch. When
     the combined domain fits on the driver (``local_domain_limit``, default
     5000 — the reference's largest vocabulary is 4,478 values,
-    ``gdc_schema.json``), the identical formula runs locally via an
-    inverted term index: a 7-stage distributed job on a driver-sized
-    domain is pure scheduling overhead. Larger domains (100 TB text
-    columns) take the distributed path. Both paths return bit-compatible
-    raw similarities (verified against the DuckDB oracle).
+    ``gdc_schema.json``), :func:`match_values_pipeline` runs the identical
+    formula locally (:meth:`local_similarities`, an inverted term index):
+    a 7-stage distributed job on a driver-sized domain is pure scheduling
+    overhead. :meth:`similarities` is always the distributed kernel, for
+    larger domains (100 TB text columns). Both return bit-compatible raw
+    similarities (verified against the DuckDB oracle).
     """
 
     name = "tfidf"
@@ -492,14 +493,6 @@ class TfIdfValueMatcher(BaseValueMatcher):
         return staged.select(*PAIR, "value_key", tf.alias("tf"))
 
     def similarities(self, src: DataFrame, tgt: DataFrame) -> DataFrame:
-        if self.local_domain_limit is not None:
-            domains = _driver_domains(src, tgt, self.local_domain_limit)
-            if domains is not None:
-                return local_frame(
-                    src.sparkSession,
-                    self.local_similarities(*domains),
-                    SIMILARITIES_SCHEMA,
-                )
         # document frequency over the union corpus (a value present on both
         # sides counts once per side, like fitting on from+to lists)
         s_tf = self._tf_maps(src, "skey").withColumn("side", F.lit("s"))

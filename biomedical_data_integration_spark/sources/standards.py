@@ -90,7 +90,9 @@ class Standard:
 
     def to_wide_df(self, spark: SparkSession) -> DataFrame:
         """Wide table: one column per vocabulary attribute, rows = values
-        padded with nulls (``standards/gdc.py:58-69`` shape). Only for
+        padded with nulls (``standards/gdc.py:58-69`` shape). Every column
+        is a string (value names), so a numeric-numeric column pair with a
+        Standard target never occurs. Only for
         matcher boundaries that require a table-shaped target — domains are
         vocabulary-sized, so this stays driver-safe.
 

@@ -95,23 +95,43 @@ def _domains(spark, n_src, n_tgt):
 
 
 def test_tfidf_switches_local_to_distributed_at_boundary(spark):
+    from pyspark.sql import functions as F
+
     from biomedical_data_integration_spark.operators.value_matching import (
         TfIdfValueMatcher,
+        match_values_pipeline,
     )
 
-    src, tgt = _domains(spark, 4, 4)
-    # combined domain 8: limit 8 -> local (LocalTableScan, no Exchange);
-    # limit 7 -> distributed (shuffled term-sharing join)
-    local = TfIdfValueMatcher(local_domain_limit=8).similarities(src, tgt)
-    dist = TfIdfValueMatcher(local_domain_limit=7).similarities(src, tgt)
+    # combined domain 8 (4 source + 4 target values): limit 8 -> the
+    # pipeline finishes on the driver (a local frame, no Exchange);
+    # limit 7 -> the distributed kernel (shuffled term-sharing join)
+    src = spark.range(4).select(F.concat(F.lit("sv"), F.col("id")).alias("c1"))
+    tgt = spark.range(4).select(F.concat(F.lit("sv"), F.col("id")).alias("t1"))
+
+    def run(limit):
+        return match_values_pipeline(
+            src, tgt, [("c1", "t1")], method="tfidf",
+            method_args={"local_domain_limit": limit},
+        )
+
+    local, dist = run(8), run(7)
     local_plan = local._jdf.queryExecution().executedPlan().toString()
     dist_plan = dist._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in local_plan
+    assert local.isLocal() and "Exchange" not in local_plan
     assert "Exchange" in dist_plan
+    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, dist.collect()))
+
     # both kernels produce the same similarities
-    key = lambda r: (r["skey"], r["target_value"])
-    a = {key(r): round(r["similarity"], 6) for r in local.collect()}
-    b = {key(r): round(r["similarity"], 6) for r in dist.collect()}
+    s, t = _domains(spark, 4, 4)
+    m = TfIdfValueMatcher()
+    a = {
+        (skey, tval): round(sim, 6)
+        for _, _, skey, tval, sim in m.local_similarities(s.collect(), t.collect())
+    }
+    b = {
+        (r["skey"], r["target_value"]): round(r["similarity"], 6)
+        for r in m.similarities(s, t).collect()
+    }
     assert a == b
 
 

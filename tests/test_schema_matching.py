@@ -5,6 +5,7 @@ import pytest
 
 from biomedical_data_integration_spark import match_schema, top_matches
 from biomedical_data_integration_spark.operators.schema_matching import (
+    CompositeSchemaMatcher,
     get_schema_matcher,
     one_to_one_assignment,
 )
@@ -459,18 +460,30 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_coma_driver_form_matches_distributed(spark, monkeypatch):
-    """Against a Standard, coma scores on the driver; forcing the
-    distributed kernels (a zero domain limit) gives identical rows."""
-    from biomedical_data_integration_spark import planning
+@pytest.mark.parametrize("n_ids", [0, 6000])
+def test_coma_driver_form_matches_distributed(spark, n_ids):
+    """Against a Standard, coma scores on the driver whatever the source's
+    size (``n_ids`` adds an ID-like column of that many distinct values);
+    the distributed kernels, which any other target runs, give identical
+    rows. They read the vocabulary's long form here, as they would a
+    projection of the wide frame, but without unpivoting 736 columns."""
+    from pyspark.sql import functions as F
+
     from biomedical_data_integration_spark.sources.standards import get_standard
 
     source = _gdc_clinical(spark)
+    if n_ids:
+        ids = spark.range(n_ids).select(
+            F.concat(F.lit("case-"), F.col("id")).alias("case_id"),
+            F.lit("hispanic or latino").alias("Ethnicity"),
+            F.lit("Stage IA").alias("FIGO_stage"),
+            F.lit("female").alias("gender"),
+        )
+        source = source.withColumn("case_id", F.lit("unknown")).unionByName(ids)
     gdc = get_standard("gdc").to_wide_df(spark)
     driver = _coma_scores(source, gdc)
     assert driver.isLocal()
-    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", 0)
-    distributed = _coma_scores(source, gdc)
+    distributed = CompositeSchemaMatcher()._distributed_scores(source, gdc)
     assert not distributed.isLocal()
     got = _rows(driver)
     assert got == _rows(distributed)
@@ -480,25 +493,6 @@ def test_coma_driver_form_matches_distributed(spark, monkeypatch):
         for s, t, sim in _rows(get_schema_matcher("name_similarity").scores(source, gdc))
     )
     assert any(sim > 0.5 * names.get((s, t), 0.0) + 0.01 for s, t, sim in got)
-
-
-def test_coma_falls_back_above_source_domain_limit(spark, monkeypatch):
-    """The driver form needs the source's string domain (distinct
-    (column, trimmed value) rows) to fit the limit: one value over it
-    runs the distributed kernels, with the same rows."""
-    from biomedical_data_integration_spark import planning
-    from biomedical_data_integration_spark.sources.standards import get_standard
-
-    source = _gdc_clinical(spark)
-    gdc = get_standard("gdc").to_wide_df(spark)
-    domain = 10  # Ethnicity 4, FIGO_stage 2 after trim, gender 4
-    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", domain)
-    at_limit = _coma_scores(source, gdc)
-    assert at_limit.isLocal()
-    monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", domain - 1)
-    above = _coma_scores(source, gdc)
-    assert not above.isLocal()
-    assert _rows(at_limit) == _rows(above)
 
 
 def test_coma_numeric_pairs_take_distributed_path(spark):
