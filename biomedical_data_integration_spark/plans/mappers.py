@@ -8,21 +8,47 @@ materialization stream at 100 TB.
 
 Mapper catalog (reference ``bdikit/mapping_functions.py``):
 - ``IdentityValueMapper``   (:22-31) -> ``col(src)``
-- ``FunctionValueMapper``   (:34-48) -> Arrow-batched pandas UDF with
-  element-wise ``Series.map`` semantics (nulls pass through unmapped,
-  matching pandas ``Series.map`` / the reference)
+- ``FunctionValueMapper``   (:34-48) -> scalar Arrow UDF that calls the
+  function once per distinct value of each Arrow batch (dictionary
+  encode, map the dictionary, take back by index), with element-wise
+  ``Series.map`` semantics: nulls pass through without a call, matching
+  pandas ``Series.map`` / the reference
 - ``DictionaryMapper``      (:51-65) -> literal ``create_map`` lookup for
   small dicts (missing key -> null, the defaultdict(np.nan) semantics);
-  for big dictionaries use ``DictionaryMapper.as_join`` (broadcast LEFT
-  join against a mapping table — same null-on-missing semantics).
+  for big dictionaries ``DictionaryMapper.as_join`` (broadcast LEFT join
+  against a mapping table — same null-on-missing semantics). Both
+  kernels follow one key rule: a row matches key ``k`` iff
+  ``cast(value as string) == str(k)``; keys are deduplicated by
+  ``str(k)`` (the later entry wins) and a null key matches nothing. The
+  join keys an integral source on ``bigint`` (Spark casts integers to
+  canonical decimal strings, so only keys whose ``str(k)`` is one can
+  match) and any other source on the key string.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Mapping
+import datetime
+import decimal
+import re
+from functools import reduce
+from typing import Callable, Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    IntegerType,
+    LongType,
+    NullType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    _infer_type,
+    _merge_type,
+)
 
 from biomedical_data_integration_spark import planning
 from biomedical_data_integration_spark.session import local_frame
@@ -31,6 +57,13 @@ from biomedical_data_integration_spark.session import local_frame
 # broadcast-join plan rather than a literal CASE/map expression (Catalyst
 # literal maps are driver-serialized into the plan; fine for vocabularies,
 # wrong for a 10M-row mapping table).
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+# the decimal strings Spark's integer-to-string cast produces
+_LONG_KEY = re.compile(r"0|-?[1-9][0-9]*")
+_LONG_MIN, _LONG_MAX = -(2**63), 2**63 - 1
+# Python types whose PySpark-inferred type depends on the type alone
+_SCALAR_TYPES = (str, int, float, bool, bytes, bytearray, decimal.Decimal, datetime.date)
 
 
 class ValueMapper:
@@ -62,9 +95,21 @@ class FunctionValueMapper(ValueMapper):
 
     Reference semantics is ``Series.map(fn)`` (``mapping_functions.py:48``):
     the function sees one scalar at a time and nulls pass through without
-    calling ``fn``. Implemented as an Arrow-batched pandas UDF so the
-    Python boundary is vectorized per batch even though ``fn`` itself is
-    scalar.
+    calling ``fn``. Implemented as a scalar Arrow UDF that calls ``fn``
+    once per distinct value of each Arrow batch: the batch is dictionary
+    encoded, ``fn`` maps the dictionary only, and the result is taken
+    back by the indices (a null index stays null; a batch of nulls only
+    is all null). ``fn`` must therefore be deterministic, which Spark's
+    UDF contract already assumes.
+
+    ``fn`` sees the scalars a pandas UDF's ``Series.map`` would: the
+    dictionary goes through the pandas UDF converter, with one null added
+    when the batch has nulls so its dtype is the whole batch's (an integer
+    column with nulls arrives as float64), and NaN skips ``fn`` too. The
+    results go back to Arrow through the same converter, under the
+    session's time zone and Arrow safety settings read when the
+    expression is built. Nested values (arrays, maps), which Arrow
+    cannot hash, are mapped row by row.
 
     ``return_type`` must be declared (Spark needs a schema); default
     ``string`` matches the stringly-typed harmonization domain.
@@ -75,15 +120,42 @@ class FunctionValueMapper(ValueMapper):
         self.return_type = return_type
 
     def expr(self, source_column: str) -> Column:
-        from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.functions import arrow_udf
+        from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import _parse_datatype_string
 
         fn = self.function
+        spark_type = self.return_type
+        if isinstance(spark_type, str):
+            spark_type = _parse_datatype_string(spark_type)
+        arrow_type = to_arrow_type(spark_type)
+        conf = SparkSession.active().conf
+        converter = ArrowStreamPandasSerializer(
+            conf.get("spark.sql.session.timeZone"),
+            conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true",
+            conf.get("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled")
+            == "true",
+        )
 
-        @pandas_udf(self.return_type)
-        def _apply(s):  # pd.Series -> pd.Series
-            return s.map(fn, na_action="ignore")
+        def _apply(values: pa.Array) -> pa.Array:
+            import pyarrow.compute as pc
 
-        return _apply(F.col(source_column))
+            if pa.types.is_nested(values.type):
+                # arrays and maps have no hash kernel: each row is its own value
+                distinct, indices = values, None
+            else:
+                encoded = pc.dictionary_encode(values)
+                distinct, indices = encoded.dictionary, encoded.indices
+                if not len(distinct):
+                    return pa.nulls(len(values), arrow_type)
+                if values.null_count:
+                    distinct = pa.concat_arrays([distinct, pa.nulls(1, distinct.type)])
+            mapped = converter.arrow_to_pandas(distinct, 0).map(fn, na_action="ignore")
+            out = converter._create_array(mapped, arrow_type, spark_type, arrow_cast=True)
+            return out if indices is None else out.take(indices)
+
+        return arrow_udf(_apply, spark_type)(F.col(source_column))
 
 
 class ExpressionValueMapper(ValueMapper):
@@ -123,23 +195,27 @@ class DictionaryMapper(ValueMapper):
 
     Small dicts compile to a literal ``map`` expression (pure codegen, no
     shuffle). Large dicts should go through :meth:`as_join`, a broadcast
-    LEFT join, which has identical missing->null semantics.
+    LEFT join, which has identical missing->null semantics. Both kernels
+    match a row to key ``k`` iff ``cast(value as string) == str(k)``, over
+    the keys deduplicated by ``str(k)`` (the later entry wins); a null key
+    matches nothing.
     """
 
     def __init__(self, dictionary: Mapping):
         self.dictionary = dict(dictionary)
+        self._entries = {str(k): v for k, v in self.dictionary.items() if k is not None}
 
     def expr(self, source_column: str) -> Column:
-        if planning.dict_mapper_kernel(len(self.dictionary)) != "literal":
+        if self.is_large():
             raise ValueError(
-                f"Dictionary with {len(self.dictionary)} entries is too large "
+                f"Dictionary with {len(self._entries)} entries is too large "
                 "for a literal expression; materialize_mapping will use a "
                 "broadcast join (as_join) instead."
             )
-        if not self.dictionary:
+        if not self._entries:
             return F.lit(None).cast("string")
         pairs: list[Column] = []
-        for k, v in self.dictionary.items():
+        for k, v in self._entries.items():
             pairs.append(F.lit(k))
             pairs.append(F.lit(v))
         # element_at returns null on missing key; try_element_at also covers
@@ -150,19 +226,38 @@ class DictionaryMapper(ValueMapper):
         ).otherwise(F.try_element_at(F.create_map(*pairs), key))
 
     def is_large(self) -> bool:
-        return planning.dict_mapper_kernel(len(self.dictionary)) != "literal"
+        return planning.dict_mapper_kernel(len(self._entries)) != "literal"
 
     def as_join(
         self, df: DataFrame, source_column: str, target_column: str
     ) -> DataFrame:
-        """Broadcast-LEFT-join rewrite for large dictionaries."""
-        spark = df.sparkSession
-        items = [(str(k) if k is not None else None, v) for k, v in self.dictionary.items()]
-        mapping = local_frame(spark, items, ["__dm_key", target_column])
+        """Broadcast-LEFT-join rewrite for large dictionaries.
+
+        An integral source joins on a ``bigint`` key, so the probe is a
+        long hash lookup with no per-row string cast: only keys whose
+        ``str(k)`` is a canonical decimal integer in long range are kept,
+        since no other key equals an integer cast to string. Any other
+        source joins its string cast on the key string.
+        """
+        source_type = df.select(source_column).schema.fields[0].dataType
+        if isinstance(source_type, _INTEGRAL):
+            key_type = LongType()
+            items = [
+                (n, v) for k, v in self._entries.items()
+                if _LONG_KEY.fullmatch(k) and _LONG_MIN <= (n := int(k)) <= _LONG_MAX
+            ]
+            source_key = F.col(source_column)
+        else:
+            key_type = StringType()
+            items = list(self._entries.items())
+            source_key = F.col(source_column).cast("string")
+        schema = StructType([
+            StructField("__dm_key", key_type),
+            StructField(target_column, _value_type(df.sparkSession, self._entries.values())),
+        ])
+        mapping = local_frame(df.sparkSession, items, schema)
         joined = df.join(
-            F.broadcast(mapping),
-            F.col(source_column).cast("string") == F.col("__dm_key"),
-            "left",
+            F.broadcast(mapping), source_key == F.col("__dm_key"), "left"
         )
         return joined.drop("__dm_key")
 
@@ -170,3 +265,23 @@ class DictionaryMapper(ValueMapper):
         if self.is_large():
             return self.as_join(df, source_column, target_column)
         return df.withColumn(target_column, self.expr(source_column))
+
+
+def _value_type(spark: SparkSession, values: Iterable) -> DataType:
+    """The type ``createDataFrame``'s row inference gives a column of
+    ``values``, without its per-row pass: each scalar Python type is
+    inferred once, and only other values (datetimes, lists, maps, rows)
+    go through the row inference. No non-null value gives ``string``.
+    """
+    first_of_type: dict = {}
+    others = []
+    for v in values:
+        if type(v) in _SCALAR_TYPES:
+            first_of_type.setdefault(type(v), v)
+        elif v is not None:
+            others.append((v,))
+    types = [_infer_type(v) for v in first_of_type.values()]
+    if others:
+        types.append(spark._inferSchemaFromList(others, names=["v"]).fields[0].dataType)
+    merged = reduce(_merge_type, types, NullType())
+    return StringType() if isinstance(merged, NullType) else merged

@@ -6,6 +6,14 @@ plan compiles to a single Spark projection (plus broadcast joins for large
 dictionaries) — plan construction touches no data, and execution is one
 narrow, shuffle-free ``select`` that streams at any scale.
 
+Per row, that projection does JVM or Arrow C++ work only. A dictionary
+matches a row to key ``k`` iff ``cast(value as string) == str(k)`` in
+both of its kernels (keys deduplicated by ``str(k)``, the later entry
+winning); the broadcast join probes an integral column on a ``bigint``
+key and any other column on the key string. A ``FunctionValueMapper`` is
+a scalar Arrow UDF that calls the Python function once per distinct
+value of each Arrow batch, not once per row.
+
 Semantics mirrored from the reference:
 - ``create_mapper`` polymorphic dispatch           ``bdikit/api.py:740-831``
 - matches-list -> DictionaryMapper                 ``api.py:834-848``

@@ -148,8 +148,8 @@ def streaming_sessionize(
 def streaming_materialize(stream: DataFrame, mapping_spec) -> DataFrame:
     """Harmonization on a stream: materialize_mapping is a stateless
     projection, so the same plan compiles onto a streaming DataFrame
-    unchanged (small-dictionary mappers only — stream-stream joins would
-    need watermarks)."""
+    unchanged (a large dictionary's broadcast join is a stream-static
+    join against a driver-built relation, which needs no watermark)."""
     from biomedical_data_integration_spark.plans.spec import materialize_mapping
 
     return materialize_mapping(stream, mapping_spec)

@@ -1,6 +1,9 @@
 """Unit tests for the mapper layer (reference
 ``tests/test_mapping_functions.py`` coverage, SURVEY §2.2)."""
 
+import datetime
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,3 +146,196 @@ def test_expression_value_mapper_literal_braces(spark):
         ],
     )
     assert {r["masked"] for r in out.collect()} == {"abXXXcd", "x99y"}
+
+
+def _rows_through(df, dictionary, kernel, monkeypatch, column):
+    """Materialize ``column`` through ``dictionary`` on the named kernel;
+    the join is forced by lowering the literal limit below the entry
+    count."""
+    from biomedical_data_integration_spark import planning
+
+    with monkeypatch.context() as m:
+        if kernel == "join":
+            m.setattr(planning, "LITERAL_DICT_LIMIT", 0)
+        out = materialize_mapping(
+            df,
+            [{"source": "id", "target": "id"},
+             {"source": column, "target": "y", "mapper": DictionaryMapper(dictionary)}],
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastHashJoin" in plan) == (kernel == "join")
+        return sorted(tuple(r) for r in out.collect())
+
+
+@pytest.mark.parametrize(
+    "dictionary",
+    [
+        {"1": "one", "2": "two", "1.5": "one and a half", "x": "ex"},
+        {1: "one", 2: "two", -3: "minus three", 2**63: "too big"},
+        {1: "one", "2": "two", 1.5: "one and a half", "x": "ex", False: "false",
+         None: "null key", "-0": "minus zero", "03": "padded"},
+    ],
+    ids=["str", "int", "mixed"],
+)
+def test_dictionary_kernels_agree(spark, monkeypatch, dictionary):
+    """Literal and join kernels give the same rows: a row matches key k
+    iff cast(value as string) == str(k), whatever the key's type, on
+    string, bigint, int and double sources, with a null source value and
+    values missing from the dictionary."""
+    df = spark.createDataFrame(
+        [(0, "1", 1, 1, 1.5), (1, "2", 2, 2, 1.0), (2, "x", -3, -3, 2.0),
+         (3, None, None, None, None), (4, "missing", 0, 3, -0.0), (5, "False", 7, 0, 3.5)],
+        "id int, s string, b bigint, i int, d double",
+    )
+    matched = 0
+    for column in ("s", "b", "i", "d"):
+        literal = _rows_through(df, dictionary, "literal", monkeypatch, column)
+        joined = _rows_through(df, dictionary, "join", monkeypatch, column)
+        assert literal == joined, column
+        matched += any(v is not None for _, v in literal)
+    assert matched >= 3
+
+
+def test_join_kernel_one_row_per_key_string(spark):
+    """Two keys with one string form give one mapping row (the later
+    entry wins), so the LEFT join never duplicates an input row."""
+    big = {i: f"v{i}" for i in range(10_001)}
+    big["5"] = "five"
+    m = DictionaryMapper(big)
+    assert m.is_large()
+    df = spark.range(10).withColumn("s", F.col("id").cast("string"))
+    for column in ("id", "s"):
+        out = m.rewrite(df, column, "y").collect()
+        assert len(out) == 10
+        assert {r[column]: r["y"] for r in out}[5 if column == "id" else "5"] == "five"
+
+
+def _series_map_reference(fn, return_type):
+    """The parent form of FunctionValueMapper: a pandas UDF running
+    ``Series.map(fn, na_action="ignore")`` over every row of a batch."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(return_type)
+    def _reference(s: pd.Series) -> pd.Series:
+        return s.map(fn, na_action="ignore")
+
+    return _reference
+
+
+@pytest.mark.parametrize(
+    "rows, ddl, fn, return_type",
+    [
+        (["ab", None, "cd", "ab"], "string", lambda v: v.upper(), "string"),
+        (["ab", None, "cde", "ab"], "string", lambda v: len(v), "bigint"),
+        ([3, 1, 3, 2], "bigint", repr, "string"),
+        ([3, None, 3, 2], "bigint", repr, "string"),
+        ([3, 1, 3, 2], "bigint", lambda v: v * 2, "bigint"),
+        ([3, None, 3, 2], "bigint", lambda v: v * 0.5, "double"),
+        ([1.5, float("nan"), None, 1.5, -0.0, 0.0], "double", repr, "string"),
+        ([1.5, float("nan"), None, 1.5], "double", lambda v: v + 1, "double"),
+        ([True, None, False, True], "boolean", lambda v: "yes" if v else "no", "string"),
+        ([datetime.date(2024, 2, 29), None, datetime.date(1999, 1, 1)], "date",
+         repr, "string"),
+        ([datetime.datetime(2024, 2, 29, 12, 30), None,
+          datetime.datetime(2024, 2, 29, 12, 30)], "timestamp", repr, "string"),
+        ([[1, 2], None, [1, 2], []], "array<bigint>", lambda v: str(list(v)), "string"),
+        ([{"k": 1}, None, {"k": 1}], "map<string,bigint>", lambda v: len(v), "bigint"),
+    ],
+)
+def test_function_mapper_matches_series_map(spark, rows, ddl, fn, return_type):
+    """Per-distinct-value evaluation gives the rows ``Series.map`` over
+    the whole batch gives: the same scalars reach ``fn`` (float64 for an
+    integer batch with nulls, NaN skipped) and the same results come
+    back; arrays and maps, mapped row by row, too."""
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(rows)], f"id int, x {ddl}"
+    ).coalesce(1)
+    got = df.select(
+        "id",
+        FunctionValueMapper(fn, return_type).expr("x").alias("new"),
+        _series_map_reference(fn, return_type)(F.col("x")).alias("ref"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert repr(r["new"]) == repr(r["ref"]), (r["id"], r["new"], r["ref"])
+
+
+def test_function_mapper_all_null_batch_is_null(spark):
+    """A batch holding only nulls maps to nulls without calling ``fn``
+    (``Series.map`` over an all-NaT batch returned datetime64, which the
+    string return type rejected)."""
+    df = spark.createDataFrame([(None,), (None,)], "x timestamp").coalesce(1)
+    out = df.select(FunctionValueMapper(repr).expr("x").alias("y")).collect()
+    assert [r["y"] for r in out] == [None, None]
+
+
+def test_function_mapper_called_once_per_distinct_value_per_batch(spark):
+    """One partition, batches of 10 rows: every row of a batch with the
+    same value gets the same call tag, the tags count the distinct
+    non-null values batch by batch, and ``fn`` never sees a null."""
+    calls = [0]
+
+    def tag(v):
+        assert v is not None and v == v
+        calls[0] += 1
+        return f"{v}#{calls[0]}"
+
+    values = ["a", "b", None, "a", "c", "b", None, "a"] * 4  # 32 rows
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)], "id int, x string"
+    ).coalesce(1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # the UDF's type hints resolve: no hint warning
+        mapped = FunctionValueMapper(tag).expr("x")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10")
+    try:
+        out = df.select("id", mapped.alias("y")).collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    y = {r["id"]: r["y"] for r in out}
+    expected_calls = 0
+    for start in range(0, len(values), 10):
+        batch = range(start, min(start + 10, len(values)))
+        tags = {}
+        for i in batch:
+            if values[i] is None:
+                assert y[i] is None
+            else:
+                assert y[i].split("#")[0] == values[i]
+                assert tags.setdefault(values[i], y[i]) == y[i]
+        expected_calls += len(tags)
+    assert len({t for t in y.values() if t is not None}) == expected_calls
+
+
+def test_streaming_materialize_function_mapper_and_typed_join(spark, monkeypatch):
+    """The per-distinct-value UDF and the bigint-keyed join both compile
+    onto a stream: materialization stays one stateless projection."""
+    import tempfile
+
+    from biomedical_data_integration_spark import planning
+    from biomedical_data_integration_spark.streaming import streaming_materialize
+
+    monkeypatch.setattr(planning, "LITERAL_DICT_LIMIT", 1)
+    df = spark.createDataFrame(
+        [(1, "ab"), (2, None), (3, "ab")], "k bigint, s string"
+    )
+    with tempfile.TemporaryDirectory() as d:
+        df.write.parquet(f"{d}/in")
+        stream = spark.readStream.schema(df.schema).parquet(f"{d}/in")
+        out = streaming_materialize(stream, [
+            {"source": "k", "target": "name",
+             "mapper": DictionaryMapper({1: "one", "3": "three", "x": "ex"})},
+            {"source": "s", "target": "upper", "mapper": FunctionValueMapper(str.upper)},
+        ])
+        assert out.isStreaming
+        sq = (
+            out.writeStream.format("memory").queryName("mat_fn_join")
+            .outputMode("append").option("checkpointLocation", f"{d}/ckpt").start()
+        )
+        try:
+            sq.processAllAvailable()
+        finally:
+            sq.stop()
+        got = {tuple(r) for r in spark.sql("select * from mat_fn_join").collect()}
+    assert got == {(None, None), ("one", "AB"), ("three", "AB")}

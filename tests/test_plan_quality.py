@@ -14,11 +14,11 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 # queries whose plans legitimately contain Arrow-batched Python exec
-# nodes (mapInPandas codecs / pandas-UDF mappers)
+# nodes (mapInPandas codecs / Arrow-UDF mappers)
 ARROW_OK = {
     "multimodal_image_features",   # mapInPandas decode
     "multimodal_audio_features",   # mapInPandas decode (audio leg)
-    "harmonize_lineitem",          # FunctionValueMapper (pandas UDF)
+    "harmonize_lineitem",          # FunctionValueMapper (Arrow UDF)
     "harmonize_end_to_end",        # user-owned lambda mapper
     "bpe_encode_persisted_documents",  # encode_bpe pandas UDF (declared)
 }
@@ -330,3 +330,41 @@ def test_bpe_persisted_encode_has_no_training(all_plans):
     assert plan.count("FileScan") == 1
     assert "ArrowEvalPython" in plan
     assert "Exchange" not in plan
+
+
+def test_integral_dictionary_join_is_bigint_keyed(spark, monkeypatch):
+    """A dictionary past LITERAL_DICT_LIMIT materialized over an integral
+    column plans a BroadcastHashJoin on a bigint key: no string cast in
+    the join condition, the mapping relation is built with a declared
+    schema, never PySpark's per-row schema inference, and building the
+    plan runs no job."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    import biomedical_data_integration_spark as bdi
+    from biomedical_data_integration_spark import planning
+
+    def _no_row_inference(*args, **kwargs):
+        raise AssertionError("mapping relation typed by per-row inference")
+
+    monkeypatch.setattr(SparkSession, "_inferSchemaFromList", _no_row_inference)
+    brands = {str(i): f"Brand#{i % 55}" for i in range(planning.LITERAL_DICT_LIMIT + 1)}
+    df = spark.range(20).select(
+        F.col("id").alias("l_partkey"), F.col("id").cast("int").alias("l_suppkey")
+    )
+    sc = spark.sparkContext
+    for column in ("l_partkey", "l_suppkey"):
+        group = f"materialize-build-{column}"
+        sc.setJobGroup(group, group)
+        try:
+            out = bdi.materialize_mapping(
+                df, [{"source": column, "target": "brand", "mapper": bdi.DictionaryMapper(brands)}]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        join = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+        assert join and all("string" not in line for line in join), plan
+        assert "HashedRelationBroadcastMode(List(input[0, bigint" in plan, plan
+        assert {r["brand"] for r in out.collect()} == {f"Brand#{i}" for i in range(20)}
