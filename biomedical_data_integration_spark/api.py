@@ -34,20 +34,7 @@ from biomedical_data_integration_spark.plans.spec import (  # noqa: F401 (re-exp
     merge_mappings,
 )
 from biomedical_data_integration_spark.session import local_frame
-from biomedical_data_integration_spark.sources.standards import Standard, get_standard
-
-
-def _resolve_target_table(
-    spark: SparkSession, target: Union[str, DataFrame, Standard]
-) -> DataFrame:
-    """Standard name -> wide vocabulary table (``bdikit/api.py:88-96``)."""
-    if isinstance(target, DataFrame):
-        return target
-    if isinstance(target, str):
-        target = get_standard(target)
-    if isinstance(target, Standard):
-        return target.to_wide_df(spark)
-    raise ValueError(f"Invalid target: {target!r}")
+from biomedical_data_integration_spark.sources.standards import Standard, resolve_target
 
 
 def match_schema(
@@ -61,12 +48,11 @@ def match_schema(
     Returns a small DataFrame (source, target); unmatched sources get ""
     (``one2one/base.py:9-15``).
     """
-    spark = source.sparkSession
-    target_df = _resolve_target_table(spark, target)
+    target = resolve_target(target)
     matcher = get_schema_matcher(method, **(method_args or {}))
-    scores = matcher.scores(source, target_df)
+    scores = matcher.scores(source, target)
     assignment = one_to_one_assignment(scores, source.columns)
-    return local_frame(spark, assignment, "source string, target string")
+    return local_frame(source.sparkSession, assignment, "source string, target string")
 
 
 def top_matches(
@@ -79,12 +65,11 @@ def top_matches(
 ) -> DataFrame:
     """Top-k candidate target columns per source column
     (``bdikit/api.py:99-152``): score -> window top-k."""
-    spark = source.sparkSession
     if columns:
         source = source.select(*columns)
-    target_df = _resolve_target_table(spark, target)
+    target = resolve_target(target)
     matcher = get_schema_matcher(method, **(method_args or {}))
-    scores = matcher.scores(source, target_df)
+    scores = matcher.scores(source, target)
     w = Window.partitionBy("source").orderBy(F.desc("similarity"), F.asc("target"))
     return (
         scores.withColumn("__rk", F.row_number().over(w))
@@ -286,8 +271,7 @@ def preview_domain(
     Standard branch -> (value_name, value_description, column_description);
     DataFrame branch -> (value_name).
     """
-    if isinstance(dataset, str):
-        dataset = get_standard(dataset)
+    dataset = resolve_target(dataset)
     if isinstance(dataset, Standard):
         spark = spark or SparkSession.getActiveSession()
         if spark is None:

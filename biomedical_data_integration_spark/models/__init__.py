@@ -32,6 +32,7 @@ from biomedical_data_integration_spark.functions.strings import (
     clean_string,
 )
 from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.sources.standards import Standard
 
 _HEX = "0123456789abcdef"
 
@@ -169,23 +170,23 @@ class HashingColumnEmbedder(ColumnEmbedder):
         self.sample_values = sample_values
         self.sample_strategy = sample_strategy
 
-    def _long_form(self, df: DataFrame, cols: List[str]) -> DataFrame:
-        """One scan: unpivot all requested columns to (column_name, value).
-
-        Standard-backed frames (``Standard.to_wide_df``) read the
-        vocabulary's native long form instead — same row multiset, ~25x
-        cheaper at GDC width (see ``sources.standards.long_values_of``)."""
-        from biomedical_data_integration_spark.sources.standards import (
-            long_values_of,
-        )
-
-        long = long_values_of(df)
-        if long is not None:
-            if set(cols) != set(df.columns):
+    def _long_form(self, table, cols: List[str], spark) -> DataFrame:
+        """(column_name, value) of the requested columns, one row per
+        non-null value. A DataFrame is unpivoted in one scan; a Standard's
+        rows come from its vocabulary's long form (``Standard.to_long_df``,
+        built in ``spark``), the same row multiset its wide frame would
+        unpivot to."""
+        if isinstance(table, Standard):
+            long = (
+                table.to_long_df(spark)
+                .where(F.col("value").isNotNull())
+                .select("column_name", "value")
+            )
+            if set(cols) != set(table.columns):
                 long = long.where(F.col("column_name").isin(list(cols)))
             return long
         return (
-            df.select([F.col(c).cast("string").alias(c) for c in cols])
+            table.select([F.col(c).cast("string").alias(c) for c in cols])
             .unpivot([], cols, "column_name", "value")
             .where(F.col("value").isNotNull())
         )
@@ -297,7 +298,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
             return self._tfidf_row_sample(df, cols, self.sample_values)
         if self.sample_strategy == "pmi":
             return self._pmi_sample(df, cols, self.sample_values)
-        return self._sampled_from_long(self._long_form(df, cols))
+        return self._sampled_from_long(self._long_form(df, cols, df.sparkSession))
 
     def _sampled_from_long(self, long_df: DataFrame) -> DataFrame:
         """Strategy dispatch for every sampler that needs only the
@@ -542,8 +543,10 @@ class HashingColumnEmbedder(ColumnEmbedder):
         if self.sample_strategy in ("tfidf_row", "pmi"):
             return None
 
-        def tagged(df: DataFrame, side: str) -> DataFrame:
-            return self._long_form(df, df.columns).withColumn(
+        spark = source.sparkSession
+
+        def tagged(table, side: str) -> DataFrame:
+            return self._long_form(table, table.columns, spark).withColumn(
                 "column_name", F.concat(F.lit(side + "\x1f"), F.col("column_name"))
             )
 
@@ -558,7 +561,6 @@ class HashingColumnEmbedder(ColumnEmbedder):
             ),
         )
         # all-null columns never appear in the long form; re-add per side
-        spark = source.sparkSession
         all_cols = local_frame(
             spark,
             [("s", c) for c in source.columns] + [("t", c) for c in target.columns],

@@ -49,6 +49,7 @@ from biomedical_data_integration_spark.operators.value_matching import (
     match_values_pipeline,
 )
 from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.sources.standards import Standard
 
 SCORES_SCHEMA = "source string, target string, similarity double"
 
@@ -76,37 +77,34 @@ def _apply_allowed(scores: DataFrame, allowed_pairs: Optional[DataFrame]) -> Dat
     )
 
 
-def _unpivot_strings(df: DataFrame, colname: str, valname: str) -> DataFrame:
+def _unpivot_strings(table, colname: str, valname: str, spark=None) -> DataFrame:
     """(column, distinct trimmed value) long form of a table's string columns.
 
-    Native ``unpivot`` (ONE Expand node over one scan) — a union of
-    per-column selects is O(n_cols) plan branches each carrying the whole
-    child plan, which at real vocabulary width (the 736-column GDC wide
-    table) took minutes to optimize and OOM'd the driver on constraint
-    inference.
-
-    Standard-backed frames (``Standard.to_wide_df``) skip even the Expand:
-    the vocabulary's native long form is read directly (~25x cheaper at
-    GDC width — the wide table is a 736-column local relation whose every
-    evaluation re-runs Arrow conversion)."""
-    from biomedical_data_integration_spark.sources.standards import long_values_of
-
-    long = long_values_of(df)
-    if long is not None:
+    A Standard's comes from its vocabulary's long form
+    (``Standard.to_long_df``, built in ``spark``): all its columns are
+    strings, and it holds exactly the non-null values a wide frame would
+    unpivot to. A DataFrame's uses native ``unpivot`` (ONE Expand node
+    over one scan) — a union of per-column selects is O(n_cols) plan
+    branches each carrying the whole child plan, which at real
+    vocabulary width (736 columns) took minutes to optimize and OOM'd
+    the driver on constraint inference."""
+    if isinstance(table, Standard):
         return (
-            long.select(
+            table.to_long_df(spark)
+            .where(F.col("value").isNotNull())
+            .select(
                 F.col("column_name").alias(colname),
                 F.trim(F.col("value")).alias(valname),
             )
             .distinct()
         )
-    cols = _string_columns(df)
+    cols = _string_columns(table)
     if not cols:
         return local_frame(
-            df.sparkSession, [], f"{colname} string, {valname} string"
+            table.sparkSession, [], f"{colname} string, {valname} string"
         )
     return (
-        df.select([F.col(c).cast("string").alias(c) for c in cols])
+        table.select([F.col(c).cast("string").alias(c) for c in cols])
         .unpivot([], cols, colname, valname)
         .where(F.col(valname).isNotNull())
         .select(F.col(colname), F.trim(F.col(valname)).alias(valname))
@@ -115,14 +113,16 @@ def _unpivot_strings(df: DataFrame, colname: str, valname: str) -> DataFrame:
 
 
 class BaseSchemaMatcher:
-    """Score all candidate column pairs (higher = more similar)."""
+    """Score all candidate column pairs (higher = more similar). The
+    target is a DataFrame or a Standard, read through the same
+    ``columns``/``schema`` names and its vocabulary."""
 
     name = "base"
 
     def scores(
         self,
         source: DataFrame,
-        target: DataFrame,
+        target: Union[DataFrame, Standard],
         allowed_pairs: Optional[DataFrame] = None,
     ) -> DataFrame:
         raise NotImplementedError
@@ -452,9 +452,9 @@ class JaccardSchemaMatcher(BaseSchemaMatcher):
         s = _unpivot_strings(source, "source", "sval").localCheckpoint(
             eager=True
         )
-        t = _unpivot_strings(target, "target", "tval").localCheckpoint(
-            eager=True
-        )
+        t = _unpivot_strings(
+            target, "target", "tval", source.sparkSession
+        ).localCheckpoint(eager=True)
 
         if self.threshold >= 1.0:
             joined = s.join(t, F.col("sval") == F.col("tval"))
@@ -524,13 +524,12 @@ class DistributionBasedSchemaMatcher(BaseSchemaMatcher):
         self.exact = exact
         self.sample_k = sample_k
 
-    def _sketch(self, df: DataFrame, colname: str) -> DataFrame:
+    def _sketch(self, df, colname: str, spark) -> DataFrame:
         from biomedical_data_integration_spark.functions.hashing import (
             md5_bigint,
         )
 
         cols = _numeric_columns(df)
-        spark = df.sparkSession
         if not cols:
             return local_frame(
                 spark, [], f"{colname} string, qs array<double>"
@@ -731,8 +730,9 @@ class DistributionBasedSchemaMatcher(BaseSchemaMatcher):
         )
 
     def scores(self, source, target, allowed_pairs=None):
-        s = self._sketch(source, "source").withColumnRenamed("qs", "qs_s")
-        t = self._sketch(target, "target").withColumnRenamed("qs", "qs_t")
+        spark = source.sparkSession
+        s = self._sketch(source, "source", spark).withColumnRenamed("qs", "qs_s")
+        t = self._sketch(target, "target", spark).withColumnRenamed("qs", "qs_t")
         emd = F.aggregate(
             F.zip_with("qs_s", "qs_t", lambda a, b: F.abs(a - b)),
             F.lit(0.0),
@@ -770,16 +770,16 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
     def __init__(self, name_weight: float = 0.5):
         self.name_weight = name_weight
 
-    def _standard_rows(self, source, target, std) -> list:
-        """The score table's rows against a Standard-backed target,
-        finished on the driver.
+    def _standard_rows(self, source, std) -> list:
+        """The score table's rows against a Standard, finished on the
+        driver.
 
         Every input the score needs is vocabulary-bounded whatever the
         source's size: name scores come from column names, ``nt`` from
         the vocabulary (Python data), and per source column only its
         distinct-value count ``ns`` and the values that hit the
         vocabulary. One Spark read computes those two; no pins. A
-        Standard's wide frame is all-string, so no pair carries
+        Standard's columns are all strings, so no pair carries
         distribution evidence. The arithmetic replays the distributed
         expressions below operation for operation: exact Jaccard over
         spaces-trimmed values, each evidence rounded HALF_UP, then the
@@ -818,7 +818,7 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
                 )
         names = {
             (sc, tc): sim
-            for sc, tc, sim in _name_score_rows(source.columns, target.columns)
+            for sc, tc, sim in _name_score_rows(source.columns, std.columns)
         }
         nw, vw = self.name_weight, 1.0 - self.name_weight
         rows = []
@@ -853,16 +853,11 @@ class CompositeSchemaMatcher(BaseSchemaMatcher):
         )
 
     def scores(self, source, target, allowed_pairs=None):
-        from biomedical_data_integration_spark.sources.standards import (
-            standard_of,
-        )
-
-        std = standard_of(target)
-        if std is None:
-            scores = self._distributed_scores(source, target)
-        else:
-            rows = self._standard_rows(source, target, std)
+        if isinstance(target, Standard):
+            rows = self._standard_rows(source, target)
             scores = local_frame(source.sparkSession, rows, SCORES_SCHEMA)
+        else:
+            scores = self._distributed_scores(source, target)
         return _apply_allowed(scores, allowed_pairs)
 
 
@@ -1094,6 +1089,9 @@ class EmbeddingSchemaMatcher(BaseSchemaMatcher):
             scores = local_frame(spark, pairs, SCORES_SCHEMA)
             return _apply_allowed(scores, allowed_pairs)
 
+        if isinstance(target, Standard):
+            # the embedder samples table rows, so it needs the wide form
+            target = target.to_wide_df(source.sparkSession)
         s = self.embedder.column_embeddings(source).withColumnsRenamed(
             {"column_name": "source", "embedding": "vec_s"}
         )

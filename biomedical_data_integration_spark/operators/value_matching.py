@@ -167,12 +167,11 @@ def target_value_domain(
     """
     from biomedical_data_integration_spark.sources.standards import (
         Standard,
-        get_standard,
+        resolve_target,
     )
 
     tgt_cols = sorted({t for _, t in pairs})
-    if isinstance(target, str):
-        target = get_standard(target)
+    target = resolve_target(target)
     if isinstance(target, Standard):
         # the distributed form below, on the driver: tkey = trim(orig)
         # (spaces only, like Spark's trim), min(orig) per key (code-point

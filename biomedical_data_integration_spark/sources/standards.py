@@ -8,8 +8,10 @@ implementation is GDC, a 2.6 MB JSON loaded eagerly and pivoted into a
 The Spark-native model keeps the vocabulary LONG-FORM —
 ``(column_name, column_description, value, value_description)`` — because
 joins and explodes beat a wide padded table, and the long table broadcasts
-(driver-sized). The wide form is synthesized only at matcher boundaries
-(some schema matchers want a table-shaped target).
+(driver-sized). A Standard is itself a matcher target (:func:`resolve_target`):
+matchers read its names and all-string :attr:`~Standard.schema`, its long
+form, or its vocabulary domain. The wide form is built only for the
+embedding matcher's row-level fallback (see :meth:`Standard.to_wide_df`).
 
 Registry mirrors ``standards/standard_factory.py:7-28``: resolve by name,
 helpful error listing valid names. A built-in demo vocabulary covering the
@@ -22,10 +24,9 @@ from __future__ import annotations
 import json
 import os
 import weakref
-from typing import Dict, List, Mapping, Optional
+from typing import Dict, List, Mapping, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from biomedical_data_integration_spark.session import local_frame
@@ -52,6 +53,17 @@ class Standard:
     def get_column_values(self, column_names: List[str]) -> Dict[str, List[str]]:
         meta = self.get_column_metadata(column_names)
         return {name: m.get("value_names", []) for name, m in meta.items()}
+
+    @property
+    def columns(self) -> List[str]:
+        """The vocabulary's attribute names, as a matcher reads a target's."""
+        return self.get_columns()
+
+    @property
+    def schema(self) -> StructType:
+        """The target schema: one string column per attribute (values are
+        value names), so a numeric-numeric pair with a Standard never occurs."""
+        return StructType([StructField(c, StringType()) for c in self.get_columns()])
 
     def _per_session(self, attr: str, spark: SparkSession, build) -> DataFrame:
         """``build()``'s frame, memoized on this standard per session.
@@ -90,19 +102,19 @@ class Standard:
 
     def to_wide_df(self, spark: SparkSession) -> DataFrame:
         """Wide table: one column per vocabulary attribute, rows = values
-        padded with nulls (``standards/gdc.py:58-69`` shape). Every column
-        is a string (value names), so a numeric-numeric column pair with a
-        Standard target never occurs. Only for
-        matcher boundaries that require a table-shaped target — domains are
-        vocabulary-sized, so this stays driver-safe.
+        padded with nulls (``standards/gdc.py:58-69`` shape), every column
+        a string. Matchers read a Standard target without it; the
+        one remaining caller is ``EmbeddingSchemaMatcher``'s fallback for
+        embedders that sample table rows (the ``tfidf_row``/``pmi``
+        strategies, or an embedder with no pair form, which embeds each
+        table with ``column_embeddings``). Domains are vocabulary-sized,
+        so this stays driver-safe.
 
         The DataFrame is memoized per (standard, session) so repeated
-        resolutions skip the pandas->Arrow conversion. It is deliberately
+        calls skip the pandas->Arrow conversion. It is deliberately
         NOT ``persist()``-ed: Spark's columnar cache allocates per-COLUMN
         builder buffers per task, and at 736 columns x n_tasks that
-        overruns a default-sized executor heap (measured OOM); matchers
-        that need repeated scans persist their own NARROW long form
-        instead."""
+        overruns a default-sized executor heap (measured OOM)."""
         return self._per_session("_wide_cache", spark, lambda: self._wide(spark))
 
     def _wide(self, spark: SparkSession) -> DataFrame:
@@ -119,39 +131,7 @@ class Standard:
             }
         )
         schema = StructType([StructField(c, StringType()) for c in values])
-        wide = local_frame(spark, pdf, schema)
-        # Tag the frame with its backing standard: matchers that only need
-        # the (column, value) long form can then read it straight from the
-        # vocabulary (a narrow driver-built table) instead of unpivoting a
-        # 736-column local relation — measured 25x cheaper on GDC. The tag
-        # rides only this exact object (projections drop it), which is safe:
-        # consumers fall back to the generic unpivot.
-        wide._bdi_standard = self
-        return wide
-
-
-def standard_of(df: DataFrame) -> Optional["Standard"]:
-    """The Standard backing ``df`` if it came from :meth:`Standard.to_wide_df`
-    (see the tag set there), else None."""
-    std = getattr(df, "_bdi_standard", None)
-    return std if isinstance(std, Standard) else None
-
-
-def long_values_of(df: DataFrame) -> Optional[DataFrame]:
-    """Fast (column_name, value) long form for a standard-backed wide frame:
-    reads the vocabulary directly (narrow, driver-built) instead of
-    unpivoting the wide local relation. Returns None when ``df`` has no
-    backing standard. Row multiset is identical to
-    ``unpivot(wide) WHERE value IS NOT NULL`` — one row per domain entry,
-    no-domain columns absent."""
-    std = standard_of(df)
-    if std is None:
-        return None
-    return (
-        std.to_long_df(df.sparkSession)
-        .where(F.col("value").isNotNull())
-        .select("column_name", "value")
-    )
+        return local_frame(spark, pdf, schema)
 
 
 class DictStandard(Standard):
@@ -359,6 +339,18 @@ def get_standard(name: str) -> Standard:
         entry = entry()
         _REGISTRY[key] = entry
     return entry
+
+
+def resolve_target(
+    target: Union[str, DataFrame, Standard]
+) -> Union[DataFrame, Standard]:
+    """A matcher target: a standard's name resolves to the Standard
+    (``bdikit/api.py:88-96``); a Standard or a DataFrame passes through."""
+    if isinstance(target, str):
+        return get_standard(target)
+    if isinstance(target, (Standard, DataFrame)):
+        return target
+    raise ValueError(f"Invalid target: {target!r}")
 
 
 # Path of the bundled GDC vocabulary: the public NCI Genomic Data Commons

@@ -16,8 +16,8 @@ def test_policy_boundaries_flip_exactly_at_the_limit():
     assert planning.ann_pair_kernel(20_001) == "lsh"
     assert planning.components_kernel(1_000_000) == "driver"
     assert planning.components_kernel(1_000_001) == "distributed"
-    assert planning.dict_mapper_kernel(10_000) == "literal"
-    assert planning.dict_mapper_kernel(10_001) == "broadcast_join"
+    assert planning.dict_mapper_kernel(100) == "literal"
+    assert planning.dict_mapper_kernel(101) == "broadcast_join"
     assert planning.semdedup_kernel(20_000) == "flat"
     assert planning.semdedup_kernel(20_001) == "two_level"
     assert planning.rank_cumsum_kernel(4_000_000) == "window"

@@ -464,9 +464,9 @@ def _rows(df):
 def test_coma_driver_form_matches_distributed(spark, n_ids):
     """Against a Standard, coma scores on the driver whatever the source's
     size (``n_ids`` adds an ID-like column of that many distinct values);
-    the distributed kernels, which any other target runs, give identical
-    rows. They read the vocabulary's long form here, as they would a
-    projection of the wide frame, but without unpivoting 736 columns."""
+    the distributed kernels, which any DataFrame target runs, give
+    identical rows. Handed the Standard, they read its vocabulary's long
+    form, as they would unpivot its wide frame, but without 736 columns."""
     from pyspark.sql import functions as F
 
     from biomedical_data_integration_spark.sources.standards import get_standard
@@ -480,7 +480,7 @@ def test_coma_driver_form_matches_distributed(spark, n_ids):
             F.lit("female").alias("gender"),
         )
         source = source.withColumn("case_id", F.lit("unknown")).unionByName(ids)
-    gdc = get_standard("gdc").to_wide_df(spark)
+    gdc = get_standard("gdc")
     driver = _coma_scores(source, gdc)
     assert driver.isLocal()
     distributed = CompositeSchemaMatcher()._distributed_scores(source, gdc)
@@ -523,3 +523,62 @@ def test_coma_numeric_pairs_take_distributed_path(spark):
     assert _rows(match_schema(source, target, method="coma")) == [
         ("age", "age_years"), ("code", "code_id"), ("dose", "dose_mg"),
     ]
+
+
+def test_standard_target_never_builds_wide_frame(spark, monkeypatch):
+    """A Standard is the matcher target itself: the driver-form coma, the
+    embedding matcher's pair path, two-phase pruning and value matching
+    read its names and vocabulary, never its 736-column wide frame."""
+    from biomedical_data_integration_spark import match_values
+    from biomedical_data_integration_spark.sources.standards import Standard
+
+    def no_wide_frame(self, spark):
+        raise AssertionError("to_wide_df called")
+
+    monkeypatch.setattr(Standard, "to_wide_df", no_wide_frame)
+    source = _gdc_clinical(spark)
+    mapping = _rows(match_schema(source, "gdc", method="coma"))
+    assert ("Ethnicity", "ethnicity") in mapping
+    top = top_matches(source, target="gdc", method="ct_learning")
+    assert {r["source"] for r in top.collect()} == set(source.columns)
+    assert len(_rows(match_schema(source, "gdc", method="two_phase"))) == 3
+    values = match_values(source, "gdc", [("Ethnicity", "ethnicity")], method="tfidf")
+    assert values.where("target_value IS NOT NULL").count() > 0
+
+
+def _stub_llm(messages):
+    """A deterministic LLM stand-in: names two demo columns and one that
+    the validation step must drop."""
+    return "race; not_a_column; ethnicity"
+
+
+def test_standard_and_its_wide_frame_give_same_matches(spark):
+    """For every schema matcher, a Standard target and its wide frame
+    passed as a plain DataFrame give the same rows from match_schema and
+    top_matches: the wide frame is the reference the Standard's
+    names-and-vocabulary reading must reproduce."""
+    from biomedical_data_integration_spark.operators.schema_matching import (
+        SCHEMA_MATCHERS,
+    )
+    from biomedical_data_integration_spark.sources.standards import get_standard
+
+    std = get_standard("biomedical_demo")
+    wide = std.to_wide_df(spark)
+    source = spark.createDataFrame(
+        [
+            ("hispanic or latino", "Stage IA", "female", 41),
+            ("not hispanic or latino", " Stage IV ", "male", 67),
+            ("Unknown", None, "unknown", 55),
+            ("unknown", "Stage IA", "not reported", 38),
+        ],
+        ["Ethnicity", "FIGO_stage", "gender", "age"],
+    )
+    for method in sorted(SCHEMA_MATCHERS):
+        args = {"client": _stub_llm} if method == "gpt" else None
+        for call in (
+            lambda t: match_schema(source, t, method=method, method_args=args),
+            lambda t: top_matches(
+                source, target=t, top_k=3, method=method, method_args=args
+            ),
+        ):
+            assert _rows(call(std)) == _rows(call(wide)), method

@@ -147,9 +147,13 @@ def main() -> int:
             j = jobs[jid]
             if j["start"] < t0 - 50 or j["start"] > t2 + 50:
                 continue
-            dur = (j.get("end", j["start"]) - j["start"]) / 1000.0
-            gap = (j["start"] - prev_end) / 1000.0
-            prev_end = j.get("end", j["start"])
+            end = j.get("end", j["start"])
+            dur = (end - j["start"]) / 1000.0
+            # prev_end is the latest end so far, so a gap is idle time
+            # outside the union of job intervals (perfbench/spans.py's
+            # accounting); a job overlapping an earlier one has none
+            gap = max(0, j["start"] - prev_end) / 1000.0
+            prev_end = max(prev_end, end)
             print(
                 f"  job {jid:4d}  +gap {gap:6.2f}s  dur {dur:6.2f}s  "
                 f"stages={j['n_stages']}  {j['desc'][:60]}"
