@@ -181,7 +181,7 @@ def _sql_char_ngrams(col: str, n_min: int, n_max: int) -> str:
 
 def _sql_src_domain(table: str, col: str) -> str:
     """Distinct normalized source values — mirrors
-    operators/value_matching.source_value_domain."""
+    operators/value_matching.value_domain."""
     return (
         f"SELECT trim(c) AS skey, min(c) AS source_value FROM "
         f"(SELECT DISTINCT CAST({col} AS VARCHAR) AS c FROM {table} "

@@ -32,7 +32,7 @@ from biomedical_data_integration_spark.functions.strings import (
     clean_string,
 )
 from biomedical_data_integration_spark.session import local_frame
-from biomedical_data_integration_spark.sources.standards import Standard
+from biomedical_data_integration_spark.sources.standards import long_form
 
 _HEX = "0123456789abcdef"
 
@@ -170,27 +170,6 @@ class HashingColumnEmbedder(ColumnEmbedder):
         self.sample_values = sample_values
         self.sample_strategy = sample_strategy
 
-    def _long_form(self, table, cols: List[str], spark) -> DataFrame:
-        """(column_name, value) of the requested columns, one row per
-        non-null value. A DataFrame is unpivoted in one scan; a Standard's
-        rows come from its vocabulary's long form (``Standard.to_long_df``,
-        built in ``spark``), the same row multiset its wide frame would
-        unpivot to."""
-        if isinstance(table, Standard):
-            long = (
-                table.to_long_df(spark)
-                .where(F.col("value").isNotNull())
-                .select("column_name", "value")
-            )
-            if set(cols) != set(table.columns):
-                long = long.where(F.col("column_name").isin(list(cols)))
-            return long
-        return (
-            table.select([F.col(c).cast("string").alias(c) for c in cols])
-            .unpivot([], cols, "column_name", "value")
-            .where(F.col("value").isNotNull())
-        )
-
     def _min_k(
         self,
         df: DataFrame,
@@ -298,7 +277,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
             return self._tfidf_row_sample(df, cols, self.sample_values)
         if self.sample_strategy == "pmi":
             return self._pmi_sample(df, cols, self.sample_values)
-        return self._sampled_from_long(self._long_form(df, cols, df.sparkSession))
+        return self._sampled_from_long(long_form(df, cols))
 
     def _sampled_from_long(self, long_df: DataFrame) -> DataFrame:
         """Strategy dispatch for every sampler that needs only the
@@ -546,7 +525,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
         spark = source.sparkSession
 
         def tagged(table, side: str) -> DataFrame:
-            return self._long_form(table, table.columns, spark).withColumn(
+            return long_form(table, table.columns, spark).withColumn(
                 "column_name", F.concat(F.lit(side + "\x1f"), F.col("column_name"))
             )
 

@@ -49,7 +49,7 @@ from biomedical_data_integration_spark.operators.value_matching import (
     match_values_pipeline,
 )
 from biomedical_data_integration_spark.session import local_frame
-from biomedical_data_integration_spark.sources.standards import Standard
+from biomedical_data_integration_spark.sources.standards import Standard, long_form
 
 SCORES_SCHEMA = "source string, target string, similarity double"
 
@@ -78,36 +78,15 @@ def _apply_allowed(scores: DataFrame, allowed_pairs: Optional[DataFrame]) -> Dat
 
 
 def _unpivot_strings(table, colname: str, valname: str, spark=None) -> DataFrame:
-    """(column, distinct trimmed value) long form of a table's string columns.
-
-    A Standard's comes from its vocabulary's long form
-    (``Standard.to_long_df``, built in ``spark``): all its columns are
-    strings, and it holds exactly the non-null values a wide frame would
-    unpivot to. A DataFrame's uses native ``unpivot`` (ONE Expand node
-    over one scan) — a union of per-column selects is O(n_cols) plan
-    branches each carrying the whole child plan, which at real
-    vocabulary width (736 columns) took minutes to optimize and OOM'd
-    the driver on constraint inference."""
-    if isinstance(table, Standard):
-        return (
-            table.to_long_df(spark)
-            .where(F.col("value").isNotNull())
-            .select(
-                F.col("column_name").alias(colname),
-                F.trim(F.col("value")).alias(valname),
-            )
-            .distinct()
-        )
-    cols = _string_columns(table)
-    if not cols:
-        return local_frame(
-            table.sparkSession, [], f"{colname} string, {valname} string"
-        )
+    """(column, distinct trimmed value) long form of a table's string
+    columns, read through :func:`~.sources.standards.long_form` (a
+    Standard's are all strings; its rows are built in ``spark``)."""
     return (
-        table.select([F.col(c).cast("string").alias(c) for c in cols])
-        .unpivot([], cols, colname, valname)
-        .where(F.col(valname).isNotNull())
-        .select(F.col(colname), F.trim(F.col(valname)).alias(valname))
+        long_form(table, _string_columns(table), spark)
+        .select(
+            F.col("column_name").alias(colname),
+            F.trim(F.col("value")).alias(valname),
+        )
         .distinct()
     )
 

@@ -24,8 +24,10 @@ Design points for scale:
   has a total-order tiebreaker, so results are deterministic under any
   partitioning.
 - With a driver-side kernel (tfidf), domains that fit on the driver
-  (``planning.LOCAL_DOMAIN_LIMIT`` values) skip the Spark plan above: the
-  same steps run in Python and the result is a local frame.
+  (``planning.LOCAL_DOMAIN_LIMIT`` values) skip the Spark plan above: each
+  DataFrame's distinct values come in one bounded, unpersisted read, the
+  same steps run in Python (:func:`domain_rows`, not :func:`value_domain`)
+  and the result is a local frame.
 
 Value matcher registry mirrors ``value_matching/matcher_factory.py:7-21``:
 ``tfidf`` (default), ``edit_distance``, ``indel``, ``exact``,
@@ -36,7 +38,7 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,6 +52,11 @@ from biomedical_data_integration_spark.functions.strings import (
 )
 from biomedical_data_integration_spark.functions.vectors import cosine
 from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.sources.standards import (
+    Standard,
+    long_form,
+    resolve_target,
+)
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -117,102 +124,99 @@ def _skip_numeric_pairs(source: DataFrame, pairs: PairList) -> PairList:
     return kept
 
 
-def _pairs_df(spark: SparkSession, pairs: PairList) -> DataFrame:
-    return local_frame(spark, pairs, "source_column string, target_column string")
+# a side's domain row per (mapped pair, key); the side's own column is
+# field 0 (source) or 1 (target) of the pair
+_DOMAIN_ROW = {
+    "source": Row("source_column", "target_column", "skey", "source_value"),
+    "target": Row("source_column", "target_column", "tkey", "target_value"),
+}
+_AT = {"source": 0, "target": 1}
 
 
-def source_value_domain(source: DataFrame, pairs: PairList) -> DataFrame:
-    """Distinct normalized source values per mapped pair.
+def domain_rows(
+    table: Union[DataFrame, Standard],
+    pairs: PairList,
+    side: str,
+    limit: Optional[int] = None,
+) -> Optional[list]:
+    """One side's value domain, keyed on the driver: :func:`value_domain`'s
+    rows, or None when a DataFrame holds more than ``limit`` distinct
+    ``(column, value)`` pairs.
 
-    One union-all of per-column distincts; originals are preserved via the
-    stripped-string -> original mapping (``api.py:360-363``), made
-    deterministic by keeping min(original) per key.
-    Output: (source_column, target_column, source_value, skey)
-    """
-    spark = source.sparkSession
-    src_cols = sorted({s for s, _ in pairs})
-    # native unpivot: ONE Expand node over one scan — a union of per-column
-    # selects is O(n_cols) plan branches each carrying the whole child plan
-    # (at 736-column vocabulary width that OOM'd the optimizer/executors)
-    dom = (
-        source.select([F.col(c).cast("string").alias(c) for c in src_cols])
-        .unpivot([], src_cols, "source_column", "orig")
-        .where(F.col("orig").isNotNull())
-    )
-    # distinct() BEFORE the min(orig) agg: a no-aggregate distinct is a
+    A Standard's values are Python data (no job); a DataFrame's are one
+    bounded read of at most ``limit + 1`` rows, not persisted. Key =
+    trim(value) (spaces only, like Spark's trim); the value kept per
+    (column, key) is the min (code-point order, which is Spark's UTF-8
+    byte order), preserving originals (``api.py:360-363``); each row is
+    repeated for every mapped pair naming its column."""
+    from collections import defaultdict
+
+    at = _AT[side]
+    cols = sorted({p[at] for p in pairs})
+    if isinstance(table, Standard):
+        values = [
+            (c, v)
+            for c, vs in table.get_column_values(cols).items()
+            for v in vs
+            if v is not None
+        ]
+    else:
+        values = long_form(table, cols).distinct().limit(limit + 1).collect()
+        if len(values) > limit:
+            return None
+    best: Dict[Tuple[str, str], str] = {}
+    for col, v in values:
+        key = (col, v.strip(" "))
+        if key not in best or v < best[key]:
+            best[key] = v
+    by_col: Dict[str, list] = defaultdict(list)
+    for p in pairs:
+        by_col[p[at]].append(p)
+    make = _DOMAIN_ROW[side]
+    return [make(*p, key, v) for (col, key), v in best.items() for p in by_col[col]]
+
+
+def value_domain(
+    table: Union[DataFrame, Standard],
+    pairs: PairList,
+    side: str,
+    spark: Optional[SparkSession] = None,
+) -> DataFrame:
+    """One side's value domain for the distributed kernels:
+    (source_column, target_column, skey|tkey, source_value|target_value).
+
+    A DataFrame's is :func:`domain_rows` computed in Spark from its long
+    form (``api.py:444-448``). A Standard's vocabulary domain
+    (``api.py:440-443``) is already driver data: it is keyed by
+    :func:`domain_rows` and returned as a local frame (built in
+    ``spark``) that costs no job to read."""
+    fields = _DOMAIN_ROW[side]
+    if isinstance(table, Standard):
+        return local_frame(
+            spark,
+            domain_rows(table, pairs, side),
+            ", ".join(f"{f} string" for f in fields),
+        )
+    col, key, val = fields[_AT[side]], fields[2], fields[3]
+    # distinct() BEFORE the min(value) agg: a no-aggregate distinct is a
     # map-side-combinable HashAggregate, while min over a string column
     # falls back to SortAggregate (var-length buffer) — so run the sort
     # aggregate only on the already-tiny distinct set, never on raw rows
     dom = (
-        dom.distinct()
-        .withColumn("skey", F.trim(F.col("orig")))
-        .groupBy("source_column", "skey")
-        .agg(F.min("orig").alias("source_value"))
-    )
-    return dom.join(F.broadcast(_pairs_df(spark, pairs)), "source_column")
-
-
-def target_value_domain(
-    spark: SparkSession,
-    target: Union[DataFrame, str, "Standard"],  # noqa: F821
-    pairs: PairList,
-) -> DataFrame:
-    """Distinct target-domain values per mapped pair.
-
-    DataFrame target -> per-column distinct (``api.py:444-448``);
-    standard target -> vocabulary domain (``api.py:440-443``), already
-    driver data, so it is deduplicated here and returned as a local frame
-    that costs no job to read.
-    Output: (source_column, target_column, target_value, tkey)
-    """
-    from biomedical_data_integration_spark.sources.standards import (
-        Standard,
-        resolve_target,
-    )
-
-    tgt_cols = sorted({t for _, t in pairs})
-    target = resolve_target(target)
-    if isinstance(target, Standard):
-        # the distributed form below, on the driver: tkey = trim(orig)
-        # (spaces only, like Spark's trim), min(orig) per key (code-point
-        # order is UTF-8 byte order), one row per pair naming the column
-        values = target.get_column_values(tgt_cols)
-        best: Dict[Tuple[str, str], str] = {}
-        for tc in tgt_cols:
-            for v in values.get(tc, []):
-                key = (tc, v.strip(" "))
-                if key not in best or v < best[key]:
-                    best[key] = v
-        rows = [
-            (tc, tkey, v, sc)
-            for (tc, tkey), v in best.items()
-            for sc, t in pairs
-            if t == tc
-        ]
-        return local_frame(
-            spark,
-            rows,
-            "target_column string, tkey string, target_value string,"
-            " source_column string",
+        long_form(table, sorted({p[_AT[side]] for p in pairs}))
+        .distinct()
+        .select(
+            F.col("column_name").alias(col),
+            F.trim(F.col("value")).alias(key),
+            "value",
         )
-    missing = [c for c in tgt_cols if c not in target.columns]
-    if missing:
-        raise ValueError(f"Target column(s) {missing} not found in target table")
-    # native unpivot (one Expand, one scan) — see source_value_domain
-    dom = (
-        target.select([F.col(c).cast("string").alias(c) for c in tgt_cols])
-        .unpivot([], tgt_cols, "target_column", "orig")
-        .where(F.col("orig").isNotNull())
+        .groupBy(col, key)
+        .agg(F.min("value").alias(val))
     )
-    # same distinct-before-min as source_value_domain (hash-distinct the
-    # raw rows; sort-aggregate only the distinct set)
-    dom = (
-        dom.distinct()
-        .withColumn("tkey", F.trim(F.col("orig")))
-        .groupBy("target_column", "tkey")
-        .agg(F.min("orig").alias("target_value"))
+    pairs_df = local_frame(
+        table.sparkSession, pairs, "source_column string, target_column string"
     )
-    return dom.join(F.broadcast(_pairs_df(spark, pairs)), "target_column")
+    return dom.join(F.broadcast(pairs_df), col).select(*fields)
 
 
 # ---------------------------------------------------------------------------
@@ -239,25 +243,6 @@ def _domain_sizes(src: DataFrame, tgt: DataFrame) -> Tuple[int, int]:
         .collect()
     }
     return counts.get("s", 0), counts.get("t", 0)
-
-
-def _driver_domains(
-    src: DataFrame, tgt: DataFrame, limit: int
-) -> Optional[Tuple[list, list]]:
-    """Both domains' rows when together they hold at most ``limit``
-    values (``planning.value_match_kernel``), else None.
-
-    One bounded read per side, and the target is read only if the source
-    fits. On a persisted domain the read fills part of the cache, which
-    the distributed kernel then reuses; on a local frame it runs no job.
-    """
-    s_rows = src.limit(limit + 1).collect()
-    if len(s_rows) > limit:
-        return None
-    t_rows = tgt.limit(limit + 1 - len(s_rows)).collect()
-    if planning.value_match_kernel(len(s_rows), len(t_rows), limit) != "local":
-        return None
-    return s_rows, t_rows
 
 
 class BaseValueMatcher:
@@ -880,7 +865,7 @@ def _driver_matches(
 
 def match_values_pipeline(
     source: DataFrame,
-    target: Union[DataFrame, str, "Standard"],  # noqa: F821
+    target: Union[DataFrame, str, Standard],
     column_mapping,
     method: Union[str, BaseValueMatcher] = config.DEFAULT_VALUE_MATCHING_METHOD,
     top_k: int = 1,
@@ -900,30 +885,28 @@ def match_values_pipeline(
     pairs = _skip_numeric_pairs(source, normalize_column_mapping(column_mapping))
     if not pairs:
         return local_frame(spark, [], MATCHES_SCHEMA)
+    target = resolve_target(target)
+    missing = sorted({t for _, t in pairs if t not in target.columns})
+    if missing:
+        raise ValueError(f"Target column(s) {missing} not found in target table")
 
     matcher = get_value_matcher(method, **(method_args or {}))
 
-    # The domains are referenced more than once downstream (the similarity
-    # kernel, the final left join re-attaching unmatched values, and any
-    # broadcast collects inside the kernel). Spark re-evaluates a plan
-    # subtree per reference, so without a persist the full source scan +
-    # distinct would run 2-4x per query. The domains are distinct-value
-    # sized — exactly the intermediate you cache at 100 TB. A Standard's
-    # domain is already a local frame and needs no cache.
-    src = source_value_domain(source, pairs).persist()
-    tgt = target_value_domain(spark, target, pairs)
-    if not tgt.isLocal():
-        tgt = tgt.persist()
-
+    # Driver-sized domains (planning.value_match_kernel) finish the whole
+    # step on the driver; the result is a local frame, so collecting it
+    # runs no job. The target is read only if the source fits, with the
+    # budget it leaves. The bound counts raw distinct values: a domain
+    # that trimming would merge under the limit may still run distributed.
     limit = matcher.local_domain_limit
-    domains = None if limit is None else _driver_domains(src, tgt, limit)
-    if domains is not None:
-        # driver-sized: finish the whole step on the driver; the result is
-        # a local frame, so it references no cached block and collecting
-        # it runs no job
-        s_rows, t_rows = domains
-        src.unpersist()
-        tgt.unpersist()
+    s_rows = t_rows = None
+    if limit is not None:
+        s_rows = domain_rows(source, pairs, "source", limit)
+    if s_rows is not None and len(s_rows) <= limit:
+        t_rows = domain_rows(target, pairs, "target", limit - len(s_rows))
+    if (
+        t_rows is not None
+        and planning.value_match_kernel(len(s_rows), len(t_rows), limit) == "local"
+    ):
         rows = _driver_matches(
             s_rows,
             matcher.local_similarities(s_rows, t_rows),
@@ -932,6 +915,18 @@ def match_values_pipeline(
             include_unmatched,
         )
         return local_frame(spark, rows, MATCHES_SCHEMA)
+
+    # Distributed: the domains are referenced more than once downstream
+    # (the similarity kernel, the final left join re-attaching unmatched
+    # values, and any broadcast collects inside the kernel). Spark
+    # re-evaluates a plan subtree per reference, so without a persist the
+    # full source scan + distinct would run 2-4x per query. The domains are
+    # distinct-value sized — exactly the intermediate you cache at 100 TB.
+    # A Standard's domain is already a local frame and needs no cache.
+    src = value_domain(source, pairs, "source").persist()
+    tgt = value_domain(target, pairs, "target", spark)
+    if not tgt.isLocal():
+        tgt = tgt.persist()
 
     sims = matcher.similarities(src, tgt)
     sims = sims.where(F.col("similarity") >= threshold)

@@ -10,8 +10,11 @@ The Spark-native model keeps the vocabulary LONG-FORM —
 joins and explodes beat a wide padded table, and the long table broadcasts
 (driver-sized). A Standard is itself a matcher target (:func:`resolve_target`):
 matchers read its names and all-string :attr:`~Standard.schema`, its long
-form, or its vocabulary domain. The wide form is built only for the
-embedding matcher's row-level fallback (see :meth:`Standard.to_wide_df`).
+form, or its vocabulary domain. A matcher reads any target's values as
+``(column_name, value)`` rows through :func:`long_form`, which unpivots a
+DataFrame and filters a Standard's long form. The wide form is built only
+for the embedding matcher's row-level fallback (see
+:meth:`Standard.to_wide_df`).
 
 Registry mirrors ``standards/standard_factory.py:7-28``: resolve by name,
 helpful error listing valid names. A built-in demo vocabulary covering the
@@ -27,6 +30,7 @@ import weakref
 from typing import Dict, List, Mapping, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from biomedical_data_integration_spark.session import local_frame
@@ -351,6 +355,41 @@ def resolve_target(
     if isinstance(target, (Standard, DataFrame)):
         return target
     raise ValueError(f"Invalid target: {target!r}")
+
+
+def long_form(
+    table: Union[DataFrame, Standard],
+    cols: List[str],
+    spark: Optional[SparkSession] = None,
+) -> DataFrame:
+    """``(column_name, value)`` rows of ``table``'s ``cols``: one row per
+    non-null value, cast to string.
+
+    A Standard's rows come from its vocabulary's long form
+    (:meth:`Standard.to_long_df`, built in ``spark``), the same row
+    multiset its wide frame would unpivot to. A DataFrame is unpivoted
+    natively: ONE Expand node over one scan. A union of per-column
+    selects is O(n_cols) plan branches each carrying the whole child
+    plan, which at real vocabulary width (736 columns) took minutes to
+    optimize and OOM'd the driver on constraint inference."""
+    if isinstance(table, Standard):
+        long = (
+            table.to_long_df(spark)
+            .where(F.col("value").isNotNull())
+            .select("column_name", "value")
+        )
+        if set(cols) != set(table.columns):
+            long = long.where(F.col("column_name").isin(list(cols)))
+        return long
+    if not cols:
+        return local_frame(
+            table.sparkSession, [], "column_name string, value string"
+        )
+    return (
+        table.select([F.col(c).cast("string").alias(c) for c in cols])
+        .unpivot([], cols, "column_name", "value")
+        .where(F.col("value").isNotNull())
+    )
 
 
 # Path of the bundled GDC vocabulary: the public NCI Genomic Data Commons

@@ -152,15 +152,14 @@ def test_embedding_matcher_gates_to_lsh_blocking(spark):
     bucket key; blocked results are a subset of the exact all-pairs run."""
     from biomedical_data_integration_spark.operators.value_matching import (
         EmbeddingValueMatcher,
-        source_value_domain,
-        target_value_domain,
+        value_domain,
     )
 
     src_df = spark.createDataFrame([(f"value {i}",) for i in range(30)], ["x"])
     tgt_df = spark.createDataFrame([(f"value {i}",) for i in range(0, 60, 2)], ["y"])
     pairs = [("x", "y")]
-    s = source_value_domain(src_df, pairs)
-    t = target_value_domain(spark, tgt_df, pairs)
+    s = value_domain(src_df, pairs, "source")
+    t = value_domain(tgt_df, pairs, "target")
 
     exact = EmbeddingValueMatcher(block_threshold=None).similarities(s, t)
     blocked = EmbeddingValueMatcher(block_threshold=10).similarities(s, t)
@@ -183,6 +182,16 @@ def test_unknown_method_raises(spark):
     tgt = spark.createDataFrame([("a",)], ["y"])
     with pytest.raises(ValueError, match="not supported"):
         match_values(src, tgt, [("x", "y")], method="bogus")
+
+
+def test_missing_target_column_raises(spark):
+    """A mapped target column that the target lacks raises the same error
+    whether the target is a Standard or a DataFrame."""
+    clinical = _clinical(spark)
+    wide = spark.createDataFrame([("Hispanic or Latino",)], ["ethnicity"])
+    for target in ("gdc", wide):
+        with pytest.raises(ValueError, match=r"\['no_such_column'\] not found"):
+            match_values(clinical, target, [("Ethnicity", "no_such_column")])
 
 
 def test_gpt_value_matcher_pipeline_with_fake_client(spark):
@@ -316,7 +325,7 @@ def test_standard_target_domain_matches_dataframe_target_domain(spark):
     the distributed trim/min(orig) domain of the same values."""
     from biomedical_data_integration_spark import DictStandard
     from biomedical_data_integration_spark.operators.value_matching import (
-        target_value_domain,
+        value_domain,
     )
 
     values = ["a", " a", "a ", "B", "b", "é", "é", "  "]
@@ -324,11 +333,11 @@ def test_standard_target_domain_matches_dataframe_target_domain(spark):
     tgt_df = spark.createDataFrame([(v,) for v in values], ["t"])
     pairs = [("s1", "t"), ("s2", "t")]
     cols = ["source_column", "target_column", "tkey", "target_value"]
-    local = target_value_domain(spark, std, pairs)
+    local = value_domain(std, pairs, "target", spark)
     assert local.isLocal()
     got = sorted(tuple(r) for r in local.select(cols).collect())
     want = sorted(
-        tuple(r) for r in target_value_domain(spark, tgt_df, pairs).select(cols).collect()
+        tuple(r) for r in value_domain(tgt_df, pairs, "target").select(cols).collect()
     )
     assert got == want
 
@@ -359,7 +368,9 @@ def test_harmonization_job_counts(spark):
     """Regression bound on Spark jobs along match_schema -> match_values
     (tfidf) against GDC. Driver-built relations are LocalRelations, so
     collecting match_schema's result runs no job, and the driver-sized
-    tfidf path reads each domain once (the GDC side with no job). Both
+    tfidf path reads the source domain in one bounded, unpersisted query
+    (its distinct's shuffle stage and the result) and the GDC side with
+    no job. Both
     steps finish on the driver: coma's only query reads the source's
     per-column value counts and vocabulary hits (two shuffle stages, the
     vocabulary broadcast and the result stage), and match_values returns
@@ -384,14 +395,14 @@ def test_harmonization_job_counts(spark):
     assert len(vrows) == 7
     assert n_sm_call <= 4
     assert n_sm == 0
-    assert n_vm <= 4
+    assert n_vm <= 2
     assert n_vm_collect == 0
 
 
 @pytest.mark.parametrize("target", ["gdc", "dataframe"])
 def test_match_values_leaves_no_cached_domains(spark, target):
-    """The driver-sized path releases both persisted domains: repeated
-    calls in one session must not grow the persistent-RDD set. (Compared
+    """The driver-sized path persists no domain: repeated calls in one
+    session must not grow the persistent-RDD set. (Compared
     by RDD id, not by count: the context cleaner may drop earlier tests'
     RDDs meanwhile.)"""
     clinical = _clinical(spark)
@@ -431,32 +442,47 @@ def test_match_schema_coma_leaves_no_pins(spark):
 
 
 def _pipeline_data(spark):
-    """Two mapped pairs with ties at equal similarity ("Apple"/"apple"
-    and "banana"/"Banana " clean to the same string), padded source
-    values, a null, and values that match nothing."""
+    """Mapped pairs with ties at equal similarity ("Apple"/"apple" and
+    "banana"/"Banana " clean to the same string), padded source values,
+    nulls, and values that match nothing. A boolean and a date source
+    column are cast to strings, not skipped as numeric. Non-ASCII values
+    collide on trim ("caf\u00e9 "/"caf\u00e9"/" caf\u00e9"), and
+    "x\uffff" beside "x\U0001f600" ties where code-point order (Spark's
+    UTF-8 byte order, not UTF-16's) puts U+FFFF first."""
+    import datetime
+
+    d1, d2 = datetime.date(2024, 1, 2), datetime.date(2023, 12, 31)
     src = spark.createDataFrame(
         [
-            ("apple", "carrot"),
-            ("aple", "onion"),
-            (" apple ", "onion"),
-            ("Banana", None),
-            ("kiwi fruit", "zzz"),
-            ("qqq", "carrot"),
-            (None, "Carrots"),
+            ("apple", "carrot", True, d1, "caf\u00e9 "),
+            ("aple", "onion", False, None, "caf\u00e9"),
+            (" apple ", "onion", None, d1, " caf\u00e9"),
+            ("Banana", None, True, d2, "x\U0001f600"),
+            ("kiwi fruit", "zzz", False, None, "x\uffff"),
+            ("qqq", "carrot", None, d1, None),
+            (None, "Carrots", True, d2, "x\U0001f600 "),
         ],
-        ["fruit", "veg"],
+        "fruit string, veg string, flag boolean, day date, txt string",
     )
     tgt = spark.createDataFrame(
         [
-            ("Apple", "Carrot"),
-            ("apple", "carrots"),
-            ("banana", "Onion"),
-            ("Banana ", "onions"),
-            ("kiwi", None),
+            ("Apple", "Carrot", "TRUE", "2024-01-02", "cafe"),
+            ("apple", "carrots", "true", "2024/01/02", "x\U0001f600"),
+            ("banana", "Onion", "false", None, "x\uffff"),
+            ("Banana ", "onions", None, "2023-12-31", "Caf\u00e9"),
+            ("kiwi", None, "no", "2023-12-31 ", None),
         ],
-        ["fruit_t", "veg_t"],
+        "fruit_t string, veg_t string, flag_t string, day_t string,"
+        " txt_t string",
     )
-    return src, tgt, [("fruit", "fruit_t"), ("veg", "veg_t")]
+    pairs = [
+        ("fruit", "fruit_t"),
+        ("veg", "veg_t"),
+        ("flag", "flag_t"),
+        ("day", "day_t"),
+        ("txt", "txt_t"),
+    ]
+    return src, tgt, pairs
 
 
 @pytest.mark.parametrize(
@@ -473,16 +499,15 @@ def test_driver_finished_pipeline_matches_distributed(
     from biomedical_data_integration_spark.operators.value_matching import (
         TfIdfValueMatcher,
         match_values_pipeline,
-        source_value_domain,
-        target_value_domain,
+        value_domain,
     )
 
     src, tgt, pairs = _pipeline_data(spark)
     raw = {
         (skey, tval): sim
         for _, _, skey, tval, sim in TfIdfValueMatcher().local_similarities(
-            source_value_domain(src, pairs).collect(),
-            target_value_domain(spark, tgt, pairs).collect(),
+            value_domain(src, pairs, "source").collect(),
+            value_domain(tgt, pairs, "target").collect(),
         )
     }
     threshold = raw[("aple", "apple")]

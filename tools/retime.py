@@ -1,7 +1,9 @@
 """Re-time selected registry queries with repetitions — the bench-drift
 settling tool (PERF_NOTES). Runs each named query R times in one session
 (after one untimed warmup of the first query to absorb session/codegen
-startup) and prints min/median/max.
+startup) and prints min/median/max. Each run forces the query through the
+noop sink, as bench.py does: ``count()`` lets the optimizer prune columns
+and skip work the registry face would do.
 
 Usage: python tools/retime.py [-r REPS] [sf_dir] query [query ...]
 """
@@ -43,13 +45,17 @@ def main() -> None:
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
+
+    def run(name: str) -> None:
+        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+
     # warmup: absorb first-query session costs outside the timings
-    qs[names[0]](spark, sf_dir).count()
+    run(names[0])
     for name in names:
         times = []
         for _ in range(reps):
             t0 = time.time()
-            qs[name](spark, sf_dir).count()
+            run(name)
             times.append(time.time() - t0)
         print(
             f"{name}: min={min(times):.2f}s med={statistics.median(times):.2f}s"
