@@ -5086,7 +5086,7 @@ def _q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     80 most corpus-frequent substrings (len 2-5) of the word table, then
     2 hard-EM rounds — greedy longest-match segmentation of every word
     against the current literal piece set (distributed, expression-level
-    fold; the kmeans literal-centroid discipline) followed by a prune to
+    fold) followed by a prune to
     the 40 most-used pieces. Returns the final vocabulary's in-plan
     usage recount with integer-quantized probabilities; the oracle
     replays every round via recursive-CTE segmentation."""
@@ -5528,8 +5528,8 @@ def _q_events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Lloyd's k-means over the embeddings table: per-vector
     cluster assignment + squared distance after KMEANS_ITERS update
-    rounds. Each iteration = one corpus scan with literal centroids + a
-    k-group shuffle (see operators/clustering.py)."""
+    rounds. Each iteration = one corpus scan against a broadcast 1-row
+    centroid table + a k-group shuffle (see operators/clustering.py)."""
     from biomedical_data_integration_spark.operators.clustering import kmeans
 
     (emb,) = _tables(spark, sf_dir, "embeddings")
@@ -12130,8 +12130,7 @@ def _q_ivfpq_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # five corpus vectors probed as one table in one pruned scan
 IVFPQ_MANY_QUERY_IDS = [100, 140, 180, 220, 260]
 # the large-batch face: 40 queries x nprobe 2 x m 4 x 8 codes = 2560
-# would-be literals > planning.ADC_LITERAL_LIMIT (2000) -> the policy
-# routes the ADC tables to the broadcast-map kernel (plan-gated)
+# ADC entries, all in the one broadcast map relation (plan-gated)
 IVFPQ_LARGE_QUERY_IDS = list(range(101, 181, 2))
 
 
@@ -12142,8 +12141,8 @@ def _q_ivfpq_probe_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells lands in PartitionFilters (plan-gated), a broadcast
     (query_id, cell) pair join fans each pruned row out to exactly the
     queries probing its cell, the per-(query, cell) integer ADC tables
-    ride as literals (bit-identical driver arithmetic to the single
-    probe), and top-k is a per-query window. No training in the plan;
+    ride in one broadcast single-row map relation (bit-identical driver
+    arithmetic to the single probe), and top-k is a per-query window. No training in the plan;
     corpus vectors never read. Oracle replays coarse assignment + PQ
     training + the per-query ADC in SQL."""
     from pyspark.sql import functions as F
@@ -12247,13 +12246,11 @@ def _ivfpq_probe_many_parts(query_ids: list | None = None) -> list:
 
 def _q_ivfpq_probe_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ LARGE-batch serve face (operators/similarity.
-    ivfpq_probe_many via planning.adc_kernel — round-11 verdict item
-    4): a 40-query batch whose would-be literal plan (2560 ADC
-    entries) exceeds ADC_LITERAL_LIMIT, so the policy routes the
-    per-(query, cell) integer tables into ONE broadcast single-row
-    map relation — the plan stays constant-shape in batch size
-    (plan-gated: no per-query CASE chain; gated bit-equal to the
-    literal kernel in tests). Everything else is the batch face's
+    ivfpq_probe_many — round-11 verdict item 4): a 40-query batch
+    (2560 ADC entries) whose per-(query, cell) integer tables ride in
+    ONE broadcast single-row map relation — the plan stays
+    constant-shape in batch size (plan-gated: no per-query CASE chain;
+    gated equal to per-query single probes in tests). Everything else is the batch face's
     shape: one PartitionFilters-pruned scan, broadcast pair fan-out,
     per-query top-k window. Oracle: the shared ADC replay
     parametrized by the 40 ids."""

@@ -18,6 +18,8 @@ Reference semantics mirrored here:
 
 from __future__ import annotations
 
+from typing import Dict, Iterable, Optional, Tuple
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -126,6 +128,53 @@ def py_char_ngram_tf(s: str, n_min: int = 1, n_max: int = 3) -> dict:
             g = s[i : i + n]
             tf[g] = tf.get(g, 0.0) + 1.0
     return tf
+
+
+def py_tfidf_cosines(
+    source: Iterable[str],
+    target: Iterable[str],
+    n_min: int = 1,
+    n_max: int = 3,
+    max_df_fraction: Optional[float] = None,
+) -> Dict[Tuple[str, str], float]:
+    """Driver-side char-n-gram TF-IDF cosine between ``source`` and
+    ``target`` strings: tf over the n-grams of :func:`py_clean_string`,
+    smooth idf fit on the union corpus (a string on both sides counts
+    once per side; terms in more than ``max_df_fraction`` of it dropped),
+    L2-normalized weights. Only pairs sharing a term appear, so the cost
+    is shared-term pairs (an inverted index over ``target``); the dot
+    product adds in source-term order, the order every caller relied on
+    for bit-identical scores."""
+    import math
+
+    s_tf = {v: py_char_ngram_tf(py_clean_string(v), n_min, n_max) for v in source}
+    t_tf = {v: py_char_ngram_tf(py_clean_string(v), n_min, n_max) for v in target}
+    n_docs = float(len(s_tf) + len(t_tf))
+    dfc: Dict[str, int] = {}
+    for tf in (*s_tf.values(), *t_tf.values()):
+        for term in tf:
+            dfc[term] = dfc.get(term, 0) + 1
+    idf = {
+        term: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0
+        for term, df in dfc.items()
+        if max_df_fraction is None or df <= max_df_fraction * n_docs
+    }
+
+    def unit(tf: dict) -> dict:
+        w = {t: f * idf[t] for t, f in tf.items() if t in idf}
+        norm = math.sqrt(sum(v * v for v in w.values()))
+        return {t: v / norm for t, v in w.items()} if norm else {}
+
+    inv: Dict[str, list] = {}
+    for tv, tf in t_tf.items():
+        for term, w in unit(tf).items():
+            inv.setdefault(term, []).append((tv, w))
+    sims: Dict[Tuple[str, str], float] = {}
+    for sv, tf in s_tf.items():
+        for term, w in unit(tf).items():
+            for tv, wt in inv.get(term, ()):
+                sims[(sv, tv)] = sims.get((sv, tv), 0.0) + w * wt
+    return sims
 
 
 def py_round_half_up(x: float, scale: int) -> float:

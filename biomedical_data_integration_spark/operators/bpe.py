@@ -30,6 +30,7 @@ from typing import Iterable, List, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import planning
 from ..functions.strings import char_ngrams
 from ..session import local_frame
 from .text import tokens_expr
@@ -206,21 +207,12 @@ def encode_bpe(
 # Heaps-bounded word table.
 # ---------------------------------------------------------------------------
 
-# Greedy segmentation inlines the piece vocabulary as a literal array (the
-# kmeans literal-centroid discipline): each fold step compares the cursor
-# against every piece, so the expression is O(word_len * |pieces|). Past
-# this limit encode_unigram routes to the broadcast-join kernel
-# (segment_words_join) via planning.segmentation_kernel — the same
-# switchover planning.centroid_assign_kernel applies to centroids.
-# (Kept equal to planning.SEGMENT_LITERAL_LIMIT; this name predates the
-# policy and stays as the train-side guard.)
-UNIGRAM_LITERAL_LIMIT = 2_000
-
-
-def _seg_kernel(n_pieces: int) -> str:
-    from .. import planning
-
-    return planning.segmentation_kernel(n_pieces)
+# Greedy segmentation inlines the piece vocabulary as a literal array:
+# each fold step compares the cursor against every piece, so the
+# expression is O(word_len * |pieces|). Past planning.SEGMENT_LITERAL_LIMIT
+# pieces train_unigram and encode_unigram route to the broadcast-join
+# kernel (segment_words_join) via planning.segmentation_kernel, and the
+# literal kernel refuses a vocabulary that large when forced.
 
 
 def _greedy_segment(word, pieces: List[str]):
@@ -318,7 +310,7 @@ def segment_words_join(
     """Greedy longest-match segmentation of a word table against an
     arbitrarily large piece vocabulary — the ``"join"`` kernel of
     ``planning.segmentation_kernel`` (round-11 verdict item 2; the
-    literal-fold kernel caps at UNIGRAM_LITERAL_LIMIT pieces while
+    literal-fold kernel caps at SEGMENT_LITERAL_LIMIT pieces while
     production SentencePiece vocabularies are 32k–256k).
 
     Shape (the word side — the corpus-derived table — is never
@@ -517,10 +509,9 @@ def train_unigram(
     2. each iteration segments every word against the CURRENT piece set
        (greedy longest-match — the deterministic hard-E-step; the
        expression-level fold runs distributed over the word table with
-       the pieces inlined as literals, the kmeans literal-centroid
-       discipline) and counts piece usage weighted by word frequency
-       (one map-side-combinable groupBy, collected at piece-vocabulary
-       size);
+       the pieces inlined as literals) and counts piece usage weighted
+       by word frequency (one map-side-combinable groupBy, collected at
+       piece-vocabulary size);
     3. the M-step keeps the ``vocab_size`` most-used pieces
        (usage desc, piece asc); zero-usage pieces drop out — the
        unigram PRUNE step, which is what the iterations are for:
@@ -558,7 +549,7 @@ def train_unigram(
         # literal fold below the limit; past it — real SentencePiece
         # candidate pools are 1M+ substrings — the broadcast-join
         # kernel (segment_words_join), bit-equal by construction
-        kern = kernel or _seg_kernel(len(pieces))
+        kern = kernel or planning.segmentation_kernel(len(pieces))
         if kern == "join":
             pieces_df = local_frame(
                 wc.sparkSession, [(p,) for p in pieces], "piece string"
@@ -574,12 +565,12 @@ def train_unigram(
                 )
             )
         else:
-            if len(pieces) > UNIGRAM_LITERAL_LIMIT:
+            if len(pieces) > planning.SEGMENT_LITERAL_LIMIT:
                 raise ValueError(
                     f"train_unigram: candidate_pool {len(pieces)} "
-                    f"exceeds UNIGRAM_LITERAL_LIMIT="
-                    f"{UNIGRAM_LITERAL_LIMIT} for the literal kernel — "
-                    "use kernel='join' (segment_words_join)"
+                    f"exceeds SEGMENT_LITERAL_LIMIT="
+                    f"{planning.SEGMENT_LITERAL_LIMIT} for the literal "
+                    "kernel — use kernel='join' (segment_words_join)"
                 )
             seg_rows = wc.select(
                 F.explode(
@@ -715,18 +706,16 @@ def encode_unigram(
     tests/test_bpe.py)."""
     pieces = [p for p, _ in usage]
     if kernel is None:
-        from .. import planning
-
         kernel = planning.segmentation_kernel(len(pieces))
     if kernel == "join":
         return encode_unigram_join(
             df, pieces, id_col=id_col, text_col=text_col, out_col=out_col
         )
-    if len(pieces) > UNIGRAM_LITERAL_LIMIT:
+    if len(pieces) > planning.SEGMENT_LITERAL_LIMIT:
         raise ValueError(
             f"encode_unigram: vocab {len(pieces)} exceeds "
-            f"UNIGRAM_LITERAL_LIMIT={UNIGRAM_LITERAL_LIMIT} for the "
-            "literal kernel — use kernel='join' (encode_unigram_join)"
+            f"SEGMENT_LITERAL_LIMIT={planning.SEGMENT_LITERAL_LIMIT} for "
+            "the literal kernel — use kernel='join' (encode_unigram_join)"
         )
 
     def seg_tok(w):

@@ -9,13 +9,10 @@ Design for 100 TB:
 
 - **Lloyd's k-means** (:func:`kmeans`): centroids are k x dim doubles —
   driver-held between iterations — so every iteration is ONE scan of the
-  corpus with the centroids shipped either as array literals (small k)
-  or as ONE broadcast single-row array-of-structs (large k; routed by
-  ``planning.centroid_assign_kernel`` — the literal form's plan is
-  O(k·dim) and re-codegens every iteration because the literal values
-  change, so above ``CENTROID_LITERAL_LIMIT`` the constant-shape
-  higher-order fold over the broadcast array takes over: plan size O(1)
-  in k, one codegen for the whole fit). Each iteration then runs ONE
+  corpus with the centroids shipped as ONE broadcast single-row
+  array-of-structs and a constant-shape higher-order fold over it (plan
+  size O(1) in k, one codegen for the whole fit; see
+  :func:`_with_assignment`). Each iteration then runs ONE
   tiny shuffle of k groups for the centroid update (partial aggregation
   combines map-side; the exchange carries k x dim doubles per
   partition, not rows). No corpus shuffle, no cache requirement: each
@@ -42,52 +39,12 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.vectors import dot, norm
 from biomedical_data_integration_spark.session import local_frame
-
-
-def _sq_dist(vec: Column, centroid: Sequence[float]) -> Column:
-    """Squared euclidean distance to a constant centroid, as one fold over
-    a single array literal (plan size independent of dim — same lesson as
-    the hyperplane literals in operators/similarity.py)."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.lit(list(centroid)),
-            lambda v, c: (v.cast("double") - c) * (v.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _assign_expr(
-    vec: Column, centroids: Sequence[Sequence[float]], scale: int
-) -> Column:
-    """(cluster, dist2) struct for the nearest centroid: distances round
-    to ``scale`` decimals before the argmin, ties break on cluster id —
-    struct ordering gives min by (dist2, cluster) in one expression.
-
-    This is the LITERAL kernel (one inlined fold per centroid): plan
-    size O(k·dim) and re-codegen'd whenever the literal values change.
-    Use :func:`_with_assignment`, which routes through
-    ``planning.centroid_assign_kernel`` to the broadcast-join kernel
-    above ``CENTROID_LITERAL_LIMIT`` centroids."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    F.round(_sq_dist(vec, c), scale).alias("dist2"),
-                    F.lit(i).alias("cluster"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-    )
 
 
 def _with_assignment(
@@ -96,34 +53,22 @@ def _with_assignment(
     centroids: Sequence[Sequence[float]],
     scale: int,
     out: str = "__a",
-    kernel: Optional[str] = None,
 ) -> DataFrame:
-    """Append ``out`` = nearest-centroid ``struct(dist2, cluster)``,
-    choosing the kernel by ``planning.centroid_assign_kernel(k)``.
+    """Append ``out`` = nearest-centroid ``struct(dist2, cluster)``.
 
-    - ``literal``: :func:`_assign_expr` — k inlined constant folds.
-      Fastest for small k, but plan size grows O(k·dim) and k-means
-      recompiles it every iteration (the literals change).
-    - ``join``: centroids ship as ONE broadcast single-row
-      ``array<struct<cluster,cvec>>`` crossJoined on (broadcast
-      nested-loop against one row — no shuffle, no row explosion) and
-      the argmin is ``array_min(transform(...))`` over that runtime
-      array: plan shape CONSTANT in k, one codegen reused across all
-      iterations, per-row work the same O(k·dim) arithmetic. With
-      SemDeDup's auto-k (k ∝ n) this keeps the plan from growing with
-      the corpus — the 100 TB requirement (janino bails to interpreted
-      mode long before k=10k literal folds).
+    The centroids ship as ONE broadcast single-row
+    ``array<struct<cluster,cvec>>`` crossJoined on (broadcast
+    nested-loop against one row — no shuffle, no row explosion) and the
+    argmin is ``array_min(transform(...))`` over that runtime array:
+    plan shape CONSTANT in k, one codegen reused across all k-means
+    iterations (the centroid values are data, not literals), per-row
+    work O(k·dim). With SemDeDup's auto-k (k ∝ n) the plan does not
+    grow with the corpus. A literal form with one inlined fold per
+    centroid was slower even at k <= 4 (planning.py docstring).
 
-    Both kernels round dist2 to ``scale`` decimals BEFORE the argmin
-    and tiebreak on cluster id, with identical left-to-right fold
-    order — assignments are bit-equal, so the SQL oracle is
-    kernel-agnostic."""
-    from biomedical_data_integration_spark import planning
-
-    if kernel is None:
-        kernel = planning.centroid_assign_kernel(len(centroids))
-    if kernel == "literal":
-        return df.withColumn(out, _assign_expr(F.col(vec_col), centroids, scale))
+    dist2 is a left-to-right double fold rounded to ``scale`` decimals
+    BEFORE the argmin, ties break on cluster id — the contract every
+    SQL oracle replays."""
     cents = local_frame(
         df.sparkSession,
         [([(i, [float(x) for x in c]) for i, c in enumerate(centroids)],)],
@@ -655,7 +600,7 @@ def semantic_dedup(
 
     **Auto-k routes through the two-level hierarchy past
     ``planning.SEMDEDUP_FLAT_LIMIT``** (``flat_limit`` overrides): with
-    k ∝ n, even the flat join-kernel assignment is O(n·k·dim) —
+    k ∝ n, even the flat broadcast-table assignment is O(n·k·dim) —
     quadratic in n — so large fits run :func:`semantic_dedup_two_level`
     and remap its (coarse, sub) cell to ``cluster = coarse·k2 + sub``,
     keeping this function's ``(id_col, cluster)`` surface. An explicit
@@ -847,7 +792,7 @@ def embedding_outliers(
     distance threshold misses (each cluster supplies its own deviation
     unit, so dense and diffuse clusters are judged on their own terms).
 
-    Pure composition: the kmeans fit (kernel-policy assignment) plus
+    Pure composition: the kmeans fit plus
     ``profiling.robust_zscore`` on the cluster-keyed dist2 — both
     already SQL-replayable, so the composition is too. Returns
     ``(id_col, cluster, dist2, outlier_rz)``; NULL score in clusters
@@ -1184,10 +1129,10 @@ def assign_clusters(
     scale: Optional[int] = None,
 ) -> DataFrame:
     """Nearest-centroid assignment against FIXED centroids — the serving /
-    streaming face of :func:`kmeans`. Pure stateless projection (centroid
-    literals, no shuffle, no state), so it runs unchanged on a streaming
-    DataFrame: fit centroids on the batch corpus with ``kmeans`` and score
-    arriving vectors with this on ``readStream``.
+    streaming face of :func:`kmeans`. Stateless (a broadcast 1-row
+    centroid table, no shuffle, no state), so it runs unchanged on a
+    streaming DataFrame: fit centroids on the batch corpus with ``kmeans``
+    and score arriving vectors with this on ``readStream``.
 
     Appends ``cluster`` (int) and ``dist2`` (rounded squared distance).
     """
@@ -1195,11 +1140,10 @@ def assign_clusters(
         scale = config.SIMILARITY_SCALE
     if not centroids:
         raise ValueError("assign_clusters: centroids must be non-empty")
-    # the kernel policy applies on streams too: a stream-static
-    # broadcast crossJoin against the 1-row centroid table is supported
-    # (stateless, no watermark requirement), so large-k serving plans
-    # stay O(1) in k exactly like the batch fits (tested stream==batch
-    # on both kernels)
+    # a stream-static broadcast crossJoin against the 1-row centroid
+    # table is supported (stateless, no watermark requirement), so
+    # serving plans stay O(1) in k exactly like the batch fits (tested
+    # stream==batch)
     out = _with_assignment(df, vec_col, centroids, scale)
     return out.withColumns(
         {

@@ -107,49 +107,6 @@ class BaseSchemaMatcher:
         raise NotImplementedError
 
 
-def _py_name_sims(
-    source_names: List[str], target_names: List[str]
-) -> Dict[tuple, float]:
-    """Char-n-gram TF-IDF cosine between every (source, target) name
-    pair, driver-side — the shared linguistic kernel of the
-    name-similarity and Cupid matchers. IDF fits on the union corpus
-    (a name present on both sides counts once per side)."""
-    import math
-
-    from biomedical_data_integration_spark.functions.strings import (
-        py_char_ngram_tf,
-        py_clean_string,
-    )
-
-    s_tf = {c: py_char_ngram_tf(py_clean_string(c)) for c in source_names}
-    t_tf = {c: py_char_ngram_tf(py_clean_string(c)) for c in target_names}
-    docs = list(s_tf.values()) + list(t_tf.values())
-    n_docs = float(len(docs))
-    df_counts: Dict[str, int] = {}
-    for tf in docs:
-        for term in tf:
-            df_counts[term] = df_counts.get(term, 0) + 1
-    idf = {
-        term: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0
-        for term, df in df_counts.items()
-    }
-
-    def weights(tf: Dict[str, float]) -> Dict[str, float]:
-        w = {term: f * idf[term] for term, f in tf.items()}
-        norm = math.sqrt(sum(v * v for v in w.values()))
-        return {term: v / norm for term, v in w.items()} if norm else {}
-
-    s_w = {c: weights(tf) for c, tf in s_tf.items()}
-    t_w = {c: weights(tf) for c, tf in t_tf.items()}
-    return {
-        (sc, tc): sum(
-            w * wt[term] for term, w in ws.items() if term in wt
-        )
-        for sc, ws in s_w.items()
-        for tc, wt in t_w.items()
-    }
-
-
 def _name_score_rows(
     source_names: List[str], target_names: List[str]
 ) -> List[Tuple[str, str, float]]:
@@ -157,11 +114,12 @@ def _name_score_rows(
     ``F.round``; pairs sharing no terms produce no row."""
     from biomedical_data_integration_spark.functions.strings import (
         py_round_half_up,
+        py_tfidf_cosines,
     )
 
     return [
         (sc, tc, py_round_half_up(sim, config.SIMILARITY_SCALE))
-        for (sc, tc), sim in _py_name_sims(source_names, target_names).items()
+        for (sc, tc), sim in py_tfidf_cosines(source_names, target_names).items()
         if sim > 0.0
     ]
 
@@ -309,13 +267,14 @@ class CupidSchemaMatcher(BaseSchemaMatcher):
     def scores(self, source, target, allowed_pairs=None):
         from biomedical_data_integration_spark.functions.strings import (
             py_round_half_up,
+            py_tfidf_cosines,
         )
 
         spark = source.sparkSession
         s_inner, s_leaves = _schema_tree(source.schema)
         t_inner, t_leaves = _schema_tree(target.schema)
         # linguistic kernel over node NAMES (leaf and inner alike)
-        lsim_by_name = _py_name_sims(
+        lsim_by_name = py_tfidf_cosines(
             sorted({n["name"] for n in s_inner + s_leaves}),
             sorted({n["name"] for n in t_inner + t_leaves}),
         )

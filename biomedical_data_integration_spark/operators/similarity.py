@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from typing import Optional
 
-from biomedical_data_integration_spark import config, planning
+from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.hashing import hex_nibble
 from biomedical_data_integration_spark.functions.vectors import cosine, dot, norm
 from biomedical_data_integration_spark.session import local_frame
@@ -625,9 +625,8 @@ def pq_train(
     def _assign(cb) -> Column:
         # literal codebook array indexed by subspace; per row: argmin
         # over (rounded dist2, code) — lexicographic array_min IS the
-        # tiebreak. m·n_codes·dsub literals = dim·n_codes doubles; past
-        # ~10^5 of those, switch to the broadcast-join assignment kernel
-        # (planning.centroid_assign_kernel) — same policy as kmeans.
+        # tiebreak. m·n_codes·dsub literals = dim·n_codes doubles at
+        # every size (no broadcast-table form here, unlike kmeans).
         # ONE nested array literal for every codebook and an indexed
         # transform for the per-code distances: identical arithmetic
         # and (dist2, code) tiebreak, but the per-round plan carries a
@@ -1290,8 +1289,6 @@ def ivfpq_probe_many(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    kernel: Optional[str] = None,
-    literal_limit: Optional[int] = None,
 ) -> DataFrame:
     """Batch ADC probe (round-11 verdict item 3): score a query TABLE
     against one (persisted) IVFPQ index in ONE partition-pruned scan —
@@ -1307,19 +1304,14 @@ def ivfpq_probe_many(
     PartitionFilters; a broadcast (query_id, cell) pair join fans each
     pruned row out to exactly the queries probing its cell; top-k is a
     per-query window. The corpus vectors are never read; per-row cost
-    stays m lookups + a bigint sum under EITHER kernel.
+    stays m lookups + a bigint sum.
 
-    Kernel routing (``planning.adc_kernel`` on
-    ``batch · nprobe · m · n_codes`` — round-11 verdict item 4): small
-    batches inline the per-(query, cell) tables as a literal CASE
-    (fully codegen-visible); past the limit the tables ship as ONE
-    broadcast single-row ``map<"qid|cell", table>`` relation and the
-    scoring expression does an ``element_at`` into it — the plan stays
-    CONSTANT-shape in batch size (a 500-query eval batch would
-    otherwise compile ~4M literals, past janino's method budget).
-    Bit-equal across kernels (parity-gated). ``kernel``/
-    ``literal_limit`` override the policy (tests drive the at-scale
-    kernel on small data)."""
+    The tables ship as ONE broadcast single-row ``map<"qid|cell",
+    table>`` relation and the scoring expression does an ``element_at``
+    into it, so the plan stays CONSTANT-shape in batch size (inlined as
+    literals, a 500-query eval batch would compile ~4M of them, past
+    janino's method budget). A literal CASE form was slower even at the
+    registry's 5-query batch (planning.py docstring)."""
     rows = queries.select(query_id_col, vec_col).collect()
     if not rows:
         raise ValueError("ivfpq_probe_many: empty query table")
@@ -1354,50 +1346,26 @@ def ivfpq_probe_many(
         spark, pairs, f"{query_id_col} {qid_type}, cell int"
     )
     cells = sorted({c for _, c in pairs})
-    m, n_codes = len(codebooks), len(codebooks[0])
-    chosen = kernel or planning.adc_kernel(
-        len(tables) * m * n_codes, literal_limit
+    # ONE broadcast single-row map relation carries every table; the
+    # cross join is a 1-row BroadcastNestedLoopJoin and the plan never
+    # mentions a single ADC value
+    mapping = {f"{qid}|{cell}": tab for (qid, cell), tab in tables.items()}
+    adc_df = local_frame(
+        spark, [(mapping,)], "__adc map<string,array<array<bigint>>>"
     )
-
-    pruned = index_df.where(F.col("cell").isin(cells)).join(
-        F.broadcast(pairs_df), "cell"
+    pruned = (
+        index_df.where(F.col("cell").isin(cells))
+        .join(F.broadcast(pairs_df), "cell")
+        .crossJoin(F.broadcast(adc_df))
     )
-    if chosen == "literal":
-
-        def lit_table(key: tuple) -> Column:
-            return F.lit(
-                [[int(v) for v in row] for row in tables[key]]
-            ).cast("array<array<bigint>>")
-
-        table_sel = None
-        for qid, cell in tables:
-            cond = (F.col(query_id_col) == F.lit(qid)) & (
-                F.col("cell") == cell
-            )
-            table_sel = (
-                F.when(cond, lit_table((qid, cell)))
-                if table_sel is None
-                else table_sel.when(cond, lit_table((qid, cell)))
-            )
-    else:
-        # ONE broadcast single-row map relation carries every table;
-        # the cross join is a 1-row BroadcastNestedLoopJoin and the
-        # plan no longer mentions a single ADC value
-        mapping = {
-            f"{qid}|{cell}": tab for (qid, cell), tab in tables.items()
-        }
-        adc_df = local_frame(
-            spark, [(mapping,)], "__adc map<string,array<array<bigint>>>"
-        )
-        pruned = pruned.crossJoin(F.broadcast(adc_df))
-        table_sel = F.element_at(
-            F.col("__adc"),
-            F.concat(
-                F.col(query_id_col).cast("string"),
-                F.lit("|"),
-                F.col("cell").cast("string"),
-            ),
-        )
+    table_sel = F.element_at(
+        F.col("__adc"),
+        F.concat(
+            F.col(query_id_col).cast("string"),
+            F.lit("|"),
+            F.col("cell").cast("string"),
+        ),
+    )
     micro = F.aggregate(
         F.zip_with(
             table_sel,

@@ -383,67 +383,31 @@ class TfIdfValueMatcher(BaseValueMatcher):
 
     def local_similarities(self, s_rows: list, t_rows: list) -> list:
         """Driver-side evaluation of the exact kernel formula for
-        driver-sized domains (inverted index — cost is shared-term pairs,
-        the same sparsity the distributed term join exploits)."""
-        import math
+        driver-sized domains (:func:`py_tfidf_cosines`, an inverted term
+        index — cost is shared-term pairs, the same sparsity the
+        distributed term join exploits), one IDF corpus per pair."""
         from collections import defaultdict
 
         from biomedical_data_integration_spark.functions.strings import (
-            py_char_ngram_tf,
-            py_clean_string,
+            py_tfidf_cosines,
         )
 
-        by_pair: Dict[Tuple[str, str], Tuple[list, list]] = defaultdict(
-            lambda: ([], [])
+        by_pair: Dict[Tuple[str, str], Tuple[list, dict]] = defaultdict(
+            lambda: ([], {})
         )
         for r in s_rows:
             by_pair[(r["source_column"], r["target_column"])][0].append(r["skey"])
         for r in t_rows:
-            by_pair[(r["source_column"], r["target_column"])][1].append(
-                (r["tkey"], r["target_value"])
-            )
-
-        tf_cache: Dict[str, dict] = {}
-
-        def tf_of(v: str) -> dict:
-            if v not in tf_cache:
-                tf_cache[v] = py_char_ngram_tf(
-                    py_clean_string(v), self.n_min, self.n_max
-                )
-            return tf_cache[v]
-
-        out = []
-        for (sc, tc), (svals, tvals) in by_pair.items():
-            docs = [tf_of(v) for v in svals] + [tf_of(k) for k, _ in tvals]
-            n_docs = float(len(docs))
-            dfc: Dict[str, int] = defaultdict(int)
-            for tf in docs:
-                for term in tf:
-                    dfc[term] += 1
-            idf = {
-                term: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0
-                for term, df in dfc.items()
-                if self.max_df_fraction is None
-                or df <= self.max_df_fraction * n_docs
-            }
-
-            def wvec(tf: dict) -> dict:
-                w = {t: f * idf[t] for t, f in tf.items() if t in idf}
-                norm = math.sqrt(sum(v * v for v in w.values()))
-                return {t: v / norm for t, v in w.items()} if norm else {}
-
-            inv: Dict[str, list] = defaultdict(list)
-            for tkey, tval in tvals:
-                for term, w in wvec(tf_of(tkey)).items():
-                    inv[term].append((tkey, tval, w))
-            for skey in svals:
-                acc: Dict[Tuple[str, str], float] = defaultdict(float)
-                for term, w in wvec(tf_of(skey)).items():
-                    for tkey, tval, wt in inv[term]:
-                        acc[(tkey, tval)] += w * wt
-                for (tkey, tval), sim in acc.items():
-                    out.append((sc, tc, skey, tval, sim))
-        return out
+            by_pair[(r["source_column"], r["target_column"])][1][r["tkey"]] = r[
+                "target_value"
+            ]
+        return [
+            (sc, tc, skey, tvals[tkey], sim)
+            for (sc, tc), (skeys, tvals) in by_pair.items()
+            for (skey, tkey), sim in py_tfidf_cosines(
+                skeys, tvals, self.n_min, self.n_max, self.max_df_fraction
+            ).items()
+        ]
 
     def _tf_maps(self, dom: DataFrame, key: str) -> DataFrame:
         """(pair, value_key, tf: map<term,count>) — term frequencies built

@@ -44,24 +44,42 @@ Scale rationale for the defaults:
   semantics) stays flat. Measured over 600k bigint rows, noop sink,
   ``local[4]``: equal at 100 entries (0.29 vs 0.26 s build plus run), the
   join 5x faster at 1,000 and 40x at 10,000 (PERF_NOTES,
-  "``LITERAL_DICT_LIMIT`` re-measured").
-- ``CENTROID_LITERAL_LIMIT`` (4 centroids): nearest-centroid
-  assignment inlines one zip_with/aggregate fold PER CENTROID when the
-  centroids ride as literals — plan size O(k·dim), and k-means
-  re-codegens it EVERY iteration because the literal values change
-  (the changing-literal churn trap). Above the limit the centroids
-  ship as ONE broadcast single-row array-of-structs and the argmin is
-  a constant-shape higher-order fold: plan size O(1) in k, one codegen
-  reused across iterations, and with SemDeDup's auto-k (k ∝ n) the
-  PLAN no longer grows with the corpus. Arithmetic is identical
-  (rounded dist2, cluster-id tiebreak), so assignments are bit-equal
-  across kernels. The limit is low on purpose: measured at sf0.1
-  (n=2k, dim=64, 3-iteration fits, tools/bench_centroid_kernel.py)
-  the join kernel wins from k=8 (3.8s vs 5.6s), 2.5x at k=20, 4.9x at
-  k=200, with FLAT per-(row·k) cost (28-79 us) where the literal
-  kernel pays codegen churn per iteration — churn, not per-row math,
-  dominates small-k fits. Only trivial k<=4 (binary splits, stream
-  faces) stays on the pure-projection literal form.
+  "``LITERAL_DICT_LIMIT`` re-measured"). The pair stays: on
+  ``harmonize_end_to_end`` at sf0.001 (7 reps) the literal kernel ran
+  1.52 s and 8 jobs against the join's 1.66 s and 10 jobs, because a
+  broadcast ``LocalRelation`` still costs a job. Each side serves a
+  benchmark workload: ``harmonize_gdc`` maps small literal
+  dictionaries, ``materialize_10x`` its 20k-entry one by the join.
+- ``SEGMENT_LITERAL_LIMIT`` (2,000 pieces): see
+  :func:`segmentation_kernel`. The pair stays because the literal kernel
+  is faster at the registry's vocabulary sizes: forcing the join kernel
+  (limit 0) at sf0.01 took ``unigram_vocab_documents`` from 1.26 to
+  2.53 s and ``unigram_encode_documents`` from 2.22 to 2.65 s.
+
+Two literal kernels were deleted because their constant-shape twin was
+as fast or faster everywhere the literal form was picked:
+
+- Nearest-centroid assignment (``clustering._with_assignment``) used to
+  inline one zip_with/aggregate fold per centroid for k <= 4, a plan
+  O(k·dim) that k-means re-codegens every iteration because the literal
+  values change. Round 7 measured the broadcast single-row
+  array-of-structs kernel (sf0.1, n=2k, dim=64, 3-iteration fits):
+  faster from k=8 (3.8 vs 5.6 s), 2.5x at k=20, 4.9x at k=200, with a
+  flat 28-79 us per (row·k) where the literal form pays codegen churn
+  per iteration.
+- Batch ADC (``similarity.ivfpq_probe_many``) used to inline the
+  per-(query, cell) tables as a literal CASE up to 2,000 entries; past
+  that they shipped as one broadcast single-row ``map<qid|cell, table>``.
+
+  An A/B forcing the constant-shape kernel on every face where the
+  literal one was picked (one ``local[4]`` session at sf0.1, noop sink,
+  5 alternating reps, equal output checksums; literal -> constant-shape
+  medians): ``kmeans_maxmin_embeddings`` 2.75 -> 2.16 s,
+  ``ivfpq_probe_persisted_many_embeddings`` 1.07 -> 0.78 s,
+  ``ivfpq_recall_eval_embeddings`` 1.63 -> 1.33 s,
+  ``ivfpq_persist_index_embeddings`` (k=4 training) 3.09 -> 2.79 s,
+  ``ivfpq_topk_embeddings`` 2.30 -> 2.38 s (within noise). Both
+  operators now always use the constant-shape form.
 """
 
 from __future__ import annotations
@@ -73,12 +91,10 @@ EXACT_PAIR_LIMIT = 2_000_000
 BRUTE_VECTOR_LIMIT = 20_000
 DRIVER_EDGE_LIMIT = 1_000_000
 LITERAL_DICT_LIMIT = 100
-CENTROID_LITERAL_LIMIT = 4
 SEGMENT_LITERAL_LIMIT = 2_000
 SEMDEDUP_FLAT_LIMIT = 20_000
 RANK_SORT_LIMIT = 4_000_000
 MAXMIN_SEED_LIMIT = 20
-ADC_LITERAL_LIMIT = 2_000
 
 
 def _resolve(limit: Optional[int], default: int) -> int:
@@ -193,32 +209,3 @@ def segmentation_kernel(n_pieces: int, limit: Optional[int] = None) -> str:
     reassembly any join-based encoder pays."""
     lim = _resolve(limit, SEGMENT_LITERAL_LIMIT)
     return "literal" if n_pieces <= lim else "join"
-
-
-def adc_kernel(n_entries: int, limit: Optional[int] = None) -> str:
-    """``"literal"`` per-(query, cell) inlined ADC tables for small
-    probe batches, else ``"broadcast"``: all tables ship as ONE
-    broadcast single-row ``map<(query|cell), table>`` relation and the
-    scoring expression indexes into it — constant plan shape in batch
-    size (round-11 verdict item 4; the ``centroid_assign_kernel``
-    pattern applied to the batch ADC probe).
-
-    ``n_entries`` is the total literal count the inline kernel would
-    compile: ``batch · nprobe · m · n_codes``. The literal kernel keeps
-    the graded 5-query face's plan fully codegen-visible (320 entries
-    at the registry parameters); a 500-query eval batch at m=8,
-    n_codes=256 is ~4M literals — past janino's 64 KB method budget
-    and re-planned per batch (the changing-literal churn trap). Above
-    the limit the tables move to the broadcast map: the plan no longer
-    grows with the batch, the per-index-row cost stays m lookups + a
-    bigint sum, and parity is bit-exact across kernels (gated)."""
-    lim = _resolve(limit, ADC_LITERAL_LIMIT)
-    return "literal" if n_entries <= lim else "broadcast"
-
-
-def centroid_assign_kernel(k: int, limit: Optional[int] = None) -> str:
-    """``"literal"`` per-centroid inlined folds for small k, else
-    ``"join"`` (broadcast single-row centroid table + constant-shape
-    higher-order argmin)."""
-    lim = _resolve(limit, CENTROID_LITERAL_LIMIT)
-    return "literal" if k <= lim else "join"

@@ -72,13 +72,6 @@ class ValueMapper:
     def expr(self, source_column: str) -> Column:
         raise NotImplementedError
 
-    def rewrite(self, df: DataFrame, source_column: str, target_column: str) -> DataFrame:
-        """Default rewrite: attach/replace ``target_column`` via ``expr``.
-
-        Mappers that need a join (large dictionaries) override this.
-        """
-        return df.withColumn(target_column, self.expr(source_column))
-
 
 class IdentityValueMapper(ValueMapper):
     """Copy the input column unchanged (rename-only mapping).
@@ -260,11 +253,6 @@ class DictionaryMapper(ValueMapper):
             F.broadcast(mapping), source_key == F.col("__dm_key"), "left"
         )
         return joined.drop("__dm_key")
-
-    def rewrite(self, df: DataFrame, source_column: str, target_column: str) -> DataFrame:
-        if self.is_large():
-            return self.as_join(df, source_column, target_column)
-        return df.withColumn(target_column, self.expr(source_column))
 
 
 def _value_type(spark: SparkSession, values: Iterable) -> DataType:

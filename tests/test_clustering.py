@@ -493,42 +493,45 @@ def test_semantic_dedup_two_level_drops_same_cell_dups(spark):
     assert 1 not in survivors and 3 not in survivors
 
 
-def test_centroid_kernels_bit_equal(spark):
-    """The literal and broadcast-join assignment kernels must produce
-    BIT-EQUAL (cluster, dist2) — the property that lets every SQL oracle
-    stay kernel-agnostic."""
+def test_centroid_assignment_matches_python_replay(spark):
+    """The assignment kernel gives BIT-EQUAL (cluster, dist2) to a replay
+    of the contract every SQL oracle follows: a left-to-right double fold
+    of squared differences, rounded HALF_UP to ``scale``, then argmin on
+    (dist2, cluster) — at k = 1, at small k and past it."""
     import random
 
-    from biomedical_data_integration_spark.operators.clustering import (
-        _with_assignment,
-    )
+    from biomedical_data_integration_spark.functions.strings import py_round_half_up
+    from biomedical_data_integration_spark.operators.clustering import _with_assignment
 
     rng = random.Random(11)
     pts = [(i, [rng.uniform(-5, 5) for _ in range(16)]) for i in range(200)]
     df = spark.createDataFrame(pts, "vec_id int, embedding array<double>")
-    cents = [[rng.uniform(-5, 5) for _ in range(16)] for _ in range(12)]
 
-    def grab(kernel):
-        out = _with_assignment(df, "embedding", cents, 6, kernel=kernel)
-        return {
-            r["vec_id"]: (r["__a"]["cluster"], r["__a"]["dist2"])
-            for r in out.select("vec_id", "__a").collect()
-        }
+    def dist2(vec, c):
+        acc = 0.0
+        for v, x in zip(vec, c):
+            acc = acc + (v - x) * (v - x)
+        return py_round_half_up(acc, 6)
 
-    assert grab("literal") == grab("join")
+    for k in (1, 4, 12):
+        cents = [[rng.uniform(-5, 5) for _ in range(16)] for _ in range(k)]
+        out = _with_assignment(df, "embedding", cents, 6).select("vec_id", "__a")
+        got = {r[0]: (r[1]["dist2"], r[1]["cluster"]) for r in out.collect()}
+        want = {i: min((dist2(v, c), j) for j, c in enumerate(cents)) for i, v in pts}
+        assert got == want, k
 
 
 def test_assign_clusters_streaming_join_kernel(spark):
-    """Streaming assignment above CENTROID_LITERAL_LIMIT rides the
-    broadcast-join kernel (stream-static crossJoin) and still matches
-    the batch face row for row."""
+    """Streaming assignment at k=8 rides the broadcast centroid table
+    (stream-static crossJoin) and still matches the batch face row for
+    row."""
     import tempfile
 
     from biomedical_data_integration_spark.operators.clustering import (
         assign_clusters,
     )
 
-    cents = [[float(5 * i), 0.0] for i in range(8)]  # k=8 > limit
+    cents = [[float(5 * i), 0.0] for i in range(8)]
     batch = _vecs(
         spark, [(i, [float(5 * i) + 0.4, 0.1]) for i in range(8)]
     )

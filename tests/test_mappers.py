@@ -57,7 +57,8 @@ def test_large_dictionary_uses_broadcast_join(spark):
     with pytest.raises(ValueError):
         m.expr("x")
     df = spark.createDataFrame([("k7",), ("nope",)], ["x"])
-    out = m.rewrite(df, "x", "y")
+    out = materialize_mapping(df, [{"source": "x", "target": "x"},
+                                   {"source": "x", "target": "y", "mapper": m}])
     got = {(r["x"], r["y"]) for r in out.collect()}
     assert got == {("k7", "v7"), ("nope", None)}
 
@@ -205,7 +206,9 @@ def test_join_kernel_one_row_per_key_string(spark):
     assert m.is_large()
     df = spark.range(10).withColumn("s", F.col("id").cast("string"))
     for column in ("id", "s"):
-        out = m.rewrite(df, column, "y").collect()
+        spec = [{"source": column, "target": column},
+                {"source": column, "target": "y", "mapper": m}]
+        out = materialize_mapping(df, spec).collect()
         assert len(out) == 10
         assert {r[column]: r["y"] for r in out}[5 if column == "id" else "5"] == "five"
 

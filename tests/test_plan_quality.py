@@ -76,14 +76,14 @@ def test_arrow_python_only_where_declared(all_plans):
 
 
 def test_no_large_literal_centroid_arrays(spark):
-    """Centroid assignment above planning.CENTROID_LITERAL_LIMIT must
-    ride the broadcast-join kernel, never a literal array of per-centroid
-    folds: the literal plan is O(k·dim) and re-codegens every k-means
-    iteration, the scale ceiling the round-6 verdict flagged for auto-k
-    SemDeDup (k ∝ n). Counted on the analyzed plan string: the literal
-    kernel contributes one inlined `zip_with` per centroid inside one
-    projection, so > 128 zip_with occurrences in a single plan line
-    means a >128-centroid literal array sneaked in."""
+    """Centroid assignment must ride the broadcast centroid table,
+    never a literal array of per-centroid folds: a literal plan is
+    O(k·dim) and re-codegens every k-means iteration, the scale ceiling
+    the round-6 verdict flagged for auto-k SemDeDup (k ∝ n). Counted on
+    the analyzed plan string: a literal form contributes one inlined
+    `zip_with` per centroid inside one projection, so > 128 zip_with
+    occurrences in a single plan line means a >128-centroid literal
+    array sneaked in."""
     from biomedical_data_integration_spark.operators.clustering import (
         _with_assignment,
     )
@@ -100,7 +100,7 @@ def test_no_large_literal_centroid_arrays(spark):
     )
     worst = max(line.count("zip_with") for line in plan.splitlines())
     assert worst <= 128, f"literal centroid array of ~{worst} structs in plan"
-    # and the routed kernel is the broadcast join (centroid table column)
+    # and the centroids ride the broadcast table (its column is in the plan)
     assert "__cents" in plan
 
 
@@ -301,19 +301,19 @@ def test_unigram_persisted_encode_is_pure_projection(all_plans):
 
 
 def test_large_batch_probe_routes_broadcast_adc_kernel(all_plans):
-    """The 40-query face must route past ADC_LITERAL_LIMIT to the
-    broadcast-map kernel (round-11 verdict item 4): the pruned index
-    scan keeps its PartitionFilters, the ADC tables live in a 1-row
-    broadcast relation (BroadcastNestedLoopJoin is its sanctioned
-    join form), and the plan carries NO per-query literal CASE chain —
-    constant plan shape in batch size."""
+    """The 40-query face must score through the broadcast-map ADC
+    kernel (round-11 verdict item 4): the pruned index scan keeps its
+    PartitionFilters, the ADC tables live in a 1-row broadcast relation
+    (BroadcastNestedLoopJoin is its sanctioned join form), and the plan
+    carries NO per-query literal CASE chain — constant plan shape in
+    batch size."""
     plan = all_plans["ivfpq_probe_large_batch_embeddings"]
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters: [", 1)[1]
     assert not seg.startswith("]")
     assert "cell" in seg.split("]", 1)[0]
     assert "__adc" in plan, "broadcast ADC map relation missing"
-    # the literal kernel compiles one CASE WHEN branch per (query,
+    # a literal form would compile one CASE WHEN branch per (query,
     # cell) pair — 80 for this face; the broadcast kernel none
     assert plan.count("CASE WHEN") < 5
     # index scan + the 1-row local map relation: no corpus scan

@@ -1037,17 +1037,16 @@ def test_ivfpq_compact_and_delete_lifecycle(spark):
     assert ivfpq_delete_ids(spark, path, [10**9])["n_vectors_removed"] == 0
 
 
-def test_ivfpq_probe_many_kernels_bit_equal_and_constant_plan(spark):
-    """planning.adc_kernel routing (round-11 verdict item 4): the
-    broadcast kernel must score bit-identically to the literal CASE,
-    and its plan must stay constant-shape as the batch grows (the ADC
-    values live in the broadcast relation, not the plan)."""
-    from pyspark.sql import functions as F
-
-    from biomedical_data_integration_spark import planning
+def test_ivfpq_probe_many_matches_single_probes_and_constant_plan(spark):
+    """The broadcast-map ADC kernel (round-11 verdict item 4) must score
+    every query of a batch bit-identically to :func:`ivfpq_topk` run on
+    that query alone (both read ``_ivfpq_adc_tables``), and its plan
+    must stay constant-shape as the batch grows (the ADC values live in
+    the broadcast relation, not the plan)."""
     from biomedical_data_integration_spark.operators.similarity import (
         ivfpq_index,
         ivfpq_probe_many,
+        ivfpq_topk,
     )
 
     df, rows = _pq_fixture(spark)
@@ -1056,26 +1055,19 @@ def test_ivfpq_probe_many_kernels_bit_equal_and_constant_plan(spark):
         [(int(i), [float(x) for x in rows[i][1]]) for i in range(6)],
         "query_id bigint, embedding array<double>",
     )
-    lit = ivfpq_probe_many(idx, queries, cents, cb, k=5, nprobe=2,
-                           kernel="literal")
-    bc = ivfpq_probe_many(idx, queries, cents, cb, k=5, nprobe=2,
-                          kernel="broadcast")
-    key = lambda out: sorted(
-        (r["query_id"], r["vec_id"], r["adist"]) for r in out.collect()
+    batch = ivfpq_probe_many(idx, queries, cents, cb, k=5, nprobe=2).collect()
+    got = sorted((r["query_id"], r["vec_id"], r["adist"]) for r in batch)
+    want = sorted(
+        (i, r["vec_id"], r["adist"])
+        for i in range(6)
+        for r in ivfpq_topk(idx, rows[i][1], cents, cb, k=5, nprobe=2).collect()
     )
-    assert key(bc) == key(lit)
+    assert got == want
 
-    # policy: registry face (5q x 2probe x m4 x 8codes = 320) stays
-    # literal; a 500-query production batch routes to broadcast
-    assert planning.adc_kernel(5 * 2 * 4 * 8) == "literal"
-    assert planning.adc_kernel(500 * 2 * 8 * 256) == "broadcast"
-
-    # constant plan shape: doubling the batch under the broadcast
-    # kernel must not grow the plan string (same expressions, the map
-    # is data); the literal kernel's plan DOES grow with the batch
+    # constant plan shape: doubling the batch must not grow the plan
+    # string (same expressions, the map is data)
     def plan_len(qdf):
-        out = ivfpq_probe_many(idx, qdf, cents, cb, k=5, nprobe=2,
-                               kernel="broadcast")
+        out = ivfpq_probe_many(idx, qdf, cents, cb, k=5, nprobe=2)
         return len(out._jdf.queryExecution().executedPlan().toString())
 
     small = queries.limit(3)
