@@ -54,6 +54,7 @@ from biomedical_data_integration_spark.functions.vectors import cosine
 from biomedical_data_integration_spark.session import local_frame
 from biomedical_data_integration_spark.sources.standards import (
     Standard,
+    bounded_long_rows,
     long_form,
     resolve_target,
 )
@@ -161,8 +162,8 @@ def domain_rows(
             if v is not None
         ]
     else:
-        values = long_form(table, cols).distinct().limit(limit + 1).collect()
-        if len(values) > limit:
+        values = bounded_long_rows(table, cols, limit)
+        if values is None:
             return None
     best: Dict[Tuple[str, str], str] = {}
     for col, v in values:

@@ -8,11 +8,17 @@ materialization stream at 100 TB.
 
 Mapper catalog (reference ``bdikit/mapping_functions.py``):
 - ``IdentityValueMapper``   (:22-31) -> ``col(src)``
-- ``FunctionValueMapper``   (:34-48) -> scalar Arrow UDF that calls the
-  function once per distinct value of each Arrow batch (dictionary
-  encode, map the dictionary, take back by index), with element-wise
-  ``Series.map`` semantics: nulls pass through without a call, matching
-  pandas ``Series.map`` / the reference
+- ``FunctionValueMapper``   (:34-48) -> element-wise ``Series.map``
+  semantics (nulls pass through without a call, matching pandas
+  ``Series.map`` / the reference), the function called once per distinct
+  value. In ``materialize_mapping``, a batch string column with at most
+  ``planning.LOCAL_DOMAIN_LIMIT`` distinct values costs one bounded read
+  at plan time (recomputing the input's lineage for that column), the
+  function runs on the driver, and the mapper compiles as the equivalent
+  ``DictionaryMapper``; errors from the function surface there. Streams,
+  other source types and larger domains get a scalar Arrow UDF that maps
+  the distinct values of each Arrow batch (dictionary encode, map the
+  dictionary, take back by index)
 - ``DictionaryMapper``      (:51-65) -> literal ``create_map`` lookup for
   small dicts (missing key -> null, the defaultdict(np.nan) semantics);
   for big dictionaries ``DictionaryMapper.as_join`` (broadcast LEFT join
@@ -31,7 +37,7 @@ import datetime
 import decimal
 import re
 from functools import reduce
-from typing import Callable, Iterable, Mapping
+from typing import Callable, Iterable, Mapping, Optional, Tuple
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -46,12 +52,14 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     _infer_type,
     _merge_type,
 )
 
 from biomedical_data_integration_spark import planning
 from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.sources.standards import bounded_long_rows
 
 # Above planning.LITERAL_DICT_LIMIT entries a dictionary compiles to a
 # broadcast-join plan rather than a literal map expression: the literal
@@ -88,21 +96,35 @@ class FunctionValueMapper(ValueMapper):
 
     Reference semantics is ``Series.map(fn)`` (``mapping_functions.py:48``):
     the function sees one scalar at a time and nulls pass through without
-    calling ``fn``. Implemented as a scalar Arrow UDF that calls ``fn``
-    once per distinct value of each Arrow batch: the batch is dictionary
-    encoded, ``fn`` maps the dictionary only, and the result is taken
-    back by the indices (a null index stays null; a batch of nulls only
-    is all null). ``fn`` must therefore be deterministic, which Spark's
-    UDF contract already assumes.
+    calling ``fn``. ``fn`` must be deterministic, which Spark's UDF
+    contract already assumes: it is called once per distinct value, in
+    one of two places.
 
-    ``fn`` sees the scalars a pandas UDF's ``Series.map`` would: the
-    dictionary goes through the pandas UDF converter, with one null added
-    when the batch has nulls so its dtype is the whole batch's (an integer
-    column with nulls arrives as float64), and NaN skips ``fn`` too. The
-    results go back to Arrow through the same converter, under the
-    session's time zone and Arrow safety settings read when the
-    expression is built. Nested values (arrays, maps), which Arrow
-    cannot hash, are mapped row by row.
+    - In :func:`~.plans.spec.materialize_mapping`, a batch (not
+      streaming) string column whose distinct non-null values number at
+      most ``planning.LOCAL_DOMAIN_LIMIT`` is mapped on the driver
+      (:meth:`as_dictionary`): one bounded read at plan time, which
+      recomputes the input's lineage for that column, then ``fn`` once
+      per value, and the mapper runs as the equivalent
+      :class:`DictionaryMapper` cast to ``return_type``. Errors from
+      ``fn`` surface at ``materialize_mapping``. Nested and
+      ``timestamp_ntz`` return types are excluded: their Python values
+      do not round-trip exactly through a literal.
+    - Everywhere else (:meth:`expr`: streams, other source types, larger
+      domains) it is a scalar Arrow UDF that calls ``fn`` once per
+      distinct value of each Arrow batch: the batch is dictionary
+      encoded, ``fn`` maps the dictionary only, and the result is taken
+      back by the indices (a null index stays null; a batch of nulls only
+      is all null).
+
+    ``fn`` sees the scalars a pandas UDF's ``Series.map`` would, on both
+    paths (:meth:`_distinct_map`): the distinct values go through the
+    pandas UDF converter, with one null added when the batch has nulls so
+    its dtype is the whole batch's (an integer column with nulls arrives
+    as float64), and NaN skips ``fn`` too. The results go back to Arrow
+    through the same converter, under the session's time zone and Arrow
+    safety settings read when the mapper is compiled. Nested values
+    (arrays, maps), which Arrow cannot hash, are mapped row by row.
 
     ``return_type`` must be declared (Spark needs a schema); default
     ``string`` matches the stringly-typed harmonization domain.
@@ -112,8 +134,12 @@ class FunctionValueMapper(ValueMapper):
         self.function = function
         self.return_type = return_type
 
-    def expr(self, source_column: str) -> Column:
-        from pyspark.sql.functions import arrow_udf
+    def _distinct_map(self) -> Tuple[DataType, pa.DataType, Callable[[pa.Array], pa.Array]]:
+        """``(spark_type, arrow_type, map_distinct)``: ``map_distinct``
+        maps an Arrow array of values through ``fn`` element-wise, via the
+        pandas UDF converter (``Series.map``, ``na_action="ignore"``), to
+        an array of ``arrow_type``. Built on the driver from the active
+        session's conf; the UDF and the driver dictionary both call it."""
         from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
         from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import _parse_datatype_string
@@ -131,33 +157,61 @@ class FunctionValueMapper(ValueMapper):
             == "true",
         )
 
+        def map_distinct(distinct: pa.Array) -> pa.Array:
+            mapped = converter.arrow_to_pandas(distinct, 0).map(fn, na_action="ignore")
+            return converter._create_array(mapped, arrow_type, spark_type, arrow_cast=True)
+
+        return spark_type, arrow_type, map_distinct
+
+    def expr(self, source_column: str) -> Column:
+        from pyspark.sql.functions import arrow_udf
+
+        spark_type, arrow_type, map_distinct = self._distinct_map()
+
         def _apply(values: pa.Array) -> pa.Array:
             import pyarrow.compute as pc
 
             if pa.types.is_nested(values.type):
                 # arrays and maps have no hash kernel: each row is its own value
-                distinct, indices = values, None
-            else:
-                encoded = pc.dictionary_encode(values)
-                distinct, indices = encoded.dictionary, encoded.indices
-                if not len(distinct):
-                    return pa.nulls(len(values), arrow_type)
-                if values.null_count:
-                    distinct = pa.concat_arrays([distinct, pa.nulls(1, distinct.type)])
-            mapped = converter.arrow_to_pandas(distinct, 0).map(fn, na_action="ignore")
-            out = converter._create_array(mapped, arrow_type, spark_type, arrow_cast=True)
-            return out if indices is None else out.take(indices)
+                return map_distinct(values)
+            encoded = pc.dictionary_encode(values)
+            distinct, indices = encoded.dictionary, encoded.indices
+            if not len(distinct):
+                return pa.nulls(len(values), arrow_type)
+            if values.null_count:
+                distinct = pa.concat_arrays([distinct, pa.nulls(1, distinct.type)])
+            return map_distinct(distinct).take(indices)
 
         return arrow_udf(_apply, spark_type)(F.col(source_column))
+
+    def as_dictionary(self, df: DataFrame, source_column: str) -> Optional[DictionaryMapper]:
+        """The :class:`DictionaryMapper` from each distinct non-null value
+        of ``df``'s string ``source_column`` to ``fn``'s result, or None
+        where the mapper stays :meth:`expr`: a stream, a non-string
+        source, a nested or ``timestamp_ntz`` return type, or more than
+        ``planning.LOCAL_DOMAIN_LIMIT`` distinct values. A string source
+        makes the dictionary's key rule exact equality."""
+        if df.isStreaming or not isinstance(df.schema[source_column].dataType, StringType):
+            return None
+        spark_type, arrow_type, map_distinct = self._distinct_map()
+        if pa.types.is_nested(arrow_type) or isinstance(spark_type, TimestampNTZType):
+            return None
+        rows = bounded_long_rows(df, [source_column], planning.LOCAL_DOMAIN_LIMIT)
+        if rows is None:
+            return None
+        values = [v for _, v in rows]
+        mapped = map_distinct(pa.array(values, pa.string())).to_pylist()
+        return DictionaryMapper(dict(zip(values, mapped)))
 
 
 class ExpressionValueMapper(ValueMapper):
     """Apply a SQL expression string to the source column — the
     Spark-first fast path for computed mappings.
 
-    Where :class:`FunctionValueMapper` crosses the Python/Arrow boundary
-    per batch, an expression mapper stays entirely in JVM whole-stage
-    codegen (engine extension; the reference only offers Python callables,
+    Where :class:`FunctionValueMapper` runs Python (on the driver per
+    distinct value, or across the Arrow boundary per batch), an
+    expression mapper stays entirely in JVM whole-stage codegen (engine
+    extension; the reference only offers Python callables,
     ``bdikit/mapping_functions.py:34-48``). The source column is
     referenced as ``{col}``, e.g.::
 

@@ -3,16 +3,25 @@
 The reference's closest thing to a logical plan is the normalized mapping
 spec list ``List[ColumnMappingSpec]`` (``bdikit/api.py:555-558``). Here the
 plan compiles to a single Spark projection (plus broadcast joins for large
-dictionaries) — plan construction touches no data, and execution is one
-narrow, shuffle-free ``select`` that streams at any scale.
+dictionaries), and execution is one narrow, shuffle-free ``select`` that
+streams at any scale.
 
-Per row, that projection does JVM or Arrow C++ work only. A dictionary
+Plan construction reads data in one case only: a ``FunctionValueMapper``
+on a batch string column costs one bounded read of that column's
+distinct values (at most ``planning.LOCAL_DOMAIN_LIMIT + 1`` rows), which
+recomputes the input's lineage for that one column. When the domain
+fits, the Python function runs on the driver once per value, errors
+from it surface at ``materialize_mapping``, and the mapper compiles as
+the equivalent ``DictionaryMapper`` cast to its return type, so the
+rows never cross into a Python worker. Streams, other source types and
+larger domains keep the scalar Arrow UDF, which calls the function once
+per distinct value of each Arrow batch.
+
+Per row, the projection does JVM or Arrow C++ work only. A dictionary
 matches a row to key ``k`` iff ``cast(value as string) == str(k)`` in
 both of its kernels (keys deduplicated by ``str(k)``, the later entry
 winning); the broadcast join probes an integral column on a ``bigint``
-key and any other column on the key string. A ``FunctionValueMapper`` is
-a scalar Arrow UDF that calls the Python function once per distinct
-value of each Arrow batch, not once per row.
+key and any other column on the key string.
 
 Semantics mirrored from the reference:
 - ``create_mapper`` polymorphic dispatch           ``bdikit/api.py:740-831``
@@ -240,8 +249,17 @@ def materialize_mapping(
 
     Compiles the whole plan into one projection: each spec entry becomes
     ``mapper_expr(source).alias(target)``. Large-dictionary mappers are
-    rewritten to broadcast LEFT joins first. No shuffle, no driver data
-    movement — this is the operator that must stream at 100 TB.
+    rewritten to broadcast LEFT joins first. No shuffle — this is the
+    operator that must stream at 100 TB.
+
+    A ``FunctionValueMapper`` on a batch string column first reads the
+    column's distinct values with one bounded read (recomputing
+    ``input_table``'s lineage for that column); within
+    ``planning.LOCAL_DOMAIN_LIMIT`` values its function runs here, once
+    per value, so its errors raise here, and it compiles as a
+    ``DictionaryMapper`` cast to its ``return_type``
+    (:meth:`FunctionValueMapper.as_dictionary`). Streams, other source
+    types and larger domains keep its per-batch Arrow UDF.
 
     Reference: ``bdikit/api.py:698-737`` (eager column loop there; a single
     ``select`` here).
@@ -260,10 +278,18 @@ def materialize_mapping(
     for i, entry in enumerate(plan):
         mapper: ValueMapper = entry["mapper"]  # type: ignore[assignment]
         src, tgt = entry["source"], entry["target"]
+        cast_to = None
+        if isinstance(mapper, FunctionValueMapper):
+            dictionary = mapper.as_dictionary(input_table, src)
+            if dictionary is not None:
+                mapper, cast_to = dictionary, mapper.return_type
         if isinstance(mapper, DictionaryMapper) and mapper.is_large():
             tmp = f"__materialize_{i}"
             df = mapper.as_join(df, src, tmp)
-            select_exprs.append(F.col(tmp).alias(tgt))
+            column = F.col(tmp)
         else:
-            select_exprs.append(mapper.expr(src).alias(tgt))
+            column = mapper.expr(src)
+        if cast_to is not None:
+            column = column.cast(cast_to)
+        select_exprs.append(column.alias(tgt))
     return df.select(*select_exprs)

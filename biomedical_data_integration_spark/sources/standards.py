@@ -392,6 +392,15 @@ def long_form(
     )
 
 
+def bounded_long_rows(table: DataFrame, cols: List[str], limit: int) -> Optional[list]:
+    """The distinct ``(column_name, value)`` rows of ``table``'s
+    :func:`long_form` over ``cols``, or None when there are more than
+    ``limit``. One bounded read of at most ``limit + 1`` rows, not
+    persisted: it recomputes ``table``'s lineage for ``cols``."""
+    rows = long_form(table, cols).distinct().limit(limit + 1).collect()
+    return None if len(rows) > limit else rows
+
+
 # Path of the bundled GDC vocabulary: the public NCI Genomic Data Commons
 # data dictionary (U.S. government public-domain data), flattened to the
 # GDC-format shape consumed by ``JsonStandard`` (same format the reference

@@ -2,6 +2,7 @@
 ``tests/test_mapping_functions.py`` coverage, SURVEY §2.2)."""
 
 import datetime
+import decimal
 import warnings
 
 import pytest
@@ -262,6 +263,144 @@ def test_function_mapper_matches_series_map(spark, rows, ddl, fn, return_type):
     assert len(got) == len(rows)
     for r in got:
         assert repr(r["new"]) == repr(r["ref"]), (r["id"], r["new"], r["ref"])
+
+
+def _materialized(df, mapper, column="x"):
+    """``mapper`` over ``column`` through ``materialize_mapping``, with
+    the executed plan's string."""
+    out = materialize_mapping(df, [
+        {"source": "id", "target": "id"},
+        {"source": column, "target": "new", "mapper": mapper},
+    ])
+    return out, out._jdf.queryExecution().executedPlan().toString()
+
+
+_STRINGS = ["ab", None, "cde", "ab", "", " a ", "é", "日本", None, "x"]
+
+
+@pytest.mark.parametrize(
+    "fn, return_type",
+    [
+        (lambda v: v.upper(), "string"),
+        (lambda v: None if v in ("", "x") else v.strip(), "string"),
+        (len, "bigint"),
+        (lambda v: len(v) / 4, "double"),
+        (lambda v: None if v == "ab" else len(v) / 3, "double"),
+        (lambda v: len(v) % 2 == 0, "boolean"),
+        (lambda v: datetime.date(2024, 2, 1 + len(v)), "date"),
+        (lambda v: datetime.datetime(2024, 2, 29, len(v), 30), "timestamp"),
+        (lambda v: decimal.Decimal(len(v)) / 4, "decimal(10,2)"),
+        (lambda v: None if v.isascii() else decimal.Decimal("1.5"), "decimal(10,2)"),
+    ],
+)
+def test_materialize_function_mapper_on_driver_matches_series_map(
+    spark, fn, return_type
+):
+    """A batch string column with a driver-sized domain is mapped on the
+    driver and compiles to a dictionary: no Arrow UDF in the plan, and
+    the rows ``Series.map`` over every row gives, for ``None`` results,
+    empty, padded and non-ASCII values too."""
+    df = spark.createDataFrame(list(enumerate(_STRINGS)), "id int, x string")
+    out, plan = _materialized(df, FunctionValueMapper(fn, return_type))
+    assert "ArrowEvalPython" not in plan
+    ref = df.select("id", _series_map_reference(fn, return_type)(F.col("x")))
+    assert out.schema["new"].dataType == ref.schema[1].dataType
+    got = dict(out.collect())
+    assert {i: repr(v) for i, v in got.items()} == {i: repr(v) for i, v in ref.collect()}
+
+
+@pytest.mark.parametrize("rows", [[(0, None), (1, None)], []])
+def test_materialize_function_mapper_all_null_or_empty(spark, rows):
+    """An all-null column and an empty table have an empty domain: every
+    row maps to a typed null, and ``fn`` is never called."""
+    def fail(v):
+        raise AssertionError(f"called with {v!r}")
+
+    df = spark.createDataFrame(rows, "id int, x string")
+    out, plan = _materialized(df, FunctionValueMapper(fail, "double"))
+    assert "ArrowEvalPython" not in plan
+    assert out.schema["new"].dataType.simpleString() == "double"
+    assert sorted(out.collect()) == [(i, None) for i, _ in rows]
+
+
+def test_materialize_function_mapper_large_domain_takes_join(spark):
+    """A domain above LITERAL_DICT_LIMIT maps through the dictionary's
+    broadcast join, still without a Python worker."""
+    from biomedical_data_integration_spark import planning
+
+    values = [f"v{i % 250}" if i % 7 else None for i in range(600)]
+    df = spark.createDataFrame(list(enumerate(values)), "id int, x string")
+    assert 250 > planning.LITERAL_DICT_LIMIT
+    out, plan = _materialized(df, FunctionValueMapper(lambda v: v[::-1], "string"))
+    assert "ArrowEvalPython" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert dict(out.collect()) == {
+        i: None if v is None else v[::-1] for i, v in enumerate(values)
+    }
+
+
+def test_materialize_function_mapper_domain_limit_boundary(spark, monkeypatch):
+    """At LOCAL_DOMAIN_LIMIT distinct values the mapper runs on the
+    driver; one more and it stays the Arrow UDF. Both give the same rows."""
+    from biomedical_data_integration_spark import planning
+
+    values = ["a", "b", None, "c", "a", "d"]  # 4 distinct non-null
+    df = spark.createDataFrame(list(enumerate(values)), "id int, x string")
+    got = {}
+    for limit, arrow in ((4, False), (3, True)):
+        monkeypatch.setattr(planning, "LOCAL_DOMAIN_LIMIT", limit)
+        out, plan = _materialized(df, FunctionValueMapper(lambda v: v * 2))
+        assert ("ArrowEvalPython" in plan) == arrow, limit
+        got[limit] = sorted(out.collect())
+    assert got[4] == got[3] == sorted(
+        (i, None if v is None else v * 2) for i, v in enumerate(values)
+    )
+
+
+def test_materialize_function_mapper_calls_once_per_distinct_value(spark):
+    """On the driver path ``fn`` runs in this process, exactly once per
+    distinct non-null value, and never sees a null."""
+    calls = []
+
+    def record(v):
+        calls.append(v)
+        return v.upper()
+
+    values = ["a", "b", None, "a", "c", "b", None, "a"] * 4
+    df = spark.createDataFrame(list(enumerate(values)), "id int, x string")
+    _materialized(df, FunctionValueMapper(record))
+    assert sorted(calls) == ["a", "b", "c"]
+
+
+def test_materialize_function_mapper_error_surfaces_at_materialize(spark):
+    def boom(v):
+        raise RuntimeError(f"bad value {v}")
+
+    df = spark.createDataFrame([(0, "a")], "id int, x string")
+    with pytest.raises(RuntimeError, match="bad value a"):
+        materialize_mapping(df, [
+            {"source": "x", "target": "y", "mapper": FunctionValueMapper(boom)}
+        ])
+
+
+@pytest.mark.parametrize(
+    "ddl, rows, fn, return_type",
+    [
+        ("bigint", [3, None, 3], lambda v: v * 2, "double"),
+        ("string", ["ab", None, "ab"], list, "array<string>"),
+        ("string", ["ab", None], lambda v: datetime.datetime(2024, 1, len(v)),
+         "timestamp_ntz"),
+    ],
+)
+def test_materialize_function_mapper_keeps_udf(spark, ddl, rows, fn, return_type):
+    """A non-string source, and return types whose Python values do not
+    round-trip through a literal, keep the Arrow UDF (streams keep it
+    too: test_streaming_materialize_function_mapper_and_typed_join)."""
+    df = spark.createDataFrame(list(enumerate(rows)), f"id int, x {ddl}")
+    out, plan = _materialized(df, FunctionValueMapper(fn, return_type))
+    assert "ArrowEvalPython" in plan
+    ref = dict(df.select("id", _series_map_reference(fn, return_type)(F.col("x"))).collect())
+    assert {i: repr(v) for i, v in out.collect()} == {i: repr(v) for i, v in ref.items()}
 
 
 def test_function_mapper_all_null_batch_is_null(spark):
