@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import config as _cfg
+from biomedical_data_integration_spark.session import pin
 
 # serializes the train-once _ensure gates: the oracle replica runs the
 # registry 8-wide in one process, and two probe faces sharing a serve
@@ -2814,11 +2815,10 @@ def _q_data_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin the 200-row gate (rfm-hoist pattern): THREE consumers follow
     # (survivor semi-join, coverage pin, final annotate join) and each
     # would otherwise replay the two-scan DSIR lineage
-    gate = (
+    gate = pin(
         w.orderBy(F.desc("avg_log_ratio"), F.asc("doc_id"))
         .limit(DSEL_TOP_N)
         .select("doc_id", "avg_log_ratio")
-        .localCheckpoint(eager=True)
     )
     survivors = docs.join(F.broadcast(gate.select("doc_id")), "doc_id", "leftsemi")
     cov = max_coverage_select(survivors, k=DSEL_K, ngram_n=DSEL_NGRAM)
@@ -4939,9 +4939,7 @@ def _q_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # doc-count x 2 cols; TWO consumers below (gate join + final
     # annotate) — pin so the feature scan + sigmoid run once
-    scored = score_quality_classifier(docs, model).localCheckpoint(
-        eager=True
-    )
+    scored = pin(score_quality_classifier(docs, model))
     kept = scored.where(F.col("score_micro") >= 500_000)
     survivors = docs.join(kept.select("doc_id"), "doc_id")
     spans = remove_duplicate_spans_chars(
@@ -5099,7 +5097,7 @@ def _q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _tables(spark, sf_dir, "documents")
-    wc = word_counts(docs).localCheckpoint(eager=True)
+    wc = pin(word_counts(docs))
     usage = train_unigram(
         wc, vocab_size=UNIGRAM_VOCAB, iters=UNIGRAM_ITERS,
         candidate_pool=UNIGRAM_POOL, max_piece_len=UNIGRAM_PIECE_LEN,
@@ -7220,7 +7218,7 @@ def _q_bfs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS distances (operators/graph.py bfs_distances) over
     the token-adjacency graph: min hops from the seed token within 2.
     Per hop ONE frontier-edge equi-join; frontier/visited tables
-    localCheckpoint-pinned (the pagerank discipline)."""
+    pinned (the pagerank discipline)."""
     from biomedical_data_integration_spark.operators.graph import (
         bfs_distances,
         token_adjacency_edges,
@@ -13357,11 +13355,10 @@ def _q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 11.7 s for the composed rep stage vs 0.8 s over a
     # pinned input, round-12 optimization; guide §3.3 "materialise an
     # intermediate to truncate the plan")
-    g = (
+    g = pin(
         gopher_rules(c4, min_words=CURATION_V3_MIN_WORDS)
         .where("flag_word_count AND flag_mean_word_len AND flag_alpha_words")
         .select("doc_id", "text", "lang", "source", "n_chars")
-        .localCheckpoint(eager=True)
     )
     rep_keep = (
         gopher_repetition(g, top_ngrams=(2,), dup_ngrams=(5,))
@@ -13372,9 +13369,7 @@ def _q_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang join) — pin the survivor table so the repetition gate runs
     # once, not once per consumer (the curation_v4 `scored` discipline;
     # retimed 14.5 s -> see PERF_NOTES)
-    kept = g.join(rep_keep, "doc_id", "leftsemi").localCheckpoint(
-        eager=True
-    )
+    kept = pin(g.join(rep_keep, "doc_id", "leftsemi"))
     spans = remove_duplicate_spans(kept, shingle_words=SPAN_SHINGLE_WORDS)
     alloc = unimax_allocation(
         kept, total_budget=CURATION_V3_BUDGET, max_epochs=CURATION_V3_EPOCHS

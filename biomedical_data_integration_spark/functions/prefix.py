@@ -39,6 +39,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import pin
+
 # ~2x local core count: enough buckets that the per-bucket sorts spread
 # over every core even with approxQuantile imbalance, few enough that
 # the bucket fold (O(buckets) per row, interpreted HOF) stays trivial.
@@ -102,18 +104,18 @@ def exclusive_prefix_sums(
             # kernels then read the pinned copy. Counting the raw
             # frame first would replay the lineage a second time in
             # whichever kernel follows.
-            df = df.localCheckpoint(eager=True)
+            df = pin(df)
             pinned = True
             n = df.count()
         kernel = planning.rank_cumsum_kernel(n)
     if kernel != "window" and not pinned:
         # the bucketed shape reads df 3x (boundary collect, intra
         # windows, totals branch) — pin the collapsed table ONCE,
-        # the repo's localCheckpoint discipline (set_similarity,
+        # the repo's pin discipline (set_similarity,
         # kmeans_two_level). The window kernel reads df exactly once,
         # so with an ``n_rows`` hint (or an explicit kernel) the
         # small-table fast path stays zero extra jobs.
-        df = df.localCheckpoint(eager=True)
+        df = pin(df)
     if kernel == "window":
         w = Window.orderBy(order_col).rowsBetween(
             Window.unboundedPreceding, -1
@@ -244,7 +246,7 @@ def global_ntile(
     ``F.ntile`` window (one exchange; bit-equal, tested), unbounded
     ones the prefix-sum decomposition above (row table pinned once:
     it feeds the distinct-key collapse, the tie window, and the
-    offsets join — the localCheckpoint discipline). A caller-supplied
+    offsets join — the pin discipline). A caller-supplied
     ``n_rows`` hint (any upper bound on the row count) skips the
     routing count job entirely — the rfm hoist pattern, generalized.
     """
@@ -260,7 +262,7 @@ def global_ntile(
             # pin before the routing count (same reasoning as
             # exclusive_prefix_sums): the count's lineage execution
             # becomes the ONLY one; both kernels read the pinned copy
-            df = df.localCheckpoint(eager=True)
+            df = pin(df)
             pinned = True
             nr = df.count()
         kernel = planning.rank_cumsum_kernel(nr)
@@ -287,7 +289,7 @@ def global_ntile(
     if not pinned:
         # already-pinned inputs (routing-count path) skip the second
         # materialization: __gk is a cheap projection over pinned rows
-        staged = staged.localCheckpoint(eager=True)
+        staged = pin(staged)
     per = staged.groupBy("__gk").agg(
         F.count(F.lit(1)).cast("bigint").alias("__t")
     )

@@ -31,7 +31,7 @@ from biomedical_data_integration_spark.functions.strings import (
     char_ngrams,
     clean_string,
 )
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 from biomedical_data_integration_spark.sources.standards import long_form
 
 _HEX = "0123456789abcdef"
@@ -396,12 +396,12 @@ class HashingColumnEmbedder(ColumnEmbedder):
             "__rh",
             F.md5(F.concat_ws("\x1f", *[F.coalesce(F.col(c), F.lit("\x00")) for c in cols])),
         )
-        # feeds idf, the row scoring, and the final value pick — EAGER pin
-        # so the unpivot scan runs once (racing AQE stages over a lazy
-        # persist each recompute it, round-13 lesson)
-        long_rows = rows.unpivot(["__rh"], cols, "column_name", "value").where(
-            F.col("value").isNotNull()
-        ).localCheckpoint(eager=True)
+        # read by idf, the row scoring, and the final value pick
+        long_rows = pin(
+            rows.unpivot(["__rh"], cols, "column_name", "value").where(
+                F.col("value").isNotNull()
+            )
+        )
         idf = self._token_idf(long_rows.select("column_name", "value"))
         row_scores = (
             long_rows.select(
@@ -444,10 +444,8 @@ class HashingColumnEmbedder(ColumnEmbedder):
         that ranking. The topic column pairs with itself, mirroring the
         reference's currIdx == topic case."""
         topic = cols[0]
-        # feeds topic counts, value counts, and the PMI join — EAGER pin
-        # so the scan + pair aggregation runs once (racing AQE stages
-        # over a lazy persist each recompute it, round-13 lesson)
-        pairs = (
+        # read by the topic counts, the value counts and the PMI join
+        pairs = pin(
             df.select([F.col(c).cast("string").alias(c) for c in cols])
             .withColumn("__t", F.col(topic))
             .where(F.col("__t").isNotNull())
@@ -455,7 +453,7 @@ class HashingColumnEmbedder(ColumnEmbedder):
             .where(F.col("value").isNotNull())
             .groupBy("__t", "column_name", "value")
             .agg(F.count("*").alias("__np"))
-        ).localCheckpoint(eager=True)
+        )
         tcounts = (
             pairs.where(F.col("column_name") == topic)
             .groupBy("__t")

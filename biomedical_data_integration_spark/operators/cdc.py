@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biomedical_data_integration_spark.session import pin
+
 __all__ = ["upsert_snapshot", "scd2_history", "table_diff"]
 
 
@@ -151,9 +153,9 @@ def table_diff(
     semi-joined down to the changed keys before the per-column
     comparison, so the wide data shuffled is changed-rows-sized — in
     the usual reconciliation where changes are a sliver of the table,
-    that's ~free. The phase-1 table is pinned with ``localCheckpoint``
-    (it anchors both the changed-key filter and the final left join;
-    left lazy, the narrow join would replay per reference). Output is
+    that's ~free. The phase-1 table is pinned: it anchors both the
+    changed-key filter and the final left join, and left lazy, the
+    narrow join would replay per reference. Output is
     key-count-sized; filter ``change_type != 'unchanged'`` for the
     usual delta report.
     """
@@ -187,14 +189,13 @@ def table_diff(
         .when(F.col("__fp_o") == F.col("__fp_n"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    base = (
+    base = pin(
         narrow(old, "o")
         .join(narrow(new, "n"), list(key_cols), "full_outer")
         .select(
             *[F.col(c) for c in key_cols],
             change_type.alias("change_type"),
         )
-        .localCheckpoint(eager=False)
     )
 
     changed_keys = base.where(F.col("change_type") == "changed").select(

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.vectors import dot, norm
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin, unpin
 
 
 def _with_assignment(
@@ -200,16 +200,15 @@ def _parallel_seeds(
     # measures distances ONLY against that round's NEW candidates and
     # keeps the running min — total distance work O(rounds·ℓ·dim·n),
     # not O(rounds²·ℓ·dim·n) from re-assigning against every candidate
-    # so far. Pinned per round (the kmeans_two_level lazy-plan
-    # discipline).
-    costed = (
+    # so far. Pinned per round; each round releases the table it
+    # replaces, and the last one is released after the rounds.
+    costed = pin(
         _with_assignment(pool, vec_col, list(cands.values()), scale)
         .select(
             F.col(id_col),
             F.col(vec_col),
             F.col("__a")["dist2"].alias("__cost"),
         )
-        .localCheckpoint(eager=True)
     )
     for r in range(rounds):
         phi = costed.agg(F.sum("__cost")).collect()[0][0]
@@ -253,7 +252,7 @@ def _parallel_seeds(
         if not new_vecs:
             continue
         if r < rounds - 1:  # last round's cost table is never read
-            costed = (
+            nxt = pin(
                 _with_assignment(costed, vec_col, new_vecs, scale)
                 .select(
                     F.col(id_col),
@@ -262,8 +261,10 @@ def _parallel_seeds(
                         F.col("__cost"), F.col("__a")["dist2"]
                     ).alias("__cost"),
                 )
-                .localCheckpoint(eager=True)
             )
+            unpin(costed)
+            costed = nxt
+    unpin(costed)
     if len(cands) < k:
         # tiny-input top-up: lowest-id vectors not yet candidates —
         # drawn from POOL (dimension-filtered), never raw head rows, so
@@ -356,7 +357,7 @@ def kmeans(
     # whole fit at sf0.1. At cluster scale this is the standard
     # iterative-algorithm trade: one (id, vec) materialization to local
     # executor storage against max_iter+2 source scans
-    df = df.select(F.col(id_col), F.col(vec_col)).localCheckpoint(eager=True)
+    df = pin(df.select(F.col(id_col), F.col(vec_col)))
     if init == "auto":
         # quality seeding routed by k (planning.seeding_kernel):
         # farthest-point while the k-1 driver round-trips stay cheap,
@@ -489,11 +490,11 @@ def kmeans_two_level(
     (coarse, sub, vec) DataFrame — seeds are the k2 lowest-id vectors
     per coarse cluster (one window), each iteration is one
     coarse-keyed broadcast join + argmin fold + one (coarse, sub,
-    dim)-keyed combinable groupBy, and the table is
-    localCheckpoint-pinned per iteration so plans don't replay
-    (lazy-plan discipline). Only the k1 phase-1 centroids are
-    driver-held (via :func:`kmeans`). Empty sub-clusters keep their
-    previous centroid (LEFT-join coalesce, the phase-1 contract).
+    dim)-keyed combinable groupBy, and the table is pinned per
+    iteration so plans don't replay, releasing the pin it replaces.
+    Only the k1 phase-1 centroids are driver-held (via :func:`kmeans`).
+    Empty sub-clusters keep their previous centroid (LEFT-join coalesce,
+    the phase-1 contract).
 
     Determinism: same rounded-distance/lowest-id-tiebreak contract as
     :func:`kmeans` at both levels — bit-reproducible, SQL-replayable
@@ -513,13 +514,13 @@ def kmeans_two_level(
         df, vec_col, id_col, k=k1, max_iter=max_iter, scale=scale,
         init=coarse_init,
     )
-    base = (
+    base = pin(
         df.select(F.col(id_col), F.col(vec_col))
         .join(coarse.select(id_col, F.col("cluster").alias("coarse")), id_col)
-        .localCheckpoint(eager=True)
     )
+    unpin(coarse)  # the phase-1 fit's working set
     w = Window.partitionBy("coarse").orderBy(id_col)
-    cents = (
+    cents = pin(
         base.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k2)
         .select(
@@ -527,7 +528,6 @@ def kmeans_two_level(
             (F.col("__rn") - 1).cast("int").alias("sub"),
             F.col(vec_col).cast("array<double>").alias("__cv"),
         )
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         assigned = _two_level_assign(base, cents, vec_col, scale).select(
@@ -553,15 +553,16 @@ def kmeans_two_level(
                 ).alias("__cvn")
             )
         )
-        cents = (
+        nxt = pin(
             cents.join(upd, ["coarse", "sub"], "left")
             .select(
                 "coarse",
                 "sub",
                 F.coalesce(F.col("__cvn"), F.col("__cv")).alias("__cv"),
             )
-            .localCheckpoint(eager=True)
         )
+        unpin(cents)
+        cents = nxt
     return _two_level_assign(base, cents, vec_col, scale).select(
         id_col,
         "coarse",
@@ -644,7 +645,7 @@ def semantic_dedup(
     # sides and the survivor anti-join); left lazy, each reference
     # replays the k-centroid assignment fold over the corpus. Pin the
     # (id, cluster)-sized table once — the pagerank edge-table
-    # localCheckpoint discipline (measured ~25% off the whole operator
+    # pin discipline (measured ~25% off the whole operator
     # at sf0.1)
     assigned = assigned.select(id_col, "cluster")
     # norms fold once per VECTOR here, not once per pair — the O(dim)
@@ -654,11 +655,10 @@ def semantic_dedup(
     # base is referenced THREE times below (both pair-join sides and the
     # survivor anti-join) — pin it once, norms included, instead of
     # replaying the assignment fold + norm fold per reference
-    base = (
+    base = pin(
         df.select(F.col(id_col), F.col(vec_col))
         .join(assigned, id_col)
         .withColumn("__nrm", norm(F.col(vec_col)))
-        .localCheckpoint(eager=True)
     )
     left = base.select(
         F.col(id_col).alias("__i"),
@@ -741,11 +741,10 @@ def semantic_dedup_two_level(
         df, vec_col, id_col, k1=k1, k2=k2, max_iter=max_iter, scale=scale,
         coarse_init=coarse_init,
     )
-    base = (
+    base = pin(
         df.select(F.col(id_col), F.col(vec_col))
         .join(assigned.select(id_col, "coarse", "sub"), id_col)
         .withColumn("__nrm", norm(F.col(vec_col)))
-        .localCheckpoint(eager=True)
     )
     left = base.select(
         F.col(id_col).alias("__i"),

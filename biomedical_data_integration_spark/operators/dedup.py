@@ -30,7 +30,7 @@ from biomedical_data_integration_spark import config, planning
 from biomedical_data_integration_spark.functions.hashing import hex_nibble
 from biomedical_data_integration_spark.functions.strings import word_ngrams
 from biomedical_data_integration_spark.functions.vectors import cosine
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 
 
 def _tokens(text: Column) -> Column:
@@ -124,12 +124,8 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(freq_ok, "shingle")
-    # sh feeds the size aggregation and BOTH sides of the candidate join;
-    # EAGER pin — AQE submits those consumer stages concurrently, and a
-    # lazy persist lets each racing stage recompute the tokenize +
-    # explode + distinct lineage itself (round-13 profile: the dedup
-    # faces' shared-scan jobs ran 4-6x concurrently)
-    sh = sh.localCheckpoint(eager=True)
+    # read by the size aggregation and both sides of the candidate join
+    sh = pin(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
 
     # Size-ratio pregate (lossless): |A∩B| ≤ min ⇒ J ≤ min(n_a,n_b)/max,
@@ -270,7 +266,7 @@ def lsh_tuning_report(
             .select("shingle")
         )
         sh = sh.join(freq_ok, "shingle")
-    sh = sh.localCheckpoint(eager=True)
+    sh = pin(sh)
     sizes = sh.groupBy("id").agg(F.count("*").cast("bigint").alias("n"))
     inter = (
         sh.alias("a")
@@ -398,15 +394,10 @@ def minhash_lsh_join(
     """
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
-    # eager pins (see minhash_lsh_pairs): each side feeds its signature
-    # build, size agg, and a verify-join side — concurrent AQE stages
-    # racing a lazy persist recompute the shingle lineage per consumer
-    sh_n = shingle_sets(
-        new_df, text_col, id_col, shingle_words
-    ).localCheckpoint(eager=True)
-    sh_c = shingle_sets(
-        corpus_df, text_col, id_col, shingle_words
-    ).localCheckpoint(eager=True)
+    # each side is read by its signature build, its size aggregation
+    # and one side of the verify join
+    sh_n = pin(shingle_sets(new_df, text_col, id_col, shingle_words))
+    sh_c = pin(shingle_sets(corpus_df, text_col, id_col, shingle_words))
     n_e = _band_entries(
         _signatures_from_shingles(sh_n, num_perm), num_perm, bands
     ).withColumnRenamed("id", "new_id")
@@ -517,17 +508,10 @@ def minhash_lsh_pairs(
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
 
-    # ONE pinned shingle set feeds the signatures, the size agg, and
-    # both sides of the verify join. EAGER, not a lazy persist: AQE
-    # submits the consumers' independent query stages concurrently, and
-    # stages racing into a not-yet-populated cache each recompute the
-    # tokenize + explode + distinct lineage themselves (measured: six
-    # concurrent ~2 s jobs on dedup_keep_best at sf0.1, round 13) —
-    # materializing once up front turns that into one 2 s job + cached
-    # reads.
-    sh = shingle_sets(df, text_col, id_col, shingle_words).localCheckpoint(
-        eager=True
-    )
+    # read by the signatures, the size aggregation and both sides of
+    # the verify join (six concurrent ~2 s recomputes on dedup_keep_best
+    # at sf0.1 without the pin, round 13)
+    sh = pin(shingle_sets(df, text_col, id_col, shingle_words))
     sig = _signatures_from_shingles(sh, num_perm)
     band_entries = _band_entries(sig, num_perm, bands)
 
@@ -628,11 +612,8 @@ def simhash_pairs(
     """
     if chunks < max_hamming + 1:
         raise ValueError("need chunks >= max_hamming + 1 for exact blocking")
-    # the fingerprint table feeds both sides of the chunk join; eager pin
-    # so the tokenize + tf groupBy + 32-bit vote aggregation runs once
-    # (a lazy persist lets the two join-side stages race and both
-    # recompute it — round-13 profile lesson)
-    fp = simhash(df, text_col, id_col, bits).localCheckpoint(eager=True)
+    # read by both sides of the chunk join
+    fp = pin(simhash(df, text_col, id_col, bits))
     chunk_bits = bits // chunks
 
     entries = fp.select(
@@ -763,7 +744,7 @@ def duplicate_clusters(
     - above it: alternating large-star / small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC'14) —
       O(log^2 n) rounds, each two equi-join shuffles over the edge list
-      only, lineage cut per round with ``localCheckpoint``; a corpus with
+      only, lineage cut per round by a pin; a corpus with
       billions of pairs never touches the driver.
 
     The reference has no graph stage at all (its only dedup is
@@ -778,19 +759,16 @@ def duplicate_clusters(
     id_type = dict(zip(pairs.columns, [f.dataType for f in pairs.schema.fields]))[
         id_a
     ]
-    # eager pin, not a lazy persist: the count-then-collect (or
-    # count-then-iterate) sequence below would otherwise re-analyze the
-    # full upstream pairs lineage once per action (~1.4-1.7 s of driver
-    # planning each on the minhash faces at sf0.1, round 13); pinned,
-    # both actions plan against an ExistingRDD
-    edges = (
+    # read by the count and then the collect (or the rounds): each
+    # action would otherwise re-analyze the full upstream pairs lineage
+    # (~1.4-1.7 s of driver planning each on the minhash faces at sf0.1)
+    edges = pin(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
             F.least(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_edges = edges.count()
 
@@ -843,7 +821,7 @@ def duplicate_clusters(
         # small-star: every node u connects its smaller-or-equal neighbors
         # (and itself) to its minimum neighbor
         dmins = large.groupBy("u").agg(F.min("v").alias("m"))
-        nxt = (
+        nxt = pin(
             large.join(dmins, "u")
             .where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("x"), "m")
@@ -851,7 +829,6 @@ def duplicate_clusters(
             .where(F.col("x") != F.col("m"))
             .distinct()
             .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .localCheckpoint(eager=True)
         )
         # cheap count precheck (both sides are checkpointed) short-circuits
         # the exceptAll in non-final rounds; equal counts + empty one-way
@@ -913,12 +890,8 @@ def cross_corpus_contamination(
             .select("shingle")
         )
         tr = tr.join(freq_ok, "shingle")
-    # eager pin: ev feeds both ev_sizes and the overlap join, and eval
-    # benches are small (MBs) — pinned once instead of racing stages
-    # recomputing the shingle lineage per consumer.
-    ev = shingle_sets(
-        eval_corpus, text_col, id_col, shingle_words
-    ).localCheckpoint(eager=True)
+    # read by ev_sizes and the overlap join; eval benches are small (MBs)
+    ev = pin(shingle_sets(eval_corpus, text_col, id_col, shingle_words))
     ev_sizes = ev.groupBy("id").agg(F.count("*").alias("n_eval"))
     overlap = (
         tr.withColumnRenamed("id", "train_id")

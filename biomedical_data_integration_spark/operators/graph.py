@@ -13,10 +13,9 @@ work, never node² — plus two scalar 1-row aggregates (dangling mass,
 node count) that broadcast. Ranks are per-iteration quantized to a
 fixed decimal scale, which (a) makes results bit-identical across
 engines and partitionings despite float-sum ordering (the same trick the
-k-means oracle uses) and (b) lets the fixpoint be checked exactly. For
-many iterations at cluster scale, ``checkpoint_every`` truncates plan
-growth with localCheckpoint, the same discipline as the distributed
-connected-components rounds (operators/dedup.py).
+k-means oracle uses) and (b) lets the fixpoint be checked exactly.
+Every iteration pins its result (``session.pin``), so plans never grow
+with the iteration count, and releases the pin it replaces.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin, unpin
 from .text import tokens_expr
 
 RANK_SCALE = 10  # per-iteration quantization decimals
@@ -77,7 +77,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    checkpoint_every: int | None = 1,
 ) -> DataFrame:
     """Weighted PageRank with uniform dangling-mass redistribution,
     fixed ``iterations`` (deterministic — no float-tolerance stopping),
@@ -91,8 +90,6 @@ def pagerank(
     function of the edge table — engine- and partitioning-independent.
 
     Returns (node, rank) over all nodes appearing as src or dst.
-    ``checkpoint_every=k`` localCheckpoints the rank table every k
-    iterations to truncate lineage on long runs.
     """
     if iterations < 0:
         raise ValueError("pagerank: iterations must be >= 0")
@@ -104,27 +101,25 @@ def pagerank(
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("double").alias("w"),
     )
-    # The edge/node/transition tables are materialized ONCE
-    # (localCheckpoint): every iteration references them, and without
-    # truncation each reference would replay the upstream lineage —
-    # including the corpus scan an edge builder like
-    # token_adjacency_edges carries — once per iteration.
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    # the edge/node/transition tables are read by every iteration, which
+    # would otherwise replay the upstream lineage (including the corpus
+    # scan an edge builder like token_adjacency_edges carries) each time
+    e = pin(e)
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # transition probabilities, built ONCE: p(src->dst) = w / outw(src)
     outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    trans = e.join(outw, "src").select(
+    trans = pin(e.join(outw, "src").select(
         "src", "dst", (F.col("w") / F.col("outw")).alias("p")
-    ).localCheckpoint(eager=True)
+    ))
     has_out = outw.select(F.col("src").alias("node"), F.lit(1).alias("has_out"))
 
     n_nodes = nodes.count()  # scalar; node table is vocab/domain-sized
     if n_nodes == 0:
+        unpin(e, trans)
         return nodes.withColumn("rank", F.lit(0.0))
     import math
 
@@ -146,7 +141,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("p")).alias("inflow"))
         )
-        ranks = (
+        nxt = pin(
             nodes.join(inflow, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -161,8 +156,12 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+        if it:
+            unpin(ranks)
+        ranks = nxt
+    unpin(e, trans)
+    if iterations:
+        unpin(nodes)
     return ranks
 
 
@@ -189,8 +188,8 @@ def label_propagation(
     engines and the oracle unrolls rounds as CTEs. Per round: one
     edge-sized join (labels onto edge sources) + one (node, label)
     aggregation + one per-node argmax window — edge-table-sized work,
-    never node². Edge/label tables are localCheckpointed like
-    :func:`pagerank` so rounds never replay upstream lineage.
+    never node². Edge/label tables are pinned like :func:`pagerank` so
+    rounds never replay upstream lineage.
     """
     if iterations < 0:
         raise ValueError("label_propagation: iterations must be >= 0")
@@ -208,18 +207,17 @@ def label_propagation(
         # parallel edges merge so each neighbor pair counts once per
         # direction with summed weight
         e = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    e = pin(e)
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     labels = nodes.withColumn("label", F.col("node"))
     w_rank = Window.partitionBy("node").orderBy(
         F.col("total_w").desc(), F.col("label").asc()
     )
-    for _ in range(iterations):
+    for it in range(iterations):
         neigh = (
             e.join(
                 labels.select(F.col("node").alias("src"), "label"), "src"
@@ -232,14 +230,19 @@ def label_propagation(
             .where(F.col("__rn") == 1)
             .select("node", "label")
         )
-        labels = (
+        nxt = pin(
             nodes.join(winners, "node", "left")
             .select(
                 "node",
                 F.coalesce(F.col("label"), F.col("node")).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
+        if it:
+            unpin(labels)
+        labels = nxt
+    unpin(e)
+    if iterations:
+        unpin(nodes)
     return labels
 
 
@@ -293,14 +296,13 @@ def triangle_counts(
     and 0.0 for degree < 2. Nodes with no edges don't appear (no
     neighborhood to measure).
     """
-    e = (
+    e = pin(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # wedges a<b<c from edges (a,b) and (b,c)
     ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
@@ -361,10 +363,11 @@ def bfs_distances(
 
     Per hop: ONE edge-sized equi-join from the current frontier + one
     min-aggregation — never node²; the visited set and frontier are
-    ``localCheckpoint``-pinned each round (the pagerank discipline) so
-    iteration ``k`` never replays rounds ``0..k-1``. Frontier rows are
-    the only state; at 100 TB the join is shuffle-partitioned on the
-    node id and hop ``k`` touches only edges incident to the frontier.
+    pinned each round (the pagerank discipline) so iteration ``k`` never
+    replays rounds ``0..k-1``, and releases the pins it replaces.
+    Frontier rows are the only state; at 100 TB the join is
+    shuffle-partitioned on the node id and hop ``k`` touches only edges
+    incident to the frontier.
     Deterministic: distances are pure integer minima (the oracle
     replays them as a recursive CTE).
     """
@@ -378,27 +381,30 @@ def bfs_distances(
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = e.dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
+    e = pin(e.dropDuplicates(["src", "dst"]))
     src_col = sources.columns[0]
-    visited = (
+    visited = pin(
         sources.select(F.col(src_col).cast("string").alias("node"))
         .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("distance", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = pin(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("distance", F.lit(hop))
         )
-        nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
+            unpin(nxt)
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+        grown = pin(visited.unionByName(nxt))
+        unpin(visited, frontier)  # on the first hop both are the seeds
+        visited, frontier = grown, nxt
+    unpin(e)
+    if frontier is not visited:
+        unpin(frontier)
     return visited.select("node", F.col("distance").cast("int").alias("distance"))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import local_frame, pin
 from .graph import token_adjacency_edges
 
 DEFAULT_DISCOUNT = 0.75
@@ -61,13 +61,9 @@ def train_bigram_lm(
     """
     if not 0.0 < discount < 1.0:
         raise ValueError("train_bigram_lm: discount must be in (0, 1)")
-    # materialize the count table ONCE (it is observed-types-sized):
-    # ctx, cont, the type count, and the probability join all read it,
-    # and without truncation each reference would replay the corpus
-    # scan — the same lineage discipline as pagerank's edge table
-    bg = token_adjacency_edges(df, text_col=text_col).localCheckpoint(
-        eager=True
-    )
+    # the count table (observed-types-sized) is read by ctx, cont, the
+    # type count and the probability join
+    bg = pin(token_adjacency_edges(df, text_col=text_col))
     # context totals and distinct-continuation counts in one pass
     ctx = bg.groupBy(F.col("src").alias("w1")).agg(
         F.sum("weight").alias("ctot"),
@@ -210,9 +206,7 @@ def collocations(
     total joins, one global top-k (TakeOrdered — no full sort). N rides
     the plan as a literal (one scalar job off the counts table).
     """
-    bg = token_adjacency_edges(df, text_col=text_col).localCheckpoint(
-        eager=True
-    )
+    bg = pin(token_adjacency_edges(df, text_col=text_col))
     n_total = bg.agg(F.sum("weight")).collect()[0][0]
     if not n_total:
         return local_frame(

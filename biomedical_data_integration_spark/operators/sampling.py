@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_data_integration_spark.functions.hashing import md5_hex
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 
 _DIGITS = 12  # 16^12 granularity: fraction resolution ~6e-16..2e-13
 
@@ -665,7 +665,7 @@ def max_coverage_select(
 
     Scale shape: the distinct ``(doc, token)`` incidence table builds
     once (per-doc ``array_distinct`` before the explode — no corpus-wide
-    dedup shuffle) and is localCheckpoint-pinned; each greedy step is
+    dedup shuffle) and is pinned; each greedy step is
     ONE anti-join + map-side-combinable count over it, and the argmax
     collects exactly ONE row — k driver round-trips total, the same
     bounded-iteration contract as maxmin seeding (keep k ≲ 20; for
@@ -688,7 +688,7 @@ def max_coverage_select(
     units = tokens_expr(F.col(text_col))
     if ngram_n > 1:
         units = word_ngrams(units, int(ngram_n))
-    toks = (
+    toks = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.explode(F.array_distinct(units)).alias("tok"),
@@ -698,7 +698,6 @@ def max_coverage_select(
         # shingle, and a NULL unit never equi-joins the covered set —
         # every empty doc would greedily rank as "maximally novel"
         .where(F.col("tok").isNotNull() & (F.col("tok") != ""))
-        .localCheckpoint(eager=True)
     )
     selected: list = []
     out_rows = []

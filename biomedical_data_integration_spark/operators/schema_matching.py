@@ -48,7 +48,7 @@ from biomedical_data_integration_spark.operators.value_matching import (
     TfIdfValueMatcher,
     match_values_pipeline,
 )
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 from biomedical_data_integration_spark.sources.standards import Standard, long_form
 
 SCORES_SCHEMA = "source string, target string, similarity double"
@@ -381,18 +381,10 @@ class JaccardSchemaMatcher(BaseSchemaMatcher):
         self.threshold = threshold_levenshtein
 
     def scores(self, source, target, allowed_pairs=None):
-        # each side feeds both the fuzzy join and its own size aggregation;
-        # EAGER pin so the unpivot+distinct scan runs once per side — a
-        # lazy persist lets the join-side and size-agg stages race into a
-        # cold cache and each recompute the scan (round-13 profile: the
-        # Jaccard matcher was 3.8 s warm on the 2-column GDC match, the
-        # composite matcher's dominant cost)
-        s = _unpivot_strings(source, "source", "sval").localCheckpoint(
-            eager=True
-        )
-        t = _unpivot_strings(
-            target, "target", "tval", source.sparkSession
-        ).localCheckpoint(eager=True)
+        # each side is read by the fuzzy join and its own size aggregation
+        # (round 13: 3.8 s warm without the pins on the 2-column GDC match)
+        s = pin(_unpivot_strings(source, "source", "sval"))
+        t = pin(_unpivot_strings(target, "target", "tval", source.sparkSession))
 
         if self.threshold >= 1.0:
             joined = s.join(t, F.col("sval") == F.col("tval"))
@@ -529,15 +521,11 @@ class DistributionBasedSchemaMatcher(BaseSchemaMatcher):
                 )
                 .drop("__ndv")
             )
-        # EAGER pin, not a lazy persist: dd feeds the splits
-        # (percentile_approx), bucket-offset, counts and rank-probe
-        # subtrees, and AQE submits those independent query stages
-        # concurrently — racing into a cold cache, each recomputed the
-        # full unpivot + frequency groupBy itself (measured round 13:
-        # five concurrent ~2.3 s jobs on the exact face, eight ~4.8 s
-        # on the approx face at sf0.1). One eager materialization turns
-        # that into one job + cached reads.
-        dd = dd.localCheckpoint(eager=True)
+        # read by the splits (percentile_approx), bucket-offset, counts
+        # and rank-probe subtrees (round 13 without the pin: five
+        # concurrent ~2.3 s recomputes on the exact face, eight ~4.8 s on
+        # the approx face at sf0.1)
+        dd = pin(dd)
 
         # Two-phase bucketed prefix sum. A plain
         # Window.partitionBy("c").orderBy("v") cumulative sum sorts ALL

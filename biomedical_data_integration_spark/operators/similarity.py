@@ -36,7 +36,7 @@ from typing import Optional
 from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.hashing import hex_nibble
 from biomedical_data_integration_spark.functions.vectors import cosine, dot, norm
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> Optional[int]:
@@ -466,10 +466,9 @@ def set_similarity_join_pairs(
     # single-task sort over the vocabulary table) exists anywhere in
     # the plan. Referenced THREE times below (prefix explode + both
     # verify sides) — left lazy, each reference replays the rank join +
-    # per-set sort over the corpus, so pin it once (the localCheckpoint
-    # discipline; measured 2x on the whole operator at sf0.1). Row
-    # count = input sets, payload = the sorted token arrays.
-    sorted_sets = (
+    # per-set sort over the corpus (pinned: 2x on the whole operator at
+    # sf0.1). Row count = input sets, payload = the sorted token arrays.
+    sorted_sets = pin(
         toks.join(ranks, "tok")
         .groupBy("id")
         .agg(
@@ -482,7 +481,6 @@ def set_similarity_join_pairs(
             F.transform(F.col("__st"), lambda s: s["tok"]).alias("toks"),
             F.size("__st").alias("sz"),
         )
-        .localCheckpoint(eager=True)
     )
     # prefix length |s| - ceil(t*|s|) + 1; ceil via integer arithmetic on
     # micro-scaled t so both engines agree at exact multiples
@@ -564,7 +562,7 @@ def pq_train(
 
     Scale design — all ``m`` subspaces train in ONE Lloyd loop: the
     corpus explodes once to ``(id, s, subvec)`` (same bytes, narrower
-    rows) and is localCheckpoint-pinned; each iteration is ONE
+    rows) and is pinned; each iteration is ONE
     assignment scan (argmin over the m·n_codes literal codebook, rounded
     dist2 + code tiebreak — the clustering kernel discipline) plus ONE
     ``(s, code, pos)``-keyed groupBy (m·n_codes·dim/m keys, map-side
@@ -591,7 +589,7 @@ def pq_train(
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
     dsub = dim // m
 
-    sub = (
+    sub = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.explode(
@@ -610,7 +608,6 @@ def pq_train(
             ).alias("__e"),
         )
         .select("id", F.col("__e.s").alias("s"), F.col("__e.sv").alias("sv"))
-        .localCheckpoint(eager=True)
     )
 
     # lowest-id seeds: the same k lowest-id vectors seed every subspace
@@ -889,9 +886,7 @@ def ivfpq_index(
     # (id, cell, resid) materialization against three full coarse-
     # assignment evaluations and three deep-plan analyses (round-12
     # optimization; the per-action planning gap was the measured cost)
-    resid = _ivfpq_residuals(
-        df, centroids, vec_col, id_col, scale
-    ).localCheckpoint(eager=True)
+    resid = pin(_ivfpq_residuals(df, centroids, vec_col, id_col, scale))
     codebooks = pq_train(
         resid,
         vec_col="__resid",
@@ -1491,7 +1486,7 @@ def mmr_topk(
     # the |Q|×|corpus| scoring plan, and THREE consumers reference it
     # below (vector attach, pairwise self-join, self-row union) — without
     # the pin the dominant cross-join can re-execute per consumer
-    cand = cand.localCheckpoint(eager=True)
+    cand = pin(cand)
 
     cv = corpus.select(
         F.col(corpus_id).alias("id"),
@@ -1626,7 +1621,7 @@ def facility_location_select(
     pool×corpus similarity table builds in ONE broadcast-join scan of
     the corpus, floor-quantizes to exact bigint MICRO-UNITS (the
     dsir/ADC discipline — order-free integer sums, no float-fold drift),
-    and is localCheckpoint-pinned; each greedy step is one join +
+    and is pinned; each greedy step is one join +
     map-side-combinable sum over it collecting exactly ONE row — k
     driver round-trips, the maxmin ≤20 iteration contract.
 
@@ -1659,7 +1654,7 @@ def facility_location_select(
         F.col(vec_col).alias("cv"),
         norm(F.col(vec_col)).alias("cn"),
     )
-    sims = (
+    sims = pin(
         F.broadcast(cand)
         .crossJoin(corpus)
         .select(
@@ -1669,7 +1664,6 @@ def facility_location_select(
             .cast("bigint")
             .alias("sim"),
         )
-        .localCheckpoint(eager=True)
     )
     selected: list = []
     out_rows = []

@@ -19,7 +19,7 @@ from biomedical_data_integration_spark import config
 from biomedical_data_integration_spark.functions.strings import (
     word_ngrams_strict,
 )
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 
 # Tiny high-frequency stopword lists per language. Order matters: argmax
 # ties resolve in this (alphabetical) order for determinism.
@@ -722,11 +722,10 @@ def qclf_training_state(
     compute them once and pass the tuple to both train calls via
     ``state=`` (round-12 optimization). Returns ``(feats, means, n)``.
     """
-    feats = (
+    feats = pin(
         quality_features(df, text_col=text_col)
         .withColumn("__y", label.cast("bigint"))
         .select("__y", *QUALITY_CLF_FEATURES)
-        .localCheckpoint(eager=True)
     )
     mrow = feats.agg(
         F.count(F.lit(1)).alias("__n"),
@@ -997,9 +996,7 @@ def hclf_training_state(
     labeled = df.select(
         F.col(id_col), F.col(text_col), label.cast("bigint").alias("__y")
     )
-    feats_df = _hclf_feature_arrays(
-        labeled, n_buckets, text_col, id_col
-    ).localCheckpoint(eager=True)
+    feats_df = pin(_hclf_feature_arrays(labeled, n_buckets, text_col, id_col))
     # per-bucket curvature bound h_b = sum_d f^2 (micro^2) and the doc
     # count n (every doc has exactly one bias entry at bucket -1) in
     # ONE map-side-combinable aggregation over the pinned features

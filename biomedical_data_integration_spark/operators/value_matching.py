@@ -51,7 +51,7 @@ from biomedical_data_integration_spark.functions.strings import (
     normalize_value,
 )
 from biomedical_data_integration_spark.functions.vectors import cosine
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 from biomedical_data_integration_spark.sources.standards import (
     Standard,
     bounded_long_rows,
@@ -446,11 +446,8 @@ class TfIdfValueMatcher(BaseValueMatcher):
         # sides counts once per side, like fitting on from+to lists)
         s_tf = self._tf_maps(src, "skey").withColumn("side", F.lit("s"))
         t_tf = self._tf_maps(tgt, "tkey").withColumn("side", F.lit("t"))
-        # docs feeds three consumers (doc_freq, the n_docs broadcast, and
-        # the weighted join); EAGER pin so the tf-map build runs once —
-        # the broadcast subtree jobs launch concurrently and a lazy
-        # persist lets each recompute it (round-13 lesson)
-        docs = s_tf.unionByName(t_tf).localCheckpoint(eager=True)
+        # read by doc_freq, the n_docs broadcast and the weighted join
+        docs = pin(s_tf.unionByName(t_tf))
 
         doc_freq = (
             docs.select(*PAIR, F.explode(F.map_keys("tf")).alias("term"))

@@ -96,3 +96,40 @@ def local_frame(
             schema=arrow_schema,
         )
     return spark.createDataFrame(table, schema)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now into executor storage and return a frame
+    that reads the stored rows, with its lineage truncated.
+
+    Every engine-side materialization goes through here. The pin is an
+    eager ``localCheckpoint`` rather than a lazy ``persist()``: AQE
+    submits independent query stages concurrently, and each stage that
+    reads a cold cache recomputes the whole lineage itself (round-13
+    profile: shared scans ran 4-8x concurrently). One eager job turns
+    that into one computation plus cached reads.
+
+    Pin only a frame read across references that ``ReuseExchange`` does
+    not already share: separate actions, loop iterations, or branches
+    whose plans differ above the shared part. Inside one plan, an
+    identical exchange subtree is computed once without a pin.
+    """
+    return df.localCheckpoint(eager=True)
+
+
+def unpin(*dfs: DataFrame) -> None:
+    """Release the pins that ``dfs`` read, without blocking.
+
+    A pin is held until the driver JVM garbage-collects its RDD; neither
+    ``DataFrame.unpersist()`` nor ``spark.catalog.clearCache()`` releases
+    a local checkpoint. This drops the blocks of every ``LogicalRDD``
+    leaf in each frame's plan, so a caller may unpin only frames whose
+    pins nothing it returns still reads: a frame read after its pin is
+    released fails with "Checkpoint block ... not found".
+    """
+    for df in dfs:
+        leaves = df._jdf.logicalPlan().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from biomedical_data_integration_spark.session import local_frame
+from biomedical_data_integration_spark.session import local_frame, pin
 
 
 def tumbling_window_agg(
@@ -3509,7 +3509,7 @@ def rfm_scores(
     # user groupBy instead of replaying it per reference.
     from biomedical_data_integration_spark import planning
 
-    staged = staged.localCheckpoint(eager=True)
+    staged = pin(staged)
     kern = planning.rank_cumsum_kernel(staged.count())
     tiled = global_ntile(
         staged, "recency_days", "user_id", n_tiles, "r_score",

@@ -244,3 +244,85 @@ def test_triangle_counts_golden(spark):
     assert got["a"][0] == 4 and got["a"][1] == 3
     assert got["a"][2] == 0.5          # 2*3 / (4*3)
     assert got["e"] == (1, 0, 0.0)     # pendant: degree<2
+
+
+def _chain_graph(spark):
+    # a 7-node path with a back edge and a branch, so every BFS hop up to
+    # 5 finds a new frontier
+    return _edges(spark, [
+        ("a", "b", 1), ("b", "c", 2), ("c", "d", 1), ("d", "e", 1),
+        ("e", "f", 3), ("f", "g", 1), ("g", "c", 1), ("b", "h", 1),
+    ])
+
+
+def _blobs(spark, centers, per):
+    rows = [
+        (i, [cx + 0.1 * (i % per), cy - 0.1 * (i % per)])
+        for i, (cx, cy) in enumerate(c for c in centers for _ in range(per))
+    ]
+    return spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+
+
+def _kmeans_parallel(spark):
+    from biomedical_data_integration_spark.operators.clustering import kmeans
+
+    df = _blobs(spark, [(0.0, 0.0), (50.0, 50.0), (-50.0, 50.0)], 8)
+    return kmeans(df, k=3, max_iter=1, init="parallel")[0]
+
+
+def _kmeans_two_level(spark):
+    from biomedical_data_integration_spark.operators.clustering import (
+        kmeans_two_level,
+    )
+
+    centers = [(x, y) for x in (0.0, 100.0) for y in (0.0, 10.0)]
+    return kmeans_two_level(_blobs(spark, centers, 4), k1=4, k2=4)
+
+
+def _bfs(spark):
+    from biomedical_data_integration_spark.operators.graph import bfs_distances
+
+    seeds = spark.createDataFrame([("a",)], "node string")
+    return bfs_distances(_chain_graph(spark), seeds, max_hops=5)
+
+
+def _lpa(spark):
+    from biomedical_data_integration_spark.operators.graph import (
+        label_propagation,
+    )
+
+    return label_propagation(_chain_graph(spark), iterations=5)
+
+
+RELEASE_CALLS = {
+    "kmeans_parallel": _kmeans_parallel,
+    "kmeans_two_level": _kmeans_two_level,
+    "bfs_distances": _bfs,
+    "label_propagation": _lpa,
+    "pagerank": lambda spark: pagerank(_chain_graph(spark), iterations=5),
+}
+
+
+def _logical_rdd_ids(df):
+    leaves = df._jdf.logicalPlan().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+
+
+@pytest.mark.parametrize("name", sorted(RELEASE_CALLS))
+def test_iterative_operator_holds_only_the_pins_its_result_reads(spark, name):
+    """An iterative operator releases every pin a newer pin replaced and
+    every pin its result does not read. New persistent RDDs are compared
+    by id: the context cleaner may drop earlier tests' RDDs meanwhile,
+    which can only shrink the set."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = RELEASE_CALLS[name](spark)
+    rows = sorted(map(tuple, out.collect()))
+    held = set(jsc.getPersistentRDDs().keySet()) - before
+    assert held == _logical_rdd_ids(out)
+    # nothing the result reads was released
+    assert sorted(map(tuple, out.collect())) == rows

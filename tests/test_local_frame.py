@@ -99,12 +99,13 @@ def test_local_frame_collect_runs_no_job(spark):
     assert sc.statusTracker().getJobIdsForGroup("local_frame_no_job") == []
 
 
-def _create_dataframe_calls(path):
+def _calls_outside(path, method, owner):
+    """Lines of ``.<method>(`` calls in ``path`` outside function ``owner``."""
     tree = ast.parse(open(path).read(), path)
     allowed = {
         id(n)
         for fn in ast.walk(tree)
-        if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+        if isinstance(fn, ast.FunctionDef) and fn.name == owner
         for n in ast.walk(fn)
     }
     return [
@@ -112,23 +113,42 @@ def _create_dataframe_calls(path):
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "createDataFrame"
+        and node.func.attr == method
         and id(node) not in allowed
     ]
 
 
-def test_no_create_dataframe_outside_local_frame():
-    """Gate: driver-built relations go through ``local_frame`` only."""
+def _package_files():
     import biomedical_data_integration_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    offenders = []
     for dirpath, _, files in os.walk(root):
         for f in files:
             if f.endswith(".py"):
                 path = os.path.join(dirpath, f)
-                offenders += [
-                    f"{os.path.relpath(path, root)}:{ln}"
-                    for ln in _create_dataframe_calls(path)
-                ]
+                yield os.path.relpath(path, root), path
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Gate: driver-built relations go through ``local_frame`` only."""
+    offenders = [
+        f"{rel}:{ln}"
+        for rel, path in _package_files()
+        for ln in _calls_outside(path, "createDataFrame", "local_frame")
+    ]
     assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
+
+
+def test_no_local_checkpoint_outside_pin():
+    """Gate: every eager materialization, in the package and in the
+    registry faces, goes through ``session.pin``."""
+    entry = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
+    offenders = [
+        f"{rel}:{ln}"
+        for rel, path in [*_package_files(), ("__spark_entry__.py", entry)]
+        for ln in _calls_outside(path, "localCheckpoint", "pin")
+    ]
+    assert offenders == [], f"localCheckpoint outside session.pin: {offenders}"
